@@ -677,7 +677,8 @@ def run_wand_crossover(queries: dict, extra: dict) -> None:
 
     from searchengine_spark.indexing.build import SparkIndex
     from searchengine_spark.indexing.segments import build_segments, decode_postings
-    from searchengine_spark.queries.wand import bm25_wdt_expr, wand_topk
+    from searchengine_spark.queries.ranked import bm25_wdt_expr
+    from searchengine_spark.queries.wand import wand_topk
     from searchengine_spark.session import get_spark
 
     spark = get_spark("bench-crossover", cores=CPUS)

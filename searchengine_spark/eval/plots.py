@@ -46,17 +46,6 @@ except ImportError:  # pragma: no cover
     _FigureCanvasAgg = None
 
 
-def strategy_pr_curves(
-    ranked: Mapping[str, Sequence[int]], relevant: set[int]
-) -> dict[str, list[tuple[float, float]]]:
-    """{strategy: [(recall, precision)] per rank} for already-ranked
-    result id lists (ids in the same namespace as ``relevant`` — for
-    Cranfield, int file stems)."""
-    return {
-        s: precision_recall_curve(ids, relevant) for s, ids in ranked.items()
-    }
-
-
 def pr_curves_for_query(
     index,
     query: str,
@@ -69,7 +58,8 @@ def pr_curves_for_query(
     """Run the four ranked strategies for one query and return their
     precision-recall curves. ``doc_to_file`` maps engine doc_ids to the
     qrel id namespace (Cranfield judges file stems, not corpus order);
-    None means doc_ids are already qrel ids."""
+    None means doc_ids are already qrel ids. A ranked doc_id missing
+    from ``doc_to_file`` raises ``ValueError`` naming it."""
     from ..queries.ranked import rank_topk
 
     out: dict[str, list[tuple[float, float]]] = {}
@@ -80,6 +70,9 @@ def pr_curves_for_query(
             .select("doc_id").collect()
         ]
         if doc_to_file is not None:
+            for d in ids:
+                if d not in doc_to_file:
+                    raise ValueError(f"doc_id {d} is not in doc_to_file")
             ids = [doc_to_file[d] for d in ids]
         out[s] = precision_recall_curve(ids, relevant)
     return out

@@ -14,10 +14,10 @@ failure mode that paper exists to correct:
     wdl(d)    = Σ_f  w_f · len_{d,f}
     score(d)  = Σ_t  wqt(t) · 2.2·wtf / (1.2·(0.25 + 0.75·wdl/avg_wdl) + wtf)
 
-with the reference's own BM25 constants and idf floor
-(wqt = max(0.1, ln((N−dft+0.5)/(dft+0.5))), ranked_strategy.py BM25 —
-so single-field weight-1 BM25F degenerates to the reference scorer
-exactly).
+scored by the shared ranked scorer (queries/ranked.score) with the
+reference's own BM25 constants and idf floor (wqt = max(0.1,
+ln((N−dft+0.5)/(dft+0.5))), ranked_strategy.py BM25 — so single-field
+weight-1 BM25F degenerates to the reference scorer exactly).
 
 Build shape (scale notes): ONE pass over the corpus — each field's
 token array becomes (term, w_f) structs, concatenated and exploded
@@ -37,12 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..indexing.simple import token_array
-
-# the reference's BM25 constants (ranked_strategy.py): k1=1.2, b=0.75,
-# (k1+1)=2.2 numerator, wqt floored at 0.1
-K1 = 1.2
-B = 0.75
-IDF_FLOOR = 0.1
+from ..queries.ranked import empty_topk, query_rank_terms, score, top_k
 
 
 @dataclass
@@ -119,37 +114,13 @@ def rank_topk_fielded(
     k: int = 10,
     normalize=None,
 ) -> DataFrame:
-    """(doc_id, score) — BM25F top-k, ties doc_id desc. Same plan shape
-    as queries/ranked.rank_topk: term-pruned postings scan, tiny dft
-    broadcast, ONE groupBy(doc_id) shuffle, TakeOrderedAndProject."""
-    from ..queries.ranked import query_rank_terms
-
+    """(doc_id, score) — BM25F top-k, ties doc_id desc: the shared
+    ranked scorer (queries/ranked.score) over the fielded postings,
+    with wtf as tftd and wdl as doc_length."""
     terms = query_rank_terms(query, normalize)
-    n_docs, avg_wdl = index.corpus_scalars()
-    spark = index.postings.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    mult = spark.createDataFrame(
-        [(t, float(m)) for t, m in terms.items()], "term string, mult double"
-    )
-    matched = index.postings.filter(F.col("term").isin(list(terms)))
-    dft = matched.groupBy("term").agg(F.count("*").cast("double").alias("dft"))
-    n = F.lit(float(n_docs))
-    wqt = F.greatest(
-        F.lit(IDF_FLOOR),
-        F.log((n - F.col("dft") + 0.5) / (F.col("dft") + 0.5)),
-    )
-    dft = dft.withColumn("wqt", wqt)
-    wdt = (F.lit(K1 + 1.0) * F.col("wtf")) / (
-        F.lit(K1)
-        * (F.lit(1.0 - B) + F.lit(B) * F.col("wdl") / F.lit(float(avg_wdl)))
-        + F.col("wtf")
-    )
-    scored = (
-        matched.join(F.broadcast(dft.select("term", "wqt")), "term")
-        .join(F.broadcast(mult), "term")
-        .withColumn("contrib", wdt * F.col("wqt") * F.col("mult"))
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.desc("doc_id")).limit(k)
+        return empty_topk(index.postings.sparkSession)
+    postings = index.postings.filter(F.col("term").isin(list(terms))).select(
+        "term", "doc_id", F.col("wtf").alias("tftd"),
+        F.col("wdl").alias("doc_length"))
+    return top_k(score(postings, {"": terms}, index.corpus_scalars(), "bm25"), k)

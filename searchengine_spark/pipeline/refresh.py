@@ -15,29 +15,27 @@ the closed crawl-refresh loop the north rule's Iceberg framing implies:
         an equality-delete file interpreted at decode time (the
         sequence-number rule keeps the delta's own rows).
 
-Contrast with the two existing maintenance paths:
+Contrast with the two other maintenance paths:
 
-* ``indexing/segments.merge_segments`` (copy-on-write): rewrites the
-  delta-touched (term, block) groups and republishes — bounded work,
-  but the whole segment set is written back per merge.  Right when
-  merges are infrequent and reads dominate.
+* ``indexing/segments.merge_segments`` (copy-on-write): re-encodes the
+  delta-touched (term, block) groups, but the whole segment set is
+  written back per merge.
 * ``streaming/ingest.start_segment_maintenance``: merge_segments per
-  micro-batch with directory versioning — right for a continuous
-  drip.
+  micro-batch into a new versioned directory — so every micro-batch
+  rewrites the whole segment set.
 * THIS module (merge-on-read): a refresh writes ONLY delta-sized
-  files (new segment rows + a delete file); readers reconcile.  Right
-  when refreshes are frequent relative to full rewrites — Iceberg v2
-  / Lucene-liveDocs economics.  ``rewrite_pages_index`` is the major
-  compaction that folds the accumulated layers back into a clean
+  files (new segment rows + a delete file); readers reconcile (the
+  Iceberg v2 / Lucene-liveDocs shape).  ``rewrite_pages_index`` is the
+  major compaction that folds the accumulated layers back into a clean
   base.
 
 Serving exactness contract (tested in tests/test_refresh.py):
 
-* ``refreshed_topk`` / ``refreshed_boolean`` — EXACT: identical rows,
-  scores and quirks to a from-scratch build over the latest crawl
-  state (dft is counted from live decoded postings; n_docs/avg_dl
-  come from the docstats companion table, which applies its deletes
-  generically).
+* ``refreshed_topk`` / ``refreshed_topk_batch`` / ``refreshed_boolean``
+  — EXACT: identical rows, scores and quirks to a from-scratch build
+  over the latest crawl state (dft is counted from live decoded
+  postings; n_docs/avg_dl come from the docstats companion table,
+  which applies its deletes generically).
 * ``queries/wand.wand_topk(deletes=…)`` — live docs only, exact
   pruning, but wqt/bounds count superseded postings until the next
   rewrite (the Lucene unmerged-index contract); after
@@ -56,14 +54,24 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..indexing.build import term_bucket, term_filter
 from ..indexing.segments import (
     biword_as_segments,
     build_segments,
     decode_postings,
     hash_block_span,
 )
+from ..queries.ranked import (
+    empty_topk,
+    query_batch_terms,
+    query_rank_terms,
+    score,
+    top_k,
+)
+from ..queries.wand import _apply_deletes, wand_topk
 from ..sources.snapshots import SnapshotTable
 from ..streaming.ingest import analyze_pages
+from .index_pipeline import PublishedScalars
 
 # Companion table (same root, its own snapshot lineage): (doc_id, url,
 # doc_length) per live doc. Its deletes ARE on a table column, so the
@@ -256,6 +264,22 @@ def published_deletes(spark: SparkSession, index_root: str,
     return dele.groupBy("doc_id").agg(F.max("_seq").alias("_del_seq"))
 
 
+def _published_segments(spark: SparkSession, index_root: str,
+                        terms: list[str] | None, version: int | None):
+    """(segments planned down to the terms' buckets — carrying ``_seq``
+    when the snapshot has deletes —, deletes or None, table properties)."""
+    tbl = SnapshotTable(index_root)
+    props = tbl.properties(version)
+    tb = props.get("term_buckets")
+    preds = None
+    if terms and tb:
+        preds = [("bucket", "in", sorted({term_bucket(t, tb) for t in terms}))]
+    dele = published_deletes(spark, index_root, version)
+    seg = tbl.read(spark, version=version, predicates=preds,
+                   apply_deletes=False, with_seq=dele is not None)
+    return seg, dele, props
+
+
 def published_postings(
     spark: SparkSession,
     index_root: str,
@@ -267,25 +291,31 @@ def published_postings(
     bucket-pruned file planning, then the sequence-number delete rule
     post-decode (the index-table analogue of the snapshot layer's
     generic merge-on-read read)."""
-    from ..indexing.build import term_bucket, term_filter
-    from ..queries.wand import _apply_deletes
-
-    tbl = SnapshotTable(index_root)
-    props = tbl.properties(version)
-    tb = props.get("term_buckets")
-    preds = None
-    if terms and tb:
-        buckets = sorted({term_bucket(t, tb) for t in terms})
-        preds = [("bucket", "in", buckets)]
-    dele = published_deletes(spark, index_root, version)
-    seg = tbl.read(spark, version=version, predicates=preds,
-                   apply_deletes=False, with_seq=dele is not None)
+    seg, dele, props = _published_segments(spark, index_root, terms, version)
     if terms is not None:
-        seg = term_filter(seg, terms, tb)
+        seg = term_filter(seg, terms, props.get("term_buckets"))
     postings = decode_postings(
         seg, terms=None, with_positions=with_positions,
         passthrough=("_seq",) if dele is not None else ())
     return _apply_deletes(postings, dele)
+
+
+def _refreshed_scores(spark: SparkSession, index_root: str,
+                      weights: dict, version: int | None) -> DataFrame:
+    """Shared scorer over a refreshed snapshot: the bucket-pruned,
+    delete-reconciled decode of the queries' terms, checkpointed once,
+    with dft counted over that live checkpoint."""
+    props = SnapshotTable(index_root).properties(version)
+    terms = sorted({t for ts in weights.values() for t in ts})
+    postings = published_postings(spark, index_root, terms,
+                                  version=version, with_positions=False)
+    # Materialize the decode ONCE: the dft aggregate and the scoring
+    # join both read it, and would otherwise each re-run the bucket scan
+    # + VB decode. It is bounded by the query terms' posting lists, and
+    # localCheckpoint trades fault re-compute for serving latency.
+    postings = postings.localCheckpoint(eager=True)
+    return score(postings, weights, (float(props["n_docs"]),
+                                     float(props["avg_doc_length"])), "bm25")
 
 
 def refreshed_topk(
@@ -302,55 +332,14 @@ def refreshed_topk(
     frame — the decode is already paid; this is what upgrades the
     Lucene drift contract to exactness), corpus scalars come from the
     snapshot's properties (maintained from the docstats companion at
-    refresh time).  One job: decode → dft → wqt join → score →
+    refresh time).  An eager checkpoint of the decode, then one action:
+    dft → wqt join → inlined multiplicity → score →
     TakeOrderedAndProject."""
-    from ..queries.ranked import query_rank_terms
-    from ..queries.wand import bm25_wdt_expr
-
     terms = query_rank_terms(query, normalize)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    props = SnapshotTable(index_root).properties(version)
-    n_docs, avg_dl = float(props["n_docs"]), float(props["avg_doc_length"])
-
-    postings = published_postings(spark, index_root, sorted(terms),
-                                  version=version, with_positions=False)
-    # Materialize the pruned, delete-reconciled decode ONCE — the plan
-    # audit (tools/explain_audit.py, PERF.md) showed it running twice:
-    # the exact-dft aggregate and the scoring join each re-ran the
-    # bucket scan + VB decode. The frame is bounded by the query
-    # terms' posting lists, so an executor-local checkpoint is cheap,
-    # and the dft aggregate stays a partial agg over the checkpointed
-    # partitions (head-term skew handling unchanged). localCheckpoint
-    # trades fault re-compute for latency — the right side of the
-    # trade for a per-query serving path.
-    postings = postings.localCheckpoint(eager=True)
-    mult = F.create_map(
-        *[F.lit(x) for kv in terms.items() for x in kv])
-    wq = (
-        postings.groupBy("term")
-        .agg(F.count("*").cast("double").alias("dft"))
-        .withColumn(
-            "wqt",
-            F.greatest(
-                F.lit(0.1),
-                F.log((F.lit(n_docs) - F.col("dft") + 0.5)
-                      / (F.col("dft") + 0.5))) * mult[F.col("term")])
-        .select("term", "wqt")
-    )
-    return (
-        postings.join(F.broadcast(wq), "term")
-        .withColumn(
-            "contrib",
-            F.col("wqt")
-            * bm25_wdt_expr(F.col("tftd"),
-                            F.col("doc_length").cast("double"), avg_dl),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .orderBy(F.desc("score"), F.desc("doc_id"))
-        .limit(k)
-    )
+        return empty_topk(spark)
+    return top_k(_refreshed_scores(spark, index_root, {"": terms}, version),
+                 k)
 
 
 def refreshed_topk_batch(
@@ -362,10 +351,9 @@ def refreshed_topk_batch(
     version: int | None = None,
 ) -> DataFrame:
     """Query-log replay over a refreshed (merge-on-read) snapshot: ALL
-    queries in ONE job — the path a serving fleet actually reads a
-    delta-layered index through, and therefore the shape the serving
-    tax must be measured on (a per-query loop re-pays file planning +
-    delete reconciliation per query; the batch pays them once).
+    queries share one decode and one scoring plan — a per-query loop
+    re-pays file planning + delete reconciliation per query; the batch
+    pays them once.
 
     Returns (query_id, doc_id, score, rank), rank 1..k per query,
     per-query rows identical to :func:`refreshed_topk` (same live-dft
@@ -373,65 +361,14 @@ def refreshed_topk_batch(
     reconcile).
 
     Scale shape: one bucket-pruned decode of the UNION of all query
-    terms (delta layers + base, deletes applied once), localCheckpoint,
-    per-term dft aggregate, broadcast (query_id, term, mult) fan-out,
-    ONE partial-agg shuffle on (query_id, doc_id), per-query window
-    top-k — the merge-on-read twin of queries.ranked.rank_topk_batch.
+    terms (delta layers + base, deletes applied once), checkpointed,
+    then the shared scorer and a per-query window top-k.
     """
-    from pyspark.sql.window import Window
-
-    from ..queries.ranked import query_rank_terms
-    from ..queries.wand import bm25_wdt_expr
-
-    qt_rows = [
-        (qid, t, float(m))
-        for qid, q in queries.items()
-        for t, m in query_rank_terms(q, normalize).items()
-    ]
-    if not qt_rows:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
-    props = SnapshotTable(index_root).properties(version)
-    n_docs, avg_dl = float(props["n_docs"]), float(props["avg_doc_length"])
-    qt = spark.createDataFrame(
-        qt_rows, "query_id string, term string, mult double")
-    terms = sorted({t for _, t, _ in qt_rows})
-
-    postings = published_postings(spark, index_root, terms,
-                                  version=version, with_positions=False)
-    # one materialization of the pruned, delete-reconciled decode — the
-    # dft aggregate and the scoring join both read it (same rationale
-    # as refreshed_topk, amortized over the whole query log here)
-    postings = postings.localCheckpoint(eager=True)
-    wq = (
-        postings.groupBy("term")
-        .agg(F.count("*").cast("double").alias("dft"))
-        .withColumn(
-            "wqt",
-            F.greatest(
-                F.lit(0.1),
-                F.log((F.lit(n_docs) - F.col("dft") + 0.5)
-                      / (F.col("dft") + 0.5))))
-        .select("term", "wqt")
-    )
-    scored = (
-        postings.join(F.broadcast(wq), "term")
-        .join(F.broadcast(qt), "term")
-        .withColumn(
-            "contrib",
-            F.col("wqt") * F.col("mult")
-            * bm25_wdt_expr(F.col("tftd"),
-                            F.col("doc_length").cast("double"), avg_dl),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.desc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    weights = query_batch_terms(queries, normalize)
+    if not weights:
+        return empty_topk(spark, per_query=True)
+    return top_k(_refreshed_scores(spark, index_root, weights, version), k,
+                 per_query=True)
 
 
 def refreshed_boolean(
@@ -492,26 +429,13 @@ def refreshed_wand_topk(
     Serves live docs only with exact pruning; absolute scores follow
     the Lucene unmerged-index contract until ``rewrite_pages_index``
     (see queries/wand.wand_topk's deletes note)."""
-    from ..indexing.build import term_bucket
-    from ..queries.ranked import query_rank_terms
-    from ..queries.wand import wand_topk
-    from .index_pipeline import PublishedScalars
-
-    tbl = SnapshotTable(index_root)
-    props = tbl.properties(version)
-    tb = props.get("term_buckets")
-    terms = query_rank_terms(query, normalize)
-    preds = None
-    if terms and tb:
-        buckets = sorted({term_bucket(t, tb) for t in terms})
-        preds = [("bucket", "in", buckets)]
-    dele = published_deletes(spark, index_root, version)
-    seg = tbl.read(spark, version=version, predicates=preds,
-                   apply_deletes=False, with_seq=dele is not None)
+    seg, dele, props = _published_segments(
+        spark, index_root, list(query_rank_terms(query, normalize)), version)
     scalars = PublishedScalars(float(props["n_docs"]),
                                float(props["avg_doc_length"]))
     return wand_topk(scalars, seg, query, k=k, normalize=normalize,
-                     term_buckets=tb, champion_blocks=champion_blocks,
+                     term_buckets=props.get("term_buckets"),
+                     champion_blocks=champion_blocks,
                      deletes=dele)
 
 

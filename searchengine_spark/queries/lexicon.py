@@ -125,11 +125,10 @@ def rank_topk_wildcard(index, vocab: DataFrame, pattern: str,
     expansion stays a DataFrame end to end — no driver collect, the
     postings scan prunes by broadcast semi-join
     (ranked.rank_scores_terms)."""
-    from .ranked import rank_scores_terms
+    from .ranked import rank_scores_terms, top_k
 
     terms_df = expand_wildcard(vocab, pattern, kgrams=kgrams).select("term")
-    scored = rank_scores_terms(index, terms_df, strategy)
-    return scored.orderBy(F.desc("score"), F.desc("doc_id")).limit(k)
+    return top_k(rank_scores_terms(index, terms_df, strategy), k)
 
 
 def wildcard_docs(postings: DataFrame, vocab: DataFrame, pattern: str,

@@ -10,10 +10,15 @@ divides at the end; top-K uses heapq tuple order = (score desc, doc_id
 desc) on ties (main.py:463-467), locked here via orderBy(desc(score),
 desc(doc_id)).limit(k) -> Catalyst's TakeOrderedAndProject.
 
+Every ranked entry point (in-memory index, published segments,
+merge-on-read snapshots, BM25F, champion lists, WAND's exact pass) is a
+thin call onto :func:`score` and :func:`top_k`.
+
 Scale notes: the postings scan is filtered to the handful of query
 terms (partition-pruned when the index is bucket-partitioned); dft
 counts are a tiny aggregate joined back by broadcast; corpus scalars
-are literals; the only wide shuffle is groupBy(doc_id) over the
+and driver-known query weights are literals (no join, no Python-RDD
+frame); the only wide shuffle is groupBy(query_id, doc_id) over the
 matched postings, which is exactly the accumulator the reference
 builds one doc at a time.
 """
@@ -22,8 +27,9 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..indexing.build import SparkIndex, term_filter
 from ..oracle.engine import term_for_rank_mode
@@ -33,6 +39,12 @@ STRATEGIES = ("default", "tfidf", "bm25", "wacky")
 # Vocab-elimination thresholds (S7):
 # vocab_elimination_main_precision_demo.py:142,171
 PRUNE_THRESHOLDS = {"default": 1.1, "bm25": 0.4}
+
+# BM25 constants (ranked_strategy.py:134-135) and the wqt floor
+K1, B, IDF_FLOOR = 1.2, 0.75, 0.1
+
+# per-doc columns the strategies read besides tftd
+STAT_COLS = ("doc_length", "Ld", "byte_size", "avg_tftd")
 
 
 def query_rank_terms(query: str, normalize=None) -> dict[str, int]:
@@ -59,19 +71,38 @@ def query_rank_terms(query: str, normalize=None) -> dict[str, int]:
     return dict(counts)
 
 
-def _wqt(strategy: str, n_docs: int):
-    dft = F.col("dft").cast("double")
+def query_batch_terms(queries: dict[str, str],
+                      normalize=None) -> dict[str, dict[str, int]]:
+    """{query_id: {term: multiplicity}} for a query log, dropping
+    queries with no terms (they rank nothing)."""
+    out = {qid: query_rank_terms(q, normalize) for qid, q in queries.items()}
+    return {qid: terms for qid, terms in out.items() if terms}
+
+
+def _wqt(strategy: str, n_docs: int, dft: Column | None = None):
+    # Spark's log(x <= 0) is NULL and greatest() skips NULLs, so the
+    # bm25 floor also covers a metadata dft that overcounts live docs
+    dft = (F.col("dft") if dft is None else dft).cast("double")
     n = F.lit(float(n_docs))
     if strategy == "default":
         return F.log(F.lit(1.0) + n / dft)
     if strategy == "tfidf":
         return F.log(n / dft)
     if strategy == "bm25":
-        return F.greatest(F.lit(0.1), F.log((n - dft + 0.5) / (dft + 0.5)))
+        return F.greatest(F.lit(IDF_FLOOR), F.log((n - dft + 0.5) / (dft + 0.5)))
     if strategy == "wacky":
         # numpy ln(0) = -inf in the reference, so max(0, ln(0)) == 0
         return F.when(n > dft, F.greatest(F.lit(0.0), F.log((n - dft) / dft))).otherwise(0.0)
     raise ValueError(strategy)
+
+
+def bm25_wdt_expr(tftd: Column, doc_length: Column, avg_dl: float) -> Column:
+    """(k1+1)·tftd / (k1·(1−b + b·dl/avgdl) + tftd) — the exact
+    reference constants (ranked_strategy.py:134-135: 1.2·(0.25+0.75·…)).
+    WAND's block bounds plug in (max_tftd, min_doc_length)."""
+    tftd = tftd.cast("double")
+    denom = K1 * ((1.0 - B) + B * doc_length / F.lit(avg_dl)) + tftd
+    return (K1 + 1.0) * tftd / denom
 
 
 def _wdt(strategy: str, avg_doc_length: float):
@@ -81,9 +112,7 @@ def _wdt(strategy: str, avg_doc_length: float):
     if strategy == "tfidf":
         return tftd
     if strategy == "bm25":
-        # k1=1.2, b=0.75 fixed (ranked_strategy.py:134-135)
-        denom = 1.2 * (0.25 + 0.75 * F.col("doc_length") / F.lit(avg_doc_length)) + tftd
-        return 2.2 * tftd / denom
+        return bm25_wdt_expr(tftd, F.col("doc_length"), avg_doc_length)
     if strategy == "wacky":
         return F.when(
             F.col("avg_tftd") > 0,
@@ -100,6 +129,120 @@ def _normalizer(strategy: str):
     return F.col("Ld")
 
 
+def _sql(v: str | int | float) -> str:
+    """Spark SQL literal text for a string or number. The string escape
+    assumes the default ``spark.sql.parser.escapedStringLiterals=false``."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"{v!r}D" if isinstance(v, float) else f"{int(v)}L"
+
+
+def _literal_map(d: dict[str, int | float]) -> Column:
+    """A driver-side {str: number} dict as ONE map literal parsed from
+    SQL text: building it from F.lit calls costs a py4j round-trip per
+    element — seconds for a replayed query log."""
+    return F.expr("map(" + ", ".join(
+        f"{_sql(k)}, {_sql(v)}" for k, v in sorted(d.items())) + ")")
+
+
+def _fan_out(frame: DataFrame,
+             weights: dict[str, dict[str, int]] | DataFrame) -> DataFrame:
+    """``frame`` × the queries that mention each of its terms: adds
+    (query_id, mult). Driver-known weights are one literal map
+    term → array<struct<query_id, mult>>, inlined (no join); a weights
+    DataFrame is joined by broadcast under query_id ""."""
+    if isinstance(weights, DataFrame):
+        mult = F.col("mult") if "mult" in weights.columns else F.lit(1.0)
+        w = weights.select("term", mult.cast("double").alias("mult"))
+        return frame.join(F.broadcast(w), "term").withColumn("query_id", F.lit(""))
+    by_term: dict[str, list[str]] = {}
+    for qid, terms in weights.items():
+        for t, m in terms.items():
+            by_term.setdefault(t, []).append(
+                f"named_struct('query_id', {_sql(qid)}, 'mult', {_sql(float(m))})")
+    qmap = F.expr("map(" + ", ".join(
+        f"{_sql(t)}, array({', '.join(qs)})"
+        for t, qs in sorted(by_term.items())) + ")")
+    return frame.select("*", F.inline(qmap[F.col("term")]))
+
+
+def score(
+    postings: DataFrame,
+    weights: dict[str, dict[str, int]] | DataFrame,
+    scalars: tuple[float, float],
+    strategy: str = "bm25",
+    dft: DataFrame | None = None,
+    prune: bool = False,
+) -> DataFrame:
+    """The one ranked accumulator: DataFrame(query_id, doc_id, score).
+
+    ``postings`` is term-pruned and carries the per-doc columns
+    ``strategy`` reads. ``weights`` is ``{query_id: {term: mult}}`` or
+    a (term[, mult]) DataFrame (an expansion too large to collect).
+    ``scalars`` is (n_docs, avg_doc_length). ``dft`` is None (count the
+    given postings) or a (term, dft) frame.
+    ``prune`` drops terms under the S7 wqt threshold.
+    """
+    n_docs, avg_dl = scalars
+    if dft is None:
+        dft = count_dft(postings)
+    wq = dft.select("term", _wqt(strategy, n_docs).alias("wqt"))
+    threshold = PRUNE_THRESHOLDS.get(strategy)
+    if prune and threshold is not None:
+        wq = wq.filter(F.col("wqt") >= threshold)
+    # the fan-out runs on the ≤|terms|-row weight side, so each posting
+    # meets its queries in the one broadcast hash join
+    scored = postings.join(F.broadcast(_fan_out(wq, weights)), "term")
+    contrib = _wdt(strategy, avg_dl) * F.col("wqt") * F.col("mult")
+    # the normalizer inputs are functionally dependent on doc_id, so
+    # they ride through the agg as first()
+    return scored.groupBy("query_id", "doc_id").agg(
+        (F.sum(contrib) / F.first(_normalizer(strategy))).alias("score"))
+
+
+def count_dft(postings: DataFrame) -> DataFrame:
+    """(term, dft) counted over a postings frame."""
+    return postings.groupBy("term").agg(F.count("*").alias("dft"))
+
+
+def top_k(scored: DataFrame, k: int, per_query: bool = False) -> DataFrame:
+    """Reference tie-break (score desc, doc_id desc). One query:
+    (doc_id, score) via orderBy+limit (TakeOrderedAndProject). Many:
+    (query_id, doc_id, score, rank) with row_number() ≤ k per query_id
+    (WindowGroupLimit — a partial top-k before the exchange)."""
+    order = (F.desc("score"), F.desc("doc_id"))
+    if not per_query:
+        return scored.select("doc_id", "score").orderBy(*order).limit(k)
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def empty_topk(spark, per_query: bool = False) -> DataFrame:
+    """The zero-row result of :func:`top_k` (a query with no terms)."""
+    return spark.createDataFrame(
+        [], "query_id string, doc_id long, score double, rank int"
+        if per_query else "doc_id long, score double")
+
+
+def _with_doc_stats(index: SparkIndex, postings: DataFrame) -> DataFrame:
+    """Postings carrying every strategy's per-doc columns: the
+    denormalized ones when present (the SparkIndex contract — no
+    corpus-sized join at query time), else one doc_stats join (e.g.
+    streaming/ingest.compact_index's un-enriched postings)."""
+    if set(STAT_COLS) <= set(postings.columns):
+        return postings
+    return postings.select("term", "doc_id", "tftd").join(
+        index.doc_stats.select("doc_id", *STAT_COLS), "doc_id")
+
+
+def _score_index(index: SparkIndex, weights: dict, strategy: str,
+                 prune: bool = False) -> DataFrame:
+    terms = sorted({t for ts in weights.values() for t in ts})
+    postings = term_filter(index.postings, terms, index.term_buckets)
+    return score(_with_doc_stats(index, postings), weights,
+                 index.corpus_scalars(), strategy, prune=prune)
+
+
 def rank_scores(
     index: SparkIndex,
     query: str,
@@ -114,15 +257,10 @@ def rank_scores(
     query-independent prior can promote a doc from outside any fixed-k
     prefix."""
     terms = query_rank_terms(query, normalize)
-    spark = index.postings.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    mult_df = spark.createDataFrame(
-        [(t, float(m)) for t, m in terms.items()], "term string, mult double"
-    )
-    return rank_scores_terms(index, mult_df, strategy, prune,
-                             literal_terms=list(terms))
+        return empty_topk(index.postings.sparkSession)
+    return _score_index(index, {"": terms}, strategy, prune).select(
+        "doc_id", "score")
 
 
 def rank_scores_terms(
@@ -130,65 +268,17 @@ def rank_scores_terms(
     terms_df: DataFrame,
     strategy: str = "bm25",
     prune: bool = False,
-    literal_terms: list[str] | None = None,
 ) -> DataFrame:
     """rank_scores over a (term, mult) DataFrame instead of a parsed
     query string — the shape an EXPANDED term set arrives in (wildcard
     expansion can be thousands of terms at web vocabulary; collecting
     them to literals would put the expansion on the driver). The
-    postings scan prunes by broadcast semi-join; pass ``literal_terms``
-    when the term list is known driver-side to ALSO get the bucket-
-    literal partition pruning of ``term_filter``."""
-    n_docs, avg_dl = index.corpus_scalars()
-    # Ranked path never reads positions: columnar projection gives the
-    # reference's position-skipping read (R2) for free. Doc stats come
-    # from the DENORMALIZED posting columns (SparkIndex contract) — no
-    # corpus-sized doc_stats join at query time; the legacy join path
-    # remains only for un-enriched postings frames.
-    stat_cols = ("doc_length", "Ld", "byte_size", "avg_tftd")
-    enriched = set(stat_cols) <= set(index.postings.columns)
-    cols = ["term", "doc_id", "tftd", *(stat_cols if enriched else ())]
-    mult_df = terms_df.select(
-        "term",
-        (F.col("mult") if "mult" in terms_df.columns else F.lit(1.0))
-        .cast("double").alias("mult"),
-    )
-    if literal_terms is not None:
-        matched = term_filter(
-            index.postings, literal_terms, index.term_buckets
-        ).select(*cols)
-    else:
-        matched = index.postings.join(
-            F.broadcast(mult_df.select("term")), "term", "left_semi"
-        ).select(*cols)
-
-    dft = matched.groupBy("term").agg(F.count("*").alias("dft"))
-    dft = dft.withColumn("wqt", _wqt(strategy, n_docs))
-    threshold = PRUNE_THRESHOLDS.get(strategy)
-    if prune and threshold is not None:
-        dft = dft.filter(F.col("wqt") >= threshold)
-
-    scored = matched.join(F.broadcast(dft.select("term", "wqt")), "term").join(
-        F.broadcast(mult_df), "term"
-    )
-    if not enriched:
-        scored = scored.join(index.doc_stats, "doc_id")
-    scored = (
-        scored.withColumn("contrib", _wdt(strategy, avg_dl) * F.col("wqt") * F.col("mult"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("contrib").alias("raw_score"),
-            # normalizer inputs are functionally dependent on doc_id;
-            # carrying them through the agg avoids a second doc_stats join
-            F.first("Ld").alias("Ld"),
-            F.first("byte_size").alias("byte_size"),
-        )
-        .select(
-            "doc_id",
-            (F.col("raw_score") / _normalizer(strategy)).alias("score"),
-        )
-    )
-    return scored
+    postings scan prunes by broadcast semi-join."""
+    matched = index.postings.join(
+        F.broadcast(terms_df.select("term")), "term", "left_semi")
+    return score(_with_doc_stats(index, matched), terms_df,
+                 index.corpus_scalars(), strategy, prune=prune).select(
+        "doc_id", "score")
 
 
 def rank_topk(
@@ -204,8 +294,7 @@ def rank_topk(
     ``prune=True`` applies the vocab-elimination wqt threshold (S7)
     before touching postings — the scalar degenerate case of WAND.
     """
-    scored = rank_scores(index, query, strategy, prune, normalize)
-    return scored.orderBy(F.desc("score"), F.desc("doc_id")).limit(k)
+    return top_k(rank_scores(index, query, strategy, prune, normalize), k)
 
 
 def champion_lists(index: SparkIndex, r: int = 64, salt: int = 16,
@@ -235,19 +324,9 @@ def champion_lists(index: SparkIndex, r: int = 64, salt: int = 16,
     the ≤ salt·r survivors per term. Identical result (global top-r is
     contained in the union of per-salt top-rs), reducer fan-in bounded
     by salt·r rows regardless of df."""
-    from pyspark.sql.window import Window
-
     _, avg_dl = index.corpus_scalars()
-    stat_cols = ("doc_length", "Ld", "byte_size", "avg_tftd")
-    if set(stat_cols) <= set(index.postings.columns):
-        base = index.postings.select("term", "doc_id", "tftd", *stat_cols)
-    else:
-        # un-enriched postings (e.g. a legacy persisted index): the
-        # impact expression needs the per-doc stats, so join doc_stats
-        # once at champion-build time (index-time, amortized)
-        base = index.postings.select("term", "doc_id", "tftd").join(
-            index.doc_stats.select("doc_id", *stat_cols), "doc_id"
-        )
+    base = _with_doc_stats(index, index.postings).select(
+        "term", "doc_id", "tftd", *STAT_COLS)
     impact = _wdt(strategy, avg_dl) / _normalizer(strategy)
     base = base.withColumn(
         "_impact_e6", F.floor(impact * F.lit(1e6)).cast("long")
@@ -293,46 +372,18 @@ def rank_topk_champions(
     Returns (doc_id, score); recall vs exact top-k is pytest-asserted.
     """
     terms = query_rank_terms(query, normalize)
-    n_docs, avg_dl = index.corpus_scalars()
-    spark = index.postings.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    mult_df = spark.createDataFrame(
-        [(t, float(m)) for t, m in terms.items()], "term string, mult double"
-    )
+        return empty_topk(index.postings.sparkSession)
     cand_docs = (
         champions.filter(F.col("term").isin(list(terms)))
         .select("doc_id").distinct()
     )
-    stat_cols = ("doc_length", "Ld", "byte_size", "avg_tftd")
-    enriched = set(stat_cols) <= set(index.postings.columns)
-    cols = ["term", "doc_id", "tftd", *(stat_cols if enriched else ())]
-    matched = (
-        term_filter(index.postings, list(terms), index.term_buckets)
-        .select(*cols)
-    )
-    dft = matched.groupBy("term").agg(F.count("*").alias("dft"))
-    dft = dft.withColumn("wqt", _wqt(strategy, n_docs))
-    scored = (
-        matched.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-        .join(F.broadcast(dft.select("term", "wqt")), "term")
-        .join(F.broadcast(mult_df), "term")
-    )
-    if not enriched:
-        scored = scored.join(index.doc_stats, "doc_id")
-    scored = (
-        scored.withColumn("contrib",
-                          _wdt(strategy, avg_dl) * F.col("wqt") * F.col("mult"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("contrib").alias("raw_score"),
-            F.first("Ld").alias("Ld"),
-            F.first("byte_size").alias("byte_size"),
-        )
-        .select("doc_id",
-                (F.col("raw_score") / _normalizer(strategy)).alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.desc("doc_id")).limit(k)
+    matched = _with_doc_stats(
+        index, term_filter(index.postings, list(terms), index.term_buckets))
+    scored = score(
+        matched.join(F.broadcast(cand_docs), "doc_id", "left_semi"),
+        {"": terms}, index.corpus_scalars(), strategy, dft=count_dft(matched))
+    return top_k(scored, k)
 
 
 def rank_topk_batch(
@@ -342,7 +393,7 @@ def rank_topk_batch(
     k: int = 10,
     normalize=None,
 ) -> DataFrame:
-    """Batch ranked retrieval: ALL queries in ONE Spark job.
+    """Batch ranked retrieval: ALL queries in ONE plan.
 
     Returns DataFrame(query_id, doc_id, score, rank) with rank 1..k per
     query (reference tie-break per query). Per-query results are
@@ -350,63 +401,15 @@ def rank_topk_batch(
     independent of which query mentions the term.
 
     Scale shape: one postings scan filtered to the UNION of all query
-    terms (partition-pruned), one broadcast of the (query_id, term,
-    mult) table — postings fan out to the queries sharing each term —
+    terms (partition-pruned), the (query_id, mult) fan-out inlined as a
+    literal map — postings fan out to the queries sharing each term —
     one partial-agg shuffle on (query_id, doc_id), then a per-query
     window top-k (parallel across queries; no global sort). This is the
-    evaluation-harness path: 225 Cranfield queries cost one job, not
+    evaluation-harness path: 225 Cranfield queries cost one plan, not
     225 (tools/cranfield_eval.py), and at warehouse scale it is how a
     query log replays against the index.
     """
-    from pyspark.sql.window import Window
-
-    n_docs, avg_dl = index.corpus_scalars()
-    spark = index.postings.sparkSession
-    qt_rows = [
-        (qid, t, float(m))
-        for qid, q in queries.items()
-        for t, m in query_rank_terms(q, normalize).items()
-    ]
-    if not qt_rows:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int"
-        )
-    qt = spark.createDataFrame(
-        qt_rows, "query_id string, term string, mult double"
-    )
-    terms = sorted({t for _, t, _ in qt_rows})
-
-    stat_cols = ("doc_length", "Ld", "byte_size", "avg_tftd")
-    enriched = set(stat_cols) <= set(index.postings.columns)
-    cols = ["term", "doc_id", "tftd", *(stat_cols if enriched else ())]
-    matched = term_filter(index.postings, terms, index.term_buckets).select(*cols)
-
-    dft = matched.groupBy("term").agg(F.count("*").alias("dft"))
-    dft = dft.withColumn("wqt", _wqt(strategy, n_docs))
-
-    scored = matched.join(F.broadcast(dft.select("term", "wqt")), "term").join(
-        F.broadcast(qt), "term"
-    )
-    if not enriched:
-        scored = scored.join(index.doc_stats, "doc_id")
-    scored = (
-        scored.withColumn(
-            "contrib", _wdt(strategy, avg_dl) * F.col("wqt") * F.col("mult")
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("raw_score"),
-            F.first("Ld").alias("Ld"),
-            F.first("byte_size").alias("byte_size"),
-        )
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("raw_score") / _normalizer(strategy)).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    weights = query_batch_terms(queries, normalize)
+    if not weights:
+        return empty_topk(index.postings.sparkSession, per_query=True)
+    return top_k(_score_index(index, weights, strategy), k, per_query=True)

@@ -1,12 +1,14 @@
-"""Serve the reference's FULL query surface from a published index
-snapshot — the boolean half of the serving path (the ranked half is
-queries/wand.wand_topk / decode_topk over the same table, wired in
-scripts/submit_query_job.py).
+"""Serve the reference's query surface from a published index
+snapshot: ``boolean_from_published`` answers boolean/phrase/NEAR
+queries, ``ranked_batch_from_published`` replays a BM25 query batch.
+(Single ranked queries over the same table go through
+queries/wand.wand_topk / decode_topk; scripts/submit_query_job.py wires
+those.)
 
 The reference's disk-index driver answers boolean AND/OR/NOT, phrase
 (with the two-term biword fast path, /root/reference/main.py:413-418)
-and NEAR/k queries from its written index. This module answers the same
-grammar from a ``publish_segments`` snapshot:
+and NEAR/k queries from its written index. ``boolean_from_published``
+answers the same grammar from a ``publish_segments`` snapshot:
 
 * parse the query ONCE driver-side to collect the normalized lookup
   terms (plus the biword key when the whole query is a two-term
@@ -29,11 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..indexing.build import SparkIndex
+from ..indexing.build import SparkIndex, term_filter
 from ..indexing.segments import decode_postings
 from .engine import boolean_query, boolean_query_term
 from .parser import Node, parse_boolean_query
-from .ranked import query_rank_terms
+from .ranked import empty_topk, query_batch_terms, score, top_k
+from .wand import block_dft
 
 
 def lookup_terms(node: Node, normalize) -> set[str]:
@@ -121,74 +124,28 @@ def ranked_batch_from_published(
     snapshot (same weights, same reference tie-break: score desc,
     doc_id desc — /root/reference/main.py:463-467).
 
-    Scale shape (one Spark job for the whole batch):
-
-    * ONE bucket-pruned manifest read covering the UNION of every
-      query's terms (|union| crc32 calls driver-side; at 10^12 docs a
-      100-query batch opens ~100 buckets' files, not the table),
-    * ONE positionless decode of those terms' posting blocks,
-    * per-term dft/wqt from segment block metadata — computed
-      DataFrame-side and broadcast (no driver collect; the batch path
-      never touches the driver with anything corpus-sized),
-    * a broadcast (query_id, term, multiplicity) fan-out, one
-      partial-agged (query_id, doc_id) shuffle, then a per-query
-      window top-k (parallel across queries; no global sort).
+    Scale shape (one action for the whole batch): ONE bucket-pruned
+    manifest read and ONE positionless decode covering the UNION of
+    every query's terms, per-term dft from segment block metadata
+    (broadcast, never collected), then the shared scorer's inlined
+    (query_id, mult) fan-out, one partial-agged (query_id, doc_id)
+    shuffle and a per-query window top-k.
     """
-    from ..indexing.build import term_filter
     from ..pipeline.index_pipeline import (queryable_published,
                                            read_published_segments)
     from ..sources.snapshots import SnapshotTable
-    from .wand import bm25_wdt_expr
 
-    out_schema = "query_id string, doc_id long, score double, rank int"
     if tag is not None:
         version = SnapshotTable(table_root).tags()[tag]
     scalars, term_buckets = queryable_published(spark, table_root, version)
-    n_docs, avg_dl = scalars.corpus_scalars()
+    weights = query_batch_terms(queries, normalize)
+    if not weights:
+        return empty_topk(spark, per_query=True)
+    terms = sorted({t for ts in weights.values() for t in ts})
 
-    qt_rows = [
-        (qid, t, float(m))
-        for qid, q in queries.items()
-        for t, m in query_rank_terms(q, normalize).items()
-    ]
-    if not qt_rows:
-        return spark.createDataFrame([], out_schema)
-    qt = spark.createDataFrame(
-        qt_rows, "query_id string, term string, mult double")
-    terms = sorted({t for _, t, _ in qt_rows})
-
-    seg = term_filter(
-        read_published_segments(spark, table_root, terms=terms,
-                                version=version),
-        terms, term_buckets)
-    # dft from block metadata alone (no decode), wqt as an expression —
-    # ≤|union terms| rows, broadcast to the scorer.
-    dft = seg.groupBy("term").agg(
-        F.sum("df_block").cast("double").alias("dft"))
-    wq = dft.withColumn(
-        "wqt",
-        F.greatest(F.lit(0.1),
-                   F.log((F.lit(float(n_docs)) - F.col("dft") + 0.5)
-                         / (F.col("dft") + 0.5))),
-    ).select("term", "wqt")
-
+    seg = term_filter(read_published_segments(
+        spark, table_root, terms=terms, version=version), terms, term_buckets)
     postings = decode_postings(seg, terms, term_buckets=None,
                                with_positions=False)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.desc("doc_id"))
-    return (
-        postings.join(F.broadcast(wq), "term")
-        .join(F.broadcast(qt), "term")
-        .withColumn(
-            "contrib",
-            F.col("wqt") * F.col("mult")
-            * bm25_wdt_expr(F.col("tftd"),
-                            F.col("doc_length").cast("double"), avg_dl),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return top_k(score(postings, weights, scalars.corpus_scalars(), "bm25",
+                       dft=block_dft(seg)), k, per_query=True)

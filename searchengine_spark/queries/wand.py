@@ -8,12 +8,10 @@ block-max WAND generalizes it to per-block score upper bounds
 (Broder et al. CIKM'03; Ding & Suel SIGIR'11 — see PAPERS.md).
 
 Safe two-phase logic, compiled into ONE main DataFrame action plus a
-single ≤|terms|-row metadata collect (round-2 rewrite: the round-1
-version paid two data-dependent driver collects per query — champion
-ids and θ — plus per-query caches; champion selection and θ are now
-dataflow, θ riding along as a broadcast 1-row aggregate, and the only
-driver round-trip is the per-term dft lookup — the Spark analogue of
-the reference's SQLite vocabulary seek):
+single ≤|terms|-row metadata collect (the per-term dft lookup — the
+Spark analogue of the reference's SQLite vocabulary seek); champion
+selection and θ are dataflow, θ riding along as a broadcast 1-row
+aggregate:
 
 1. **Upper bounds** (metadata only — no posting decode): for each
    (term, block) of the query's terms, ``ub = wqt · wdt_max`` where
@@ -42,24 +40,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from ..indexing.build import term_filter
 from ..indexing.segments import decode_postings
-from .ranked import query_rank_terms
+from .ranked import (
+    _literal_map,
+    _wqt,
+    bm25_wdt_expr,
+    empty_topk,
+    query_rank_terms,
+    score,
+    top_k,
+)
 
-K1, B = 1.2, 0.75
 
-
-def _bm25_wqt(n_docs: float):
-    dft = F.col("dft").cast("double")
-    return F.greatest(F.lit(0.1), F.log((F.lit(n_docs) - dft + 0.5) / (dft + 0.5)))
-
-
-def bm25_wdt_expr(tftd_col, dl_col, avg_dl: float):
-    """(k1+1)·tftd / (k1·(0.25 + 0.75·dl/avgdl) + tftd) — the exact
-    reference constants (ranked_strategy.py:134-135: 1.2·(0.25+0.75·…))."""
-    tftd = tftd_col.cast("double")
-    denom = F.lit(K1) * (F.lit(0.25) + F.lit(0.75) * dl_col / F.lit(avg_dl)) + tftd
-    return F.lit(K1 + 1.0) * tftd / denom
+def block_dft(seg: DataFrame) -> DataFrame:
+    """(term, dft) summed from segment block metadata — no decode."""
+    return seg.groupBy("term").agg(F.sum("df_block").alias("dft"))
 
 
 def wand_topk(
@@ -92,15 +90,11 @@ def wand_topk(
     scores drift from a from-scratch rebuild until
     ``rewrite_pages_index`` — the documented Lucene/Iceberg contract.
     ``refreshed_topk`` is the exact-scores serving path."""
-    from pyspark.sql.window import Window
-
     spark = segments.sparkSession
     terms = query_rank_terms(query, normalize)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    n_docs, avg_dl = index.corpus_scalars()
-
-    from ..indexing.build import term_filter
+        return empty_topk(spark)
+    n_docs, avg_dl = scalars = index.corpus_scalars()
 
     seq_cols = ["_seq"] if deletes is not None else []
     if deletes is not None and "_seq" not in segments.columns:
@@ -113,23 +107,28 @@ def wand_topk(
         "doc_lengths_vb", *seq_cols,
     )
 
-    # term-level dft = Σ blocks df_block — a ≤|terms|-row metadata
-    # aggregate, collected once (the Spark analogue of the reference's
-    # SQLite vocabulary seek). Keeping wqt as a driver literal keeps the
-    # main query plan shallow: otherwise the dft subtree is recomputed
+    # term-level dft from block metadata — a ≤|terms|-row aggregate,
+    # collected once (the Spark analogue of the reference's SQLite
+    # vocabulary seek). Keeping it a driver literal keeps the main
+    # query plan shallow: otherwise the dft subtree is recomputed
     # inside all three consumers (block UBs, champion scores, survivor
     # scores) within the single action.
-    wq = _query_weights(spark, seg, terms, n_docs)
-    if wq is None:
-        return spark.createDataFrame([], "doc_id long, score double")
+    dft = {r["term"]: r["dft"] for r in block_dft(seg).collect()}
+    if not dft:
+        return empty_topk(spark)
+    dft_map = _literal_map(dft)
+    wqt = _wqt("bm25", n_docs, dft_map[F.col("term")])
+    mult = _literal_map({t: float(m) for t, m in terms.items()})[F.col("term")]
+    # the same literal as a (term, dft) frame for the exact scorer — a
+    # one-row range exploded, so no Python-RDD scan
+    dft_df = spark.range(1).select(F.explode(dft_map).alias("term", "dft"))
 
     # 1. per-block upper bounds from metadata only
     block_ub = (
-        seg.join(F.broadcast(wq), "term")
-        .withColumn(
+        seg.withColumn(
             "ub_t",
-            F.col("wqt")
-            * bm25_wdt_expr(F.col("max_tftd"), F.col("min_doc_length"), avg_dl),
+            bm25_wdt_expr(F.col("max_tftd"), F.col("min_doc_length"), avg_dl)
+            * wqt * mult,
         )
         .groupBy("block")
         .agg(F.sum("ub_t").alias("ub"), F.sum("df_block").alias("docs_in_block"))
@@ -162,18 +161,8 @@ def wand_topk(
         postings = decode_postings(seg_subset, list(terms),
                                    term_buckets=None, with_positions=False,
                                    passthrough=tuple(seq_cols))
-        postings = _apply_deletes(postings, deletes)
-        return (
-            postings.join(F.broadcast(wq), "term")
-            .withColumn(
-                "contrib",
-                F.col("wqt")
-                * bm25_wdt_expr(F.col("tftd"), F.col("doc_length").cast("double"),
-                                avg_dl),
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("contrib").alias("score"))
-        )
+        return score(_apply_deletes(postings, deletes), {"": terms},
+                     scalars, "bm25", dft=dft_df)
 
     # 3. θ = k-th best exact score among champion docs, −∞ when the
     # champions cover < k docs — a 1-row aggregate, broadcast into the
@@ -196,8 +185,7 @@ def wand_topk(
         .select("block")
     )
     survivors = seg.join(F.broadcast(keep_blocks), "block")
-    final = exact_scores(survivors)
-    return final.orderBy(F.desc("score"), F.desc("doc_id")).limit(k)
+    return top_k(exact_scores(survivors), k)
 
 
 def _apply_deletes(postings: DataFrame,
@@ -216,34 +204,6 @@ def _apply_deletes(postings: DataFrame,
     )
 
 
-def _query_weights(spark, seg: DataFrame, terms: dict[str, int],
-                   n_docs: float):
-    """Per-term BM25 query weights as a ≤|terms|-row broadcastable
-    frame (term, wqt×multiplicity), dft summed from segment block
-    metadata.  Returns None when no query term exists in the index."""
-    import math
-
-    dft_rows = (
-        seg.groupBy("term").agg(F.sum("df_block").alias("dft")).collect()
-    )
-    wq_rows = []
-    for r in dft_rows:
-        dft = float(r["dft"])
-        num = n_docs - dft + 0.5
-        # num ≤ 0 only when dft overcounts live docs — segment metadata
-        # over a merge-on-read snapshot still counts superseded
-        # postings (the documented Lucene drift contract). The
-        # reference's 0.1 floor (ranked_strategy.py) already flattens
-        # every ratio ≤ e^0.1, so the clamp changes nothing on clean
-        # indexes.
-        wqt = 0.1 if num <= 0 else \
-            max(0.1, math.log(num / (dft + 0.5)))
-        wq_rows.append((r["term"], wqt * terms[r["term"]]))
-    if not wq_rows:
-        return None
-    return spark.createDataFrame(wq_rows, "term string, wqt double")
-
-
 def decode_topk(
     index,
     segments: DataFrame,
@@ -258,30 +218,11 @@ def decode_topk(
     are short (WAND's metadata pass then costs more than it saves).
     Same tie-break and scoring as wand_topk; identical results by
     construction (asserted per-trial by the crossover bench)."""
-    from ..indexing.build import term_filter
-    from ..indexing.segments import decode_postings
-
-    spark = segments.sparkSession
     terms = query_rank_terms(query, normalize)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    n_docs, avg_dl = index.corpus_scalars()
+        return empty_topk(segments.sparkSession)
     seg = term_filter(segments, list(terms), term_buckets)
-    wq = _query_weights(spark, seg, terms, n_docs)
-    if wq is None:
-        return spark.createDataFrame([], "doc_id long, score double")
     postings = decode_postings(seg, list(terms), term_buckets=None,
                                with_positions=False)
-    return (
-        postings.join(F.broadcast(wq), "term")
-        .withColumn(
-            "contrib",
-            F.col("wqt")
-            * bm25_wdt_expr(F.col("tftd"),
-                            F.col("doc_length").cast("double"), avg_dl),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .orderBy(F.desc("score"), F.desc("doc_id"))
-        .limit(k)
-    )
+    return top_k(score(postings, {"": terms}, index.corpus_scalars(), "bm25",
+                       dft=block_dft(seg)), k)

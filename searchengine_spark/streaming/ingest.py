@@ -23,7 +23,8 @@ Design (delta + compaction, the standard streaming-index shape):
 * ``start_segment_maintenance`` keeps the SERVING artifact (compressed
   block-split segments) current per micro-batch via ``merge_segments``
   with versioned directories and an atomic pointer swap — MVCC for
-  readers; merge work per batch ∝ batch size.
+  readers; re-encode work per batch ∝ batch size, but each batch
+  rewrites the whole segment set.
 * ``ingestion_stats`` is the watermarked event-time aggregation
   (1-minute windows on ``warc_ts``, 2-minute late-data watermark) —
   the monitoring stream.
@@ -292,9 +293,13 @@ def start_segment_maintenance(spark: SparkSession, input_dir: str,
     micro-batch, ``read_current_segments`` returns a consistent segment
     set containing exactly the latest crawl of every url seen so far —
     decodable by ``decode_postings`` and scoreable by WAND unchanged.
-    Merge work per batch ∝ batch size (see merge_segments), so the
-    maintenance cost of a perpetual crawl is flat, not growing with the
-    index."""
+    Only the delta-touched (term, block) groups are decoded and
+    re-encoded (see merge_segments), but every micro-batch writes the
+    WHOLE merged segment set and doc-stats table to a new ``v{n}/``
+    directory with ``mode("overwrite")``: bytes written per batch grow
+    with the index, so a perpetual crawl's maintenance cost grows with
+    it too. (pipeline/refresh.refresh_pages_index is the O(delta)
+    merge-on-read alternative.)"""
     stream = stream_pages(spark, input_dir)
     writer = (
         stream.writeStream.foreachBatch(

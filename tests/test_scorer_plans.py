@@ -1,0 +1,245 @@
+"""Physical-plan contracts of the ranked entry points that share the
+scorer (queries/ranked.score / top_k), asserted on the executed plans:
+
+* a single query selects with TakeOrderedAndProject, never a global Sort;
+* a query batch selects with WindowGroupLimit (partial top-k per query);
+* no plan scans a Python-built RDD — query weights are literals; the only
+  RDD scan allowed is the merge-on-read path's eager localCheckpoint;
+* no ranked scan reads a positions column;
+* refreshed_topk decodes its postings once: each segment scan is decoded
+  once inside the one checkpointed frame, and the scoring plan (dft and
+  scores) reads only the checkpoint.
+
+It also checks that query ids and terms holding a quote or a backslash
+survive their trip through the scorer's SQL literal text.
+"""
+
+from __future__ import annotations
+
+import math
+
+import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from searchengine_spark.indexing.build import read_index, write_index
+from searchengine_spark.indexing.fielded import build_fielded_index, rank_topk_fielded
+from searchengine_spark.indexing.segments import build_segments
+from searchengine_spark.indexing.simple import build_simple_index, simple_query_term
+from searchengine_spark.pipeline import refresh as R
+from searchengine_spark.pipeline.index_pipeline import publish_segments
+from searchengine_spark.queries.ranked import (
+    _literal_map,
+    champion_lists,
+    rank_topk,
+    rank_topk_batch,
+    rank_topk_champions,
+    score,
+)
+from searchengine_spark.queries.serve import ranked_batch_from_published
+
+SF_DIR = "/root/testdata/sf0.01"
+QUERY = "table scan merge"
+BATCH = {"qa": "table scan", "qb": "merge join", "qc": "table join"}
+CRAWL_QUERY = "the crawl"
+CRAWL_BATCH = {"q0": "the crawl", "q1": "page body", "q2": "crawl body"}
+
+
+def _nodes(plan) -> list:
+    """Every node of a physical plan, descending into AQE query stages,
+    reused exchanges and subqueries."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        out.append(node)
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        for seq in (node.children(), node.subqueries()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return out
+
+
+def _executed(df: DataFrame) -> list:
+    """Collect ``df`` (non-empty), then return its final plan's nodes."""
+    assert df.collect(), "plan contract needs a query with results"
+    return _nodes(df._jdf.queryExecution().executedPlan())
+
+
+def _names(nodes) -> list[str]:
+    return [n.getClass().getSimpleName() for n in nodes]
+
+
+def _check_common(nodes) -> None:
+    names = _names(nodes)
+    for node, name in zip(nodes, names):
+        if name == "RDDScanExec":
+            assert node.rdd().isCheckpointed(), \
+                "plan scans a Python-built RDD (createDataFrame of a list)"
+        if name == "FileSourceScanExec":
+            schema = node.requiredSchema().simpleString()
+            assert "positions" not in schema, schema
+        if name == "SortExec":
+            assert not getattr(node, "global")(), "global Sort in plan"
+
+
+def _single(df: DataFrame) -> list:
+    nodes = _executed(df)
+    _check_common(nodes)
+    assert "TakeOrderedAndProjectExec" in _names(nodes)
+    return nodes
+
+
+def _batch(df: DataFrame) -> list:
+    nodes = _executed(df)
+    _check_common(nodes)
+    assert "WindowGroupLimitExec" in _names(nodes)
+    return nodes
+
+
+def _decodes(nodes) -> int:
+    return sum(1 for n, name in zip(nodes, _names(nodes))
+               if name == "ArrowEvalPythonExec"
+               and "_decode_batch" in n.toString())
+
+
+def _segment_scans(nodes) -> int:
+    return sum(1 for n, name in zip(nodes, _names(nodes))
+               if name == "FileSourceScanExec"
+               and "docids_vb" in n.requiredSchema().simpleString())
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+
+@pytest.fixture(scope="module")
+def pidx(spark, docs, tmp_path_factory):
+    """The sf0.01 simple index persisted bucket-partitioned, so ranked
+    reads are file scans whose read schema the contract can inspect."""
+    path = str(tmp_path_factory.mktemp("plan_idx"))
+    write_index(build_simple_index(docs), path, term_buckets=16)
+    return read_index(spark, path)
+
+
+@pytest.fixture(scope="module")
+def refreshed(spark, tmp_path_factory):
+    """A merge-on-read index: a full build, then one delta refresh
+    carrying re-crawls, so reads reconcile deletes."""
+    from searchengine_spark.corpus import pages_df
+    from searchengine_spark.sources.snapshots import SnapshotTable
+
+    root = tmp_path_factory.mktemp("plan_refresh")
+    pr, ir = str(root / "pages"), str(root / "idx")
+    pages = SnapshotTable(pr)
+    base = pages_df(spark, 300, seed=42, partitions=4).cache()
+    pages.commit(base, mode="overwrite")
+    R.build_pages_index(spark, pr, ir, term_buckets=16)
+    recrawl = (
+        base.limit(20)
+        .withColumn("text", F.concat("text", F.lit(" refreshed crawl")))
+        .withColumn("html", F.col("text").cast("binary"))
+        .withColumn("warc_ts", F.col("warc_ts") + F.expr("interval 10 days"))
+    )
+    pages.commit(recrawl)
+    R.refresh_pages_index(spark, pr, ir)
+    base.unpersist()
+    return ir
+
+
+def test_rank_topk_plan(pidx):
+    _single(rank_topk(pidx, QUERY, "bm25", 10, normalize=simple_query_term))
+
+
+def test_rank_topk_batch_plan(pidx):
+    _batch(rank_topk_batch(pidx, BATCH, "bm25", 10,
+                           normalize=simple_query_term))
+
+
+def test_rank_topk_champions_plan(pidx):
+    champs = champion_lists(pidx, r=32)
+    _single(rank_topk_champions(pidx, champs, QUERY, "bm25", 10,
+                                normalize=simple_query_term))
+
+
+def test_rank_topk_fielded_plan(docs):
+    fidx = build_fielded_index(
+        docs.withColumn("title", F.concat(F.lit("doc "), F.col("doc_id"))),
+        {"title": 2.0, "text": 1.0},
+    )
+    _single(rank_topk_fielded(fidx, QUERY, 10, normalize=simple_query_term))
+
+
+def test_ranked_batch_from_published_plan(spark, docs, tmp_path):
+    idx = build_simple_index(docs)
+    seg = build_segments(idx.postings, idx.doc_stats).withColumn(
+        "bucket",
+        F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(8)).cast("int"))
+    publish_segments(spark, str(tmp_path / "pub"), seg, term_buckets=8,
+                     corpus_stats=idx.corpus_stats, cluster_partitions=4)
+    nodes = _batch(ranked_batch_from_published(
+        spark, str(tmp_path / "pub"), BATCH, k=10,
+        normalize=simple_query_term))
+    assert _decodes(nodes) == _segment_scans(nodes) == 1
+
+
+def _checkpoint_plans(spark, monkeypatch) -> list:
+    """Record the plan nodes of every frame checkpointed from now on."""
+    seen = []
+    cls = type(spark.range(1))  # the concrete (classic) DataFrame class
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(_nodes(self._jdf.queryExecution().executedPlan()))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return seen
+
+
+def test_refreshed_topk_plan_decodes_once(spark, refreshed, monkeypatch):
+    checkpointed = _checkpoint_plans(spark, monkeypatch)
+    nodes = _single(R.refreshed_topk(spark, refreshed, CRAWL_QUERY, k=10))
+    assert len(checkpointed) == 1
+    _check_common(checkpointed[0])
+    # one decode per snapshot layer's scan (base + delta), all inside
+    # the checkpoint; the scoring plan only reads the checkpoint
+    assert _decodes(checkpointed[0]) == _segment_scans(checkpointed[0]) >= 2
+    assert _decodes(nodes) == _segment_scans(nodes) == 0
+    assert "RDDScanExec" in _names(nodes)
+
+
+def test_refreshed_topk_batch_plan(spark, refreshed, monkeypatch):
+    checkpointed = _checkpoint_plans(spark, monkeypatch)
+    nodes = _batch(R.refreshed_topk_batch(spark, refreshed, CRAWL_BATCH,
+                                          k=10))
+    assert len(checkpointed) == 1
+    _check_common(checkpointed[0])
+    # one decode per snapshot layer's scan (base + delta), all inside
+    # the checkpoint; the scoring plan only reads the checkpoint
+    assert _decodes(checkpointed[0]) == _segment_scans(checkpointed[0]) >= 2
+    assert _decodes(nodes) == _segment_scans(nodes) == 0
+
+
+def test_literal_weights_keep_quotes_and_backslashes(spark):
+    terms = ["it's", "a\\b", "x'\\'y"]
+    keys = spark.range(1).select(
+        F.explode(_literal_map({t: 1 for t in terms}))).collect()
+    assert sorted(r["key"] for r in keys) == sorted(terms)
+
+    postings = spark.createDataFrame(
+        [(t, d, d + 1, 10) for d, t in enumerate(terms)],
+        "term string, doc_id long, tftd int, doc_length int")
+    qid = "q'\\1"
+    got = {(r["query_id"], r["doc_id"]): r["score"] for r in score(
+        postings, {qid: {t: 2 for t in terms}}, (10.0, 10.0)).collect()}
+    wqt = math.log((10 - 1 + 0.5) / (1 + 0.5))
+    want = {(qid, d): 2 * wqt * 2.2 * (d + 1) / (1.2 + d + 1)
+            for d in range(len(terms))}
+    assert got.keys() == want.keys()
+    for key, v in want.items():
+        assert got[key] == pytest.approx(v, rel=1e-12)

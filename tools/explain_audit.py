@@ -1,7 +1,9 @@
 """Print the physical plans of the engine's hot paths (the audit
 recorded in PERF.md) — run `python tools/explain_audit.py` to verify
 partition pruning, filter pushdown, broadcast joins, and
-TakeOrderedAndProject claims against the live Catalyst output."""
+TakeOrderedAndProject claims against the live Catalyst output. The
+ranked entry points' plan claims are asserted by
+tests/test_scorer_plans.py instead."""
 
 from __future__ import annotations
 
@@ -12,13 +14,14 @@ sys.path.insert(0, ".")
 
 
 def main() -> None:
+    from pyspark.sql import functions as F
+
     from searchengine_spark.indexing.build import (
         read_index,
         term_filter,
         write_index,
     )
     from searchengine_spark.indexing.simple import build_simple_index, simple_query_term
-    from searchengine_spark.queries.ranked import rank_topk
     from searchengine_spark.session import get_spark
 
     spark = get_spark("explain-audit", cores=4, shuffle_partitions=4)
@@ -33,38 +36,6 @@ def main() -> None:
     print("PushedFilters [EqualTo(term,...)], ReadSchema without waste")
     print("=" * 70)
     term_filter(pidx.postings, ["table"], pidx.term_buckets).explain("formatted")
-
-    print("=" * 70)
-    print("BM25 TOP-K — expect TakeOrderedAndProject, partial+final")
-    print("HashAggregate, BroadcastHashJoin on term/doc_id")
-    print("=" * 70)
-    rank_topk(pidx, "table scan merge", "bm25", 10,
-              normalize=simple_query_term).explain()
-
-    print("=" * 70)
-    print("RANKED PROJECTION — positions column must NOT be read")
-    print("=" * 70)
-    from pyspark.sql import functions as F
-
-    pidx.postings.filter(F.col("term") == "table").select(
-        "doc_id", "tftd"
-    ).explain("formatted")
-
-    print("=" * 70)
-    print("CHAMPION TOP-K — expect: champion candidates BROADCAST to the")
-    print("term-pruned postings scan (left_semi BroadcastHashJoin), then")
-    print("one partial-agg groupBy(doc_id), TakeOrderedAndProject; the")
-    print("two-stage champion build shows two bounded window sorts, no")
-    print("global sort")
-    print("=" * 70)
-    from searchengine_spark.queries.ranked import (
-        champion_lists,
-        rank_topk_champions,
-    )
-
-    champs = champion_lists(idx, r=32)
-    rank_topk_champions(idx, champs, "table scan merge", "bm25", 10,
-                        normalize=simple_query_term).explain()
 
     print("=" * 70)
     print("JACCARD VERIFY — candidate x shingle joins must be SortMergeJoin")
@@ -86,69 +57,18 @@ def main() -> None:
     print("delta-sized); the cold path is scan->filter->passthrough with")
     print("no Exchange; only hot groups reach the decode/re-encode UDFs")
     print("=" * 70)
-    from pyspark.sql import functions as F2
-
     from searchengine_spark.indexing.segments import (
         build_segments,
         merge_segments,
     )
 
     base_seg = build_segments(idx.postings, idx.doc_stats, block_span=64)
-    recrawl = docs.filter(F2.col("doc_id") % 7 == 0).select(
-        "doc_id", F2.concat("text", F2.lit(" refresh")).alias("text"))
+    recrawl = docs.filter(F.col("doc_id") % 7 == 0).select(
+        "doc_id", F.concat("text", F.lit(" refresh")).alias("text"))
     didx = build_simple_index(recrawl)
     delta_seg = build_segments(didx.postings, didx.doc_stats, block_span=64)
     merge_segments(base_seg, delta_seg, superseded=recrawl.select("doc_id"),
                    block_span=64).explain()
-
-    print("=" * 70)
-    print("BATCH SERVE FROM PUBLISHED SNAPSHOT — both scans must carry")
-    print("PushedFilters [In(bucket,...), In(term,...)]; the dft scan's")
-    print("ReadSchema is (term, df_block, bucket) ONLY (doc frequencies")
-    print("from block metadata, zero posting bytes); the decode scan has")
-    print("no positions column; WindowGroupLimit sits BELOW the final")
-    print("exchange (map-side top-k pruning)")
-    print("=" * 70)
-    from searchengine_spark.pipeline.index_pipeline import publish_segments
-    from searchengine_spark.queries.serve import ranked_batch_from_published
-
-    pub = tempfile.mkdtemp(prefix="audit_pub_")
-    seg8 = build_segments(idx.postings, idx.doc_stats).withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(8)).cast("int"))
-    publish_segments(spark, pub, seg8, term_buckets=8,
-                     corpus_stats=idx.corpus_stats, cluster_partitions=4)
-    ranked_batch_from_published(
-        spark, pub, {"qa": "table scan", "qb": "merge join"}, k=10,
-        normalize=simple_query_term).explain("formatted")
-
-    print("=" * 70)
-    print("MERGE-ON-READ REFRESH TOP-K — the pruned-file scan list must")
-    print("only contain the query buckets' files (planned from manifest")
-    print("stats, so no In(bucket) filter remains to push); the delete")
-    print("reconcile must be a BroadcastHashJoin (delete side is")
-    print("delta-sized); the final top-k is TakeOrderedAndProject")
-    print("=" * 70)
-    import searchengine_spark.pipeline.refresh as R
-    from searchengine_spark.corpus import pages_df
-    from searchengine_spark.sources.snapshots import SnapshotTable
-
-    root = tempfile.mkdtemp(prefix="audit_refresh_")
-    pr, ir = f"{root}/pages", f"{root}/idx"
-    pages = SnapshotTable(pr)
-    base = pages_df(spark, 300, seed=42, partitions=4)
-    pages.commit(base, mode="overwrite", note="crawl v0")
-    R.build_pages_index(spark, pr, ir, term_buckets=16)
-    recrawl = (
-        base.limit(20)
-        .withColumn("text", F2.concat("text", F2.lit(" refreshed")))
-        .withColumn("html", F2.col("text").cast("binary"))
-        .withColumn("warc_ts",
-                    F2.col("warc_ts") + F2.expr("interval 10 days"))
-    )
-    pages.commit(recrawl, note="crawl v1 re-crawl")
-    R.refresh_pages_index(spark, pr, ir)
-    R.refreshed_topk(spark, ir, "table scan", k=10).explain("formatted")
 
     print("=" * 70)
     print("SNIPPETS — hits bounded by a BROADCAST semi-join to the k")
@@ -175,23 +95,6 @@ def main() -> None:
                       normalize=simple_query_term).explain("formatted")
 
     print("=" * 70)
-    print("BM25F TOP-K — term-pruned postings filter, two tiny broadcast")
-    print("joins, ONE partial-agged groupBy(doc_id), TakeOrderedAndProject")
-    print("(the rank_topk plan over the fielded postings)")
-    print("=" * 70)
-    from searchengine_spark.indexing.fielded import (
-        build_fielded_index,
-        rank_topk_fielded,
-    )
-
-    fidx = build_fielded_index(
-        docs.withColumn("title", F.concat(F.lit("doc "), F.col("doc_id"))),
-        {"title": 2.0, "text": 1.0},
-    )
-    rank_topk_fielded(fidx, "table scan", 10,
-                      normalize=simple_query_term).explain()
-
-    print("=" * 70)
     print("HYBRID ANN ARM (round 5) — the embeddings scan must carry the")
     print("sign-LSH bucket predicate as a DataFilter directly on the")
     print("FileScan (partition pruning once the table is written")
@@ -204,17 +107,6 @@ def main() -> None:
     qv = [float(v) for v in emb.filter(F.col("vec_id") == 0)
           .select("embedding").collect()[0][0]]
     dense_topk(emb, qv, 20, dense="ann", nbits=4).explain("formatted")
-
-    print("=" * 70)
-    print("MERGE-ON-READ BATCH REPLAY (round 5) — ONE decode of the")
-    print("union-of-terms bucket files, delete reconcile broadcast, the")
-    print("(query_id, term, mult) fan-out broadcast, ONE partial-agg")
-    print("shuffle on (query_id, doc_id), per-query WindowGroupLimit —")
-    print("the whole query log in one job")
-    print("=" * 70)
-    R.refreshed_topk_batch(
-        spark, ir, {"qa": "table scan", "qb": "merge join"}, k=10
-    ).explain("formatted")
 
 
 if __name__ == "__main__":
