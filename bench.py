@@ -470,6 +470,7 @@ def run_dedup_e2e(queries: dict, extra: dict) -> None:
         a, b = sorted(ws)[:2]
         return b > 1.3 * a
 
+    drift = None
     try:
         walls: list[float] = []
         counts: dict = {}
@@ -478,10 +479,12 @@ def run_dedup_e2e(queries: dict, extra: dict) -> None:
             s.catalog.clearCache()
             wall, c = one_trial()
             walls.append(wall)
-            if counts:
+            if counts and c != counts:
                 # the pipeline is deterministic: any count drift across
-                # trials is a bug worth failing the artifact over
-                assert c == counts, f"count drift across trials: {c} vs {counts}"
+                # trials is a bug worth failing the artifact over, so it
+                # is raised past the section's error recording below
+                drift = f"count drift across trials: {c} vs {counts}"
+                break
             counts = c
             n_trials += 1
             if n_trials >= DEDUP_TRIALS and (
@@ -511,6 +514,8 @@ def run_dedup_e2e(queries: dict, extra: dict) -> None:
         extra["dedup_e2e"] = {"error": str(exc)[:500], "n_docs": n_docs}
     finally:
         s.stop()
+    if drift:
+        raise RuntimeError(drift)
 
 
 def run_refresh_serve(queries: dict, extra: dict) -> None:

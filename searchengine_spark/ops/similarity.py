@@ -9,11 +9,13 @@ Scale notes
   ``aggregate(zip_with(...))`` pass over n rows, then
   TakeOrderedAndProject — embarrassingly parallel, no shuffle.
 * Sign-LSH: bucket = sign-bit signature of the first ``nbits``
-  dimensions. Bucketing is a narrow map; ANN queries prune to one
-  bucket (candidate set ~ n / 2^nbits). Hamming-radius probing extends
-  recall by scanning neighbor buckets. For production-recall ANN an IVF
-  (k-means coarse quantizer) drops in the same shape: assign → bucket
-  column → partition pruning.
+  dimensions. Bucketing is a narrow map; ``ann_topk`` scans exactly the
+  query's one bucket (candidate set ~ n / 2^nbits) and probes no
+  neighbor buckets, so a near vector across a sign boundary is missed
+  and a sparse bucket returns fewer than k rows. ``IvfIndex`` (a
+  k-means coarse quantizer probing the ``n_probe`` nearest cells) is
+  the higher-recall path in the same shape: assign → bucket column →
+  partition pruning.
 """
 
 from __future__ import annotations

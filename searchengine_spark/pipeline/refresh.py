@@ -68,8 +68,8 @@ from ..queries.ranked import (
     score,
     top_k,
 )
-from ..queries.wand import _apply_deletes, wand_topk
-from ..sources.snapshots import SnapshotTable
+from ..queries.wand import wand_topk
+from ..sources.snapshots import SnapshotTable, drop_deleted
 from ..streaming.ingest import analyze_pages
 from .index_pipeline import PublishedScalars
 
@@ -254,27 +254,18 @@ def refresh_pages_index(
         analyzed.unpersist()
 
 
-def published_deletes(spark: SparkSession, index_root: str,
-                      version: int | None = None) -> DataFrame | None:
-    """(doc_id, _del_seq) — max delete seq per superseded doc, or None
-    for a delete-free snapshot.  Delta-sized; consumers broadcast it."""
-    dele = SnapshotTable(index_root).delete_rows(spark, version)
-    if dele is None:
-        return None
-    return dele.groupBy("doc_id").agg(F.max("_seq").alias("_del_seq"))
-
-
 def _published_segments(spark: SparkSession, index_root: str,
                         terms: list[str] | None, version: int | None):
     """(segments planned down to the terms' buckets — carrying ``_seq``
-    when the snapshot has deletes —, deletes or None, table properties)."""
+    when the snapshot has deletes —, the snapshot's ``delete_rows`` or
+    None, table properties).  Built from manifests alone: no Spark job."""
     tbl = SnapshotTable(index_root)
     props = tbl.properties(version)
     tb = props.get("term_buckets")
     preds = None
     if terms and tb:
         preds = [("bucket", "in", sorted({term_bucket(t, tb) for t in terms}))]
-    dele = published_deletes(spark, index_root, version)
+    dele = tbl.delete_rows(spark, version)
     seg = tbl.read(spark, version=version, predicates=preds,
                    apply_deletes=False, with_seq=dele is not None)
     return seg, dele, props
@@ -297,7 +288,9 @@ def published_postings(
     postings = decode_postings(
         seg, terms=None, with_positions=with_positions,
         passthrough=("_seq",) if dele is not None else ())
-    return _apply_deletes(postings, dele)
+    if dele is not None:
+        postings = drop_deleted(postings, dele).drop("_seq")
+    return postings
 
 
 def _refreshed_scores(spark: SparkSession, index_root: str,
@@ -486,8 +479,9 @@ def maybe_rewrite_pages_index(
     refreshes).  Thresholds are metadata-only (``maintenance_stats``);
     defaults compact when superseded-or-new doc deletes exceed 20% of
     live docs or more than 8 delta layers have stacked up — past
-    either, per-read reconcile work (delete broadcast + seq filter per
-    layer) and WAND's stale-bound slack stop being cheap.
+    either, per-read reconcile work (one scan per layer, and a broadcast
+    anti-join whose build side holds every delete row) and WAND's
+    stale-bound slack stop being cheap.
 
     Returns ``(compacted, current_version, stats_before)``.
     """

@@ -44,6 +44,7 @@ from pyspark.sql.window import Window
 
 from ..indexing.build import term_filter
 from ..indexing.segments import decode_postings
+from ..sources.snapshots import drop_deleted
 from .ranked import (
     _literal_map,
     _wqt,
@@ -79,10 +80,13 @@ def wand_topk(
     main.py:463-467).
 
     ``deletes`` — merge-on-read serving from a refreshed snapshot
-    (pipeline/refresh.py): a delta-sized (doc_id, _del_seq) frame;
+    (pipeline/refresh.py): the snapshot's delta-sized (doc_id, _seq)
+    ``delete_rows`` frame, one row per delete commit of a doc;
     ``segments`` must then carry the snapshot layer's ``_seq`` column.
-    Superseded postings (row seq < the doc's delete seq) are dropped at
-    decode time, so results never contain a stale document version.
+    Superseded postings (a delete of the doc with a greater seq than
+    the row's) are dropped at decode time by the snapshot layer's
+    ``drop_deleted``, so results never contain a stale document
+    version.
     Like Lucene serving an unmerged index with liveDocs, the METADATA
     side (dft→wqt, block maxima) still counts superseded postings
     until a rewrite: bounds stay safe upper bounds and θ is exact over
@@ -161,8 +165,9 @@ def wand_topk(
         postings = decode_postings(seg_subset, list(terms),
                                    term_buckets=None, with_positions=False,
                                    passthrough=tuple(seq_cols))
-        return score(_apply_deletes(postings, deletes), {"": terms},
-                     scalars, "bm25", dft=dft_df)
+        if deletes is not None:
+            postings = drop_deleted(postings, deletes).drop("_seq")
+        return score(postings, {"": terms}, scalars, "bm25", dft=dft_df)
 
     # 3. θ = k-th best exact score among champion docs, −∞ when the
     # champions cover < k docs — a 1-row aggregate, broadcast into the
@@ -186,22 +191,6 @@ def wand_topk(
     )
     survivors = seg.join(F.broadcast(keep_blocks), "block")
     return top_k(exact_scores(survivors), k)
-
-
-def _apply_deletes(postings: DataFrame,
-                   deletes: DataFrame | None) -> DataFrame:
-    """Sequence-number delete rule on decoded postings: drop a row when
-    the doc has a delete with seq GREATER than the row's file seq (a
-    re-add in the delete's own commit survives). ``deletes`` is
-    delta-sized → broadcast; no-op when None."""
-    if deletes is None:
-        return postings
-    return (
-        postings.join(F.broadcast(deletes), "doc_id", "left")
-        .filter(F.col("_del_seq").isNull()
-                | (F.col("_del_seq") <= F.col("_seq")))
-        .drop("_del_seq", "_seq")
-    )
 
 
 def decode_topk(

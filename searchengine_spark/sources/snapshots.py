@@ -47,11 +47,13 @@ Semantics provided (and their Iceberg analogue):
   that wrote it) and a delete file applies only to data files with a
   LOWER sequence number — so a commit that deletes a key and re-adds
   it in the same snapshot keeps the new row (Iceberg's sequence-number
-  rule).  ``read`` applies the deletes as seq-layered anti-joins when
-  the equality columns are table columns; index-shaped tables whose
-  delete key lives *inside* an encoded column (doc_ids inside VB
-  posting blocks) read with ``apply_deletes=False`` and apply
-  ``delete_rows`` after decoding (pipeline/refresh.py).
+  rule).  ``read`` applies the deletes (``drop_deleted``: one
+  broadcast anti-join over the seq-stamped layers) when the equality
+  columns are table columns; index-shaped tables whose delete key
+  lives *inside* an encoded column (doc_ids inside VB posting blocks)
+  read with ``apply_deletes=False`` and apply ``delete_rows`` after
+  decoding (pipeline/refresh.py).  Each delete-file entry records its
+  key schema, so the delete rows are planned from the manifest alone.
 * ``rewrite_deletes(spark)`` — major compaction of the delete layer:
   rewrites only the data files an existing delete file can apply to,
   carries newer files by reference, and commits a delete-free
@@ -188,12 +190,13 @@ class SnapshotTable:
         new_delete_files: list[dict] = []
         if deletes is not None:
             del_dir = os.path.join(snap_dir, "deletes")
-            deletes.select(*equality_columns).write.mode(
-                "overwrite").parquet(del_dir)
+            keys = deletes.select(*equality_columns)
+            keys.write.mode("overwrite").parquet(del_dir)
             new_delete_files = _file_lineage(self.root, del_dir)
             for f in new_delete_files:
                 f["seq"] = version
                 f["equality_columns"] = list(equality_columns)
+                f["schema"] = keys.schema.jsonValue()
         wall = time.time() - t0
 
         new_files = _file_lineage(self.root, data_dir) \
@@ -380,50 +383,53 @@ class SnapshotTable:
         else:
             # Seq-layered read: one scan per distinct sequence number
             # (= commits since the last overwrite — bounded and small
-            # with regular compaction); a delete file applies only to
-            # data files with a LOWER seq, so each layer anti-joins the
-            # deletes strictly newer than it. Delete sets are
-            # delta-sized by assumption → broadcast.
-            by_seq: dict[int, list[str]] = {}
-            for f in files:
-                by_seq.setdefault(int(f.get("seq", 0)), []).append(
-                    os.path.join(self.root, f["path"]))
-            parts = []
-            eq_cols = delete_files[0]["equality_columns"] \
-                if delete_files else []
-            for seq in sorted(by_seq):
-                part = spark.read.schema(schema).parquet(*by_seq[seq])
-                if with_seq:
-                    part = part.withColumn(
-                        "_seq", F.lit(seq).cast("int"))
-                if dele is not None:
-                    newer = dele.filter(F.col("_seq") > seq) \
-                        .select(*eq_cols).distinct()
-                    part = part.join(F.broadcast(newer), list(eq_cols),
-                                     "left_anti")
-                parts.append(part)
-            if not parts:
-                df = spark.createDataFrame([], schema)
-                if with_seq:
-                    df = df.withColumn("_seq", F.lit(0).cast("int"))
-            else:
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
+            # with regular compaction), each stamped with its ``_seq``;
+            # the union then goes through ONE broadcast anti-join with
+            # the delete rows (``drop_deleted``).
+            df = self._seq_layers(spark, files, schema)
+            if dele is not None:
+                df = drop_deleted(df, dele)
+            if not with_seq:
+                df = df.drop("_seq")
         if predicates:
             df = df.filter(_predicates_column(predicates))
         return df
 
+    def _seq_layers(self, spark: SparkSession, files: list[dict],
+                    schema: StructType | None = None) -> DataFrame:
+        """The union of one scan per sequence number over ``files``,
+        each row stamped with its file's ``_seq``.  Scans use ``schema``,
+        or else the schema recorded on that sequence number's entries."""
+        by_seq: dict[int, list[dict]] = {}
+        for f in files:
+            by_seq.setdefault(int(f.get("seq", 0)), []).append(f)
+        if not by_seq:
+            return spark.createDataFrame([], schema).withColumn(
+                "_seq", F.lit(0).cast("int"))
+        parts = [spark.read.schema(schema or StructType.fromJson(
+                     group[0]["schema"]))
+                 .parquet(*[os.path.join(self.root, f["path"])
+                            for f in group])
+                 .withColumn("_seq", F.lit(seq).cast("int"))
+                 for seq, group in sorted(by_seq.items())]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
     def delete_rows(self, spark: SparkSession,
                     version: int | None = None) -> DataFrame | None:
         """The snapshot's equality-delete rows (``equality columns`` +
-        ``_seq``, the sequence number of the commit that wrote them),
-        or None when the snapshot carries no delete files.  Consumers
-        whose delete key is not a table column (index tables: doc_ids
-        live inside encoded posting blocks) read with
-        ``apply_deletes=False`` and apply this frame after decoding:
-        drop a row when a delete with the same key has ``_seq`` GREATER
-        than the row's file seq."""
+        ``_seq``, the sequence number of the commit that wrote them;
+        a key deleted by several commits has one row per commit), or
+        None when the snapshot carries no delete files.  Planned from
+        the manifest alone: one scan per sequence number with the key
+        schema recorded at commit, so building the frame starts no
+        Spark job; an entry without a recorded schema raises
+        ``ValueError``.  Consumers whose delete key is not a table
+        column (index tables: doc_ids live inside encoded posting
+        blocks) read with ``apply_deletes=False`` and pass this frame
+        to :func:`drop_deleted` after decoding."""
         if version is None:
             version = self.current_version()
             if version is None:
@@ -431,16 +437,12 @@ class SnapshotTable:
         delete_files = self.manifest(version).get("delete_files", [])
         if not delete_files:
             return None
-        eq_cols = delete_files[0]["equality_columns"]
-        parts = []
         for f in delete_files:
-            part = spark.read.parquet(os.path.join(self.root, f["path"]))
-            parts.append(part.select(*eq_cols).withColumn(
-                "_seq", F.lit(int(f["seq"])).cast("int")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            if "schema" not in f:
+                raise ValueError(
+                    f"delete file {f['path']} has no recorded key schema "
+                    "in the manifest; its schema is never inferred")
+        return self._seq_layers(spark, delete_files)
 
     def read_appends(self, spark: SparkSession, from_version: int,
                      to_version: int | None = None) -> DataFrame:
@@ -636,7 +638,6 @@ class SnapshotTable:
         if not delete_files:
             return None
         max_del_seq = max(int(f["seq"]) for f in delete_files)
-        eq_cols = delete_files[0]["equality_columns"]
         carry = [f for f in man["data_files"]
                  if int(f.get("seq", 0)) >= max_del_seq]
         rewrite = [f for f in man["data_files"]
@@ -649,20 +650,8 @@ class SnapshotTable:
         t0 = time.time()
         new_files: list[dict] = []
         if rewrite:
-            by_seq: dict[int, list[str]] = {}
-            for f in rewrite:
-                by_seq.setdefault(int(f.get("seq", 0)), []).append(
-                    os.path.join(self.root, f["path"]))
-            parts = []
-            for seq in sorted(by_seq):
-                part = spark.read.schema(schema).parquet(*by_seq[seq])
-                newer = dele.filter(F.col("_seq") > seq) \
-                    .select(*eq_cols).distinct()
-                parts.append(part.join(F.broadcast(newer), list(eq_cols),
-                                       "left_anti"))
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = merged.unionByName(p)
+            merged = drop_deleted(
+                self._seq_layers(spark, rewrite, schema), dele).drop("_seq")
             merged.write.mode("overwrite").parquet(data_dir)
             new_files = _file_lineage(self.root, data_dir)
             for f in new_files:
@@ -719,6 +708,22 @@ class SnapshotTable:
         return {"dropped_snapshots": dropped_snapshots,
                 "dropped_files": dropped_files,
                 "retained": sorted(keep)}
+
+
+def drop_deleted(rows: DataFrame, deletes: DataFrame) -> DataFrame:
+    """The sequence-number rule: keep a row unless a delete with the
+    same equality key has ``_seq`` GREATER than the row's ``_seq`` (a
+    re-add in the delete's own commit survives).  ``rows`` carries
+    ``_seq`` and keeps it; ``deletes`` is a :meth:`SnapshotTable.delete_rows`
+    frame — delta-sized, so it is the build side of ONE broadcast
+    left-anti join, with no aggregate."""
+    keys = [c for c in deletes.columns if c != "_seq"]
+    dele = deletes.select(*[F.col(c).alias("_del_" + c)
+                            for c in deletes.columns])
+    cond = F.col("_del__seq") > F.col("_seq")
+    for c in keys:
+        cond = cond & (F.col(c) == F.col("_del_" + c))
+    return rows.join(F.broadcast(dele), cond, "left_anti")
 
 
 def _file_lineage(root: str, data_dir: str) -> list[dict]:

@@ -8,7 +8,10 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 * no ranked scan reads a positions column;
 * refreshed_topk decodes its postings once: each segment scan is decoded
   once inside the one checkpointed frame, and the scoring plan (dft and
-  scores) reads only the checkpoint.
+  scores) reads only the checkpoint;
+* the delete side of a merge-on-read read is planned from manifests:
+  building it starts no Spark job, and its broadcast holds no aggregate
+  and no shuffle.
 
 It also checks that query ids and terms holding a quote or a backslash
 survive their trip through the scorer's SQL literal text.
@@ -37,6 +40,7 @@ from searchengine_spark.queries.ranked import (
     score,
 )
 from searchengine_spark.queries.serve import ranked_batch_from_published
+from searchengine_spark.sources.snapshots import SnapshotTable
 
 SF_DIR = "/root/testdata/sf0.01"
 QUERY = "table scan merge"
@@ -151,6 +155,33 @@ def refreshed(spark, tmp_path_factory):
     return ir
 
 
+@pytest.fixture(scope="module")
+def refreshed_twice(spark, tmp_path_factory):
+    """A merge-on-read index whose deletes come from two refresh
+    commits (20, then 10 re-crawled pages)."""
+    from searchengine_spark.corpus import pages_df
+
+    root = tmp_path_factory.mktemp("plan_refresh_twice")
+    pr, ir = str(root / "pages"), str(root / "idx")
+    pages = SnapshotTable(pr)
+    base = pages_df(spark, 300, seed=7, partitions=4).cache()
+    pages.commit(base, mode="overwrite")
+    R.build_pages_index(spark, pr, ir, term_buckets=16)
+    for days, n in ((10, 20), (20, 10)):
+        pages.commit(
+            base.limit(n)
+            .withColumn("text", F.concat("text", F.lit(" refreshed crawl")))
+            .withColumn("html", F.col("text").cast("binary"))
+            .withColumn("warc_ts",
+                        F.col("warc_ts") + F.expr(f"interval {days} days")))
+        R.refresh_pages_index(spark, pr, ir)
+    base.unpersist()
+    tbl = SnapshotTable(ir)
+    deletes = tbl.manifest(tbl.current_version())["delete_files"]
+    assert len({f["seq"] for f in deletes}) == 2
+    return ir
+
+
 def test_rank_topk_plan(pidx):
     _single(rank_topk(pidx, QUERY, "bm25", 10, normalize=simple_query_term))
 
@@ -243,3 +274,35 @@ def test_literal_weights_keep_quotes_and_backslashes(spark):
     assert got.keys() == want.keys()
     for key, v in want.items():
         assert got[key] == pytest.approx(v, rel=1e-12)
+
+
+def test_delete_rows_start_no_job(spark, refreshed_twice):
+    sc = spark.sparkContext
+    sc.setJobGroup("delete-rows-plan", "build the delete side")
+    try:
+        dele = SnapshotTable(refreshed_twice).delete_rows(spark)
+        R._published_segments(spark, refreshed_twice, ["crawl"], None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "delete-rows-plan")) == []
+    assert dele is not None and dele.count() == 30
+
+
+def test_refreshed_topk_delete_broadcast_has_no_aggregate(
+        spark, refreshed_twice, monkeypatch):
+    checkpointed = _checkpoint_plans(spark, monkeypatch)
+    _single(R.refreshed_topk(spark, refreshed_twice, CRAWL_QUERY, k=10))
+    assert len(checkpointed) == 1
+    delete_sides = []
+    for node in checkpointed[0]:
+        if node.getClass().getSimpleName() != "BroadcastExchangeExec":
+            continue
+        side = _nodes(node)
+        if any(n.getClass().getSimpleName() == "FileSourceScanExec"
+               and "/deletes" in n.relation().location().rootPaths()
+               .mkString(",") for n in side):
+            delete_sides.append(_names(side))
+    assert len(delete_sides) == 1
+    assert not {"HashAggregateExec", "ShuffleExchangeExec"} \
+        & set(delete_sides[0]), delete_sides[0]

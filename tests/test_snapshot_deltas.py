@@ -4,6 +4,9 @@ merge-on-read, delete-aware compaction classes, and rewrite_deletes
 major compaction — the Iceberg v2 semantics the O(delta) index refresh
 (pipeline/refresh.py) is built on."""
 
+import json
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -176,3 +179,81 @@ def test_expire_refcounts_delete_files(spark, table):
     table.expire_snapshots(keep_last=2)
     got = sorted(r.doc_id for r in table.read(spark).collect())
     assert got == [2, 3]  # delete file survived expiry of its snapshot
+
+
+# Three commits: key 1 is deleted at seq 1 (and re-added there) and
+# again at seq 2; key 3 is deleted and re-added at seq 2.
+_LAYERS = [
+    ([(1, "a"), (2, "b"), (3, "c")], None),
+    ([(1, "a1"), (4, "d")], [1]),
+    ([(3, "c2"), (5, "e")], [1, 3]),
+]
+
+
+def _max_seq_rule(layers):
+    """Rows the max-delete-seq rule keeps: (doc_id, text, seq) survives
+    unless the key's greatest delete seq is above the row's seq."""
+    max_del = {}
+    for seq, (_rows, dels) in enumerate(layers):
+        for key in dels or []:
+            max_del[key] = max(max_del.get(key, -1), seq)
+    return sorted((doc, text, seq)
+                  for seq, (rows, _dels) in enumerate(layers)
+                  for doc, text in rows
+                  if max_del.get(doc, -1) <= seq)
+
+
+def test_sequence_rule_matches_max_delete_seq(spark, tmp_path):
+    """read(), rewrite_deletes() and refresh.published_postings keep
+    exactly the rows the max-delete-seq rule keeps, with a key deleted
+    by two commits at different seqs."""
+    from searchengine_spark.indexing.segments import build_segments
+    from searchengine_spark.pipeline.refresh import published_postings
+
+    want = _max_seq_rule(_LAYERS)
+    assert [(d, t) for d, t, _ in want] == [(2, "b"), (3, "c2"), (4, "d"),
+                                            (5, "e")]
+
+    table = SnapshotTable(str(tmp_path / "tbl"))
+    for seq, (rows, dels) in enumerate(_LAYERS):
+        table.commit(_df(spark, rows),
+                     mode="append" if seq else "overwrite",
+                     deletes=_ids(spark, dels) if dels else None,
+                     equality_columns=["doc_id"] if dels else None)
+    assert sorted((r.doc_id, r.text, r._seq) for r in
+                  table.read(spark, with_seq=True).collect()) == want
+    table.rewrite_deletes(spark)
+    assert sorted((r.doc_id, r.text) for r in table.read(spark).collect()) \
+        == [(d, t) for d, t, _ in want]
+
+    # the index-table shape: doc_ids inside encoded segments, the row's
+    # seq carried as its tftd
+    index = SnapshotTable(str(tmp_path / "idx"))
+    for seq, (rows, dels) in enumerate(_LAYERS):
+        postings = spark.createDataFrame(
+            [("t", doc, seq + 1, [0], 10) for doc, _text in rows],
+            "term string, doc_id long, tftd int, positions array<int>, "
+            "doc_length int")
+        index.commit(build_segments(postings, None),
+                     mode="append" if seq else "overwrite",
+                     deletes=_ids(spark, dels) if dels else None,
+                     equality_columns=["doc_id"] if dels else None)
+    got = published_postings(spark, index.root, None, with_positions=False)
+    assert sorted((r.doc_id, r.tftd) for r in got.collect()) \
+        == sorted((d, s + 1) for d, _t, s in want)
+
+
+def test_delete_entry_without_schema_is_refused(spark, appended):
+    v = appended.commit(None, deletes=_ids(spark, [4]),
+                        equality_columns=["doc_id"])
+    man = appended.manifest(v)
+    assert man["delete_files"][0]["schema"]["fields"][0]["name"] == "doc_id"
+    for f in man["delete_files"]:
+        del f["schema"]
+    path = os.path.join(appended.root, f"snap-{v:06d}", "manifest.json")
+    with open(path, "w") as fh:
+        json.dump(man, fh)
+    with pytest.raises(ValueError, match=man["delete_files"][0]["path"]):
+        appended.delete_rows(spark)
+    with pytest.raises(ValueError, match="no recorded key schema"):
+        appended.read(spark)
