@@ -1,4 +1,4 @@
-"""Compressed, block-split posting-list segments — the Spark-native
+"""Block-split posting-list segments — the Spark-native
 rebuild of the reference's disk index format
 (/root/reference/diskindexwriter.py:58-114: per term ``VB(df)`` then per
 posting ``VB(docid_gap) VB(tftd) VB(position_gaps...)``), redesigned for
@@ -10,20 +10,24 @@ posting ``VB(docid_gap) VB(tftd) VB(position_gaps...)``), redesigned for
   doc) can never produce a straggler group — the skew handling the
   north rule requires, with no window and no salting round-trip.
   Spark's partial aggregation performs the two-stage combine.
-* **Delta + VB compression** (vb.py, numpy-vectorized inside an
-  Arrow-batched pandas UDF): doc-id gaps within block, per-posting
-  tftds, per-posting position gaps, concatenated; ``pos_lens`` VB array
-  carries the per-posting position counts so positions decode without
-  consulting tftd (they are equal by construction, but storing both
-  mirrors the reference format's redundancy).
+* **Plain Parquet arrays** per (term, block) group, sorted by doc_id:
+  ``doc_ids array<long>`` (absolute ids, not gaps), ``tftds array<int>``,
+  ``positions array<array<int>>`` and ``doc_lengths array<int>``.  The
+  reference's VB+gap codec (vb.py) suits a flat byte file read with
+  seeks; inside Parquet it is an opaque binary the writer cannot
+  dictionary-encode, and decoding it needs a Python worker.  Arrays let
+  the Parquet writer dictionary-encode each leaf column (on url-hash
+  ids that packs an 8-byte id into a few bits) and decode in the JVM as
+  ``explode(arrays_zip(...))``.  On small dense ids, where VB gaps take
+  one byte, the arrays are larger than VB was.
 * **Block-max metadata**: per (term, block) ``df_block``, ``max_tftd``
   and ``min_doc_length`` — the inputs to a BM25 score upper bound —
   feed block-max WAND pruning (queries/wand.py; Broder et al. 2003,
   Ding & Suel 2011 as surfaced in PAPERS.md).
-* **Columnar position-skipping**: positions live in their own binary
-  column; ranked reads project only (docids_vb, tftds_vb) — the
+* **Columnar position-skipping**: positions live in their own column;
+  ranked reads project only (doc_ids, tftds, doc_lengths) — the
   columnar replacement for the reference's byte-skipping read path
-  (/root/reference/indexes/diskpositionalindex.py:178-186).
+  (``indexes/diskpositionalindex.py``).
 * Written parquet partitioned by ``bucket = crc32(term) % n`` so a
   query's term lookups prune to a handful of partition directories
   (the Spark analogue of the SQLite term→offset B-tree,
@@ -32,53 +36,19 @@ posting ``VB(docid_gap) VB(tftd) VB(position_gaps...)``), redesigned for
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from .build import SparkIndex
-from .vb import delta_decode, delta_encode, vb_decode, vb_encode
 
 DEFAULT_BLOCK_SPAN = 4096
-
-ENC_SCHEMA = T.StructType(
-    [
-        T.StructField("docids_vb", T.BinaryType()),
-        T.StructField("tftds_vb", T.BinaryType()),
-        T.StructField("pos_lens_vb", T.BinaryType()),
-        T.StructField("positions_vb", T.BinaryType()),
-        T.StructField("doc_lengths_vb", T.BinaryType()),
-    ]
-)
-
-
-def _encode_batch(doc_ids: pd.Series, tftds: pd.Series,
-                  positions: pd.Series, doc_lengths: pd.Series) -> pd.DataFrame:
-    """Encode one Arrow batch of (term, block) posting groups. Inputs
-    are arrays-per-row (already sorted by doc_id via sort_array)."""
-    out = {k.name: [] for k in ENC_SCHEMA.fields}
-    for dids, tfs, poss, dls in zip(doc_ids, tftds, positions, doc_lengths):
-        out["docids_vb"].append(vb_encode(delta_encode(list(dids))))
-        out["tftds_vb"].append(vb_encode(list(tfs)))
-        out["pos_lens_vb"].append(vb_encode([len(p) for p in poss]))
-        flat = []
-        for p in poss:
-            flat.extend(delta_encode(list(p)))
-        out["positions_vb"].append(vb_encode(flat))
-        out["doc_lengths_vb"].append(vb_encode([int(d) for d in dls]))
-    return pd.DataFrame(out)
-
-
-encode_udf = F.pandas_udf(_encode_batch, ENC_SCHEMA)
 
 
 def build_segments(postings: DataFrame, doc_stats: DataFrame,
                    block_span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
-    """postings(term, doc_id, tftd, positions) → compressed segments:
-    (term, block, df_block, max_tftd, min_doc_length, *_vb binary).
+    """postings(term, doc_id, tftd, positions) → block-split segments:
+    (term, block, df_block, max_tftd, min_doc_length, doc_ids, tftds,
+    positions, doc_lengths), the arrays sorted by doc_id.
 
-    Per-posting doc_lengths ride INSIDE the segment (``doc_lengths_vb``)
+    Per-posting doc_lengths ride INSIDE the segment (``doc_lengths``)
     so ranked/WAND reads score without any doc_stats join — the segment
     is self-contained the way the reference's postings.bin +
     docWeights.bin pair is after a single seek. Uses the denormalized
@@ -98,22 +68,19 @@ def build_segments(postings: DataFrame, doc_stats: DataFrame,
         F.count("*").cast("long").alias("df_block"),
         F.max("tftd").cast("int").alias("max_tftd"),
         F.min("doc_length").cast("double").alias("min_doc_length"),
-        F.sort_array(
-            F.collect_list(F.struct("doc_id", "tftd", "positions", "doc_length"))
-        ).alias("ps"),
+        F.sort_array(F.collect_list(F.struct(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("tftd").cast("int").alias("tftd"),
+            F.col("positions").cast("array<int>").alias("positions"),
+            F.col("doc_length").cast("int").alias("doc_length"),
+        ))).alias("ps"),
     )
-    enc = grouped.withColumn(
-        "enc",
-        encode_udf(F.col("ps.doc_id"), F.col("ps.tftd"), F.col("ps.positions"),
-                   F.col("ps.doc_length")),
-    )
-    return enc.select(
+    return grouped.select(
         "term", "block", "df_block", "max_tftd", "min_doc_length",
-        F.col("enc.docids_vb").alias("docids_vb"),
-        F.col("enc.tftds_vb").alias("tftds_vb"),
-        F.col("enc.pos_lens_vb").alias("pos_lens_vb"),
-        F.col("enc.positions_vb").alias("positions_vb"),
-        F.col("enc.doc_lengths_vb").alias("doc_lengths_vb"),
+        F.col("ps.doc_id").alias("doc_ids"),
+        F.col("ps.tftd").alias("tftds"),
+        F.col("ps.positions").alias("positions"),
+        F.col("ps.doc_length").alias("doc_lengths"),
     )
 
 
@@ -150,7 +117,7 @@ def read_segments(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
 
 SEG_COLS = [
     "term", "block", "df_block", "max_tftd", "min_doc_length",
-    "docids_vb", "tftds_vb", "pos_lens_vb", "positions_vb", "doc_lengths_vb",
+    "doc_ids", "tftds", "positions", "doc_lengths",
 ]
 
 
@@ -162,10 +129,10 @@ def hash_block_span(n_docs: int, docs_per_block: int = 512) -> int:
     scaled to the ID SPACE: with dense ids a span of 4096 means 4096
     docs per block, but with hash ids it means 4096 *hash units* —
     ~2^51 blocks, one posting per (term, block) group, which destroys
-    both the encode batching (one Python-loop group per posting) and
-    the delta/VB compression (no gaps to compress). Measured on the
-    20k-doc pages corpus: 1.0 postings/group and a 131 s segment
-    commit vs ~8 s once the span matches the space.
+    the block-max metadata (one bound per posting) and multiplies the
+    per-row overhead of every array. Measured on the 20k-doc pages
+    corpus with the earlier VB encoder: 1.0 postings/group and a 131 s
+    segment commit vs ~8 s once the span matches the space.
 
     The span is a build-time property recorded in the index table
     (``properties["block_span"]``) and reused verbatim by refresh,
@@ -193,17 +160,17 @@ def merge_segments(base: DataFrame, delta: DataFrame,
     * a base (term, block) group is rewritten only when (a) the delta
       writes the same (term, block), or (b) its block holds a
       superseded doc_id (stale postings must be dropped). Everything
-      else passes through as untouched columnar bytes — no decode, no
-      re-encode, no shuffle of cold data (the anti-join against the
+      else passes through as untouched columnar rows — no decode, no
+      regroup, no shuffle of cold data (the anti-join against the
       broadcast collision set is exchange-free on the base side).
     * ``superseded`` (doc_ids whose old postings the delta replaces —
       re-crawled or deleted pages) is delta-sized by assumption and is
       broadcast; pass ``None`` for pure appends (fresh doc_ids).
     * hot groups decode → drop superseded → union the decoded delta →
-      re-encode via :func:`build_segments`, so merged bytes are
-      bit-identical to a from-scratch build of the logical union corpus
-      (the encoder is deterministic; asserted by pytest and the
-      ``segments_merge`` gate entry).
+      regroup via :func:`build_segments`, so merged rows are
+      identical to a from-scratch build of the logical union corpus
+      (the grouping is deterministic: arrays sorted by doc_id;
+      asserted by pytest and the ``segments_merge`` gate entry).
 
     Scale shape: with B = blocks touched by the delta, the rewrite work
     is O(B · block_span) postings regardless of index size. A uniformly
@@ -243,7 +210,7 @@ def merge_segments(base: DataFrame, delta: DataFrame,
 
 def biword_as_segments(biword: DataFrame,
                        block_span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
-    """Encode the biword index (term "t1 t2" → doc_ids;
+    """Store the biword index (term "t1 t2" → doc_ids;
     /root/reference/indexes/positionalinvertedindex.py biword map, fed
     by main.py:413-418's two-term fast path) through the SAME segment
     format so one published table serves the whole query surface.
@@ -267,52 +234,6 @@ def biword_as_segments(biword: DataFrame,
     )
 
 
-DEC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_ids", T.ArrayType(T.LongType())),
-        T.StructField("tftds", T.ArrayType(T.IntegerType())),
-        T.StructField("positions", T.ArrayType(T.ArrayType(T.IntegerType()))),
-        T.StructField("doc_lengths", T.ArrayType(T.IntegerType())),
-    ]
-)
-
-
-def _decode_batch(docids_vb: pd.Series, tftds_vb: pd.Series,
-                  pos_lens_vb: pd.Series, positions_vb: pd.Series,
-                  doc_lengths_vb: pd.Series) -> pd.DataFrame:
-    rows = {"doc_ids": [], "tftds": [], "positions": [], "doc_lengths": []}
-    for dvb, tvb, lvb, pvb, dlvb in zip(docids_vb, tftds_vb, pos_lens_vb,
-                                        positions_vb, doc_lengths_vb):
-        dids = delta_decode(vb_decode(bytes(dvb)))
-        rows["doc_ids"].append([int(x) for x in dids])
-        rows["tftds"].append([int(x) for x in vb_decode(bytes(tvb))])
-        if dlvb is None or len(dlvb) == 0:
-            # Fail loudly rather than zero-fill: a doc_length of 0
-            # would silently inflate BM25 wdt for every posting in the
-            # segment. Only segments written by a pre-doc_lengths
-            # format could hit this — they must be rebuilt.
-            raise ValueError(
-                "segment is missing doc_lengths_vb (written by an old "
-                "format?) — rebuild segments with build_segments()"
-            )
-        rows["doc_lengths"].append([int(x) for x in vb_decode(bytes(dlvb))])
-        if pvb is None or len(pvb) == 0:
-            rows["positions"].append([[] for _ in dids])
-            continue
-        lens = vb_decode(bytes(lvb))
-        flat = vb_decode(bytes(pvb))
-        poss, off = [], 0
-        for ln in lens:
-            ln = int(ln)
-            poss.append([int(x) for x in delta_decode(flat[off:off + ln])])
-            off += ln
-        rows["positions"].append(poss)
-    return pd.DataFrame(rows)
-
-
-decode_udf = F.pandas_udf(_decode_batch, DEC_SCHEMA)
-
-
 def decode_postings(segments: DataFrame, terms: list[str] | None,
                     term_buckets: int | None = None,
                     with_positions: bool = True,
@@ -327,46 +248,29 @@ def decode_postings(segments: DataFrame, terms: list[str] | None,
     sequence number, which the merge-on-read delete rule keys on)."""
     from .build import term_filter
 
+    if "docids_vb" in segments.columns:
+        raise ValueError(
+            "segments are in the retired VB format (docids_vb binary "
+            "columns) — rebuild them with build_segments()")
     seg = segments if terms is None else term_filter(segments, terms, term_buckets)
-    extra = list(passthrough)
-    if with_positions:
-        dec = seg.withColumn(
-            "d",
-            decode_udf("docids_vb", "tftds_vb", "pos_lens_vb", "positions_vb",
-                       "doc_lengths_vb"),
-        ).select(
-            "term", *extra,
-            F.explode(
-                F.arrays_zip("d.doc_ids", "d.tftds", "d.positions",
-                             "d.doc_lengths")
-            ).alias("z"),
-        )
-        return dec.select(
-            "term", *extra,
-            F.col("z.doc_ids").alias("doc_id"),
-            F.col("z.tftds").alias("tftd"),
-            F.col("z.positions").alias("positions"),
-            F.col("z.doc_lengths").alias("doc_length"),
-        )
-    # Ranked read: skip the positions columns entirely (columnar
-    # position-skip, R2) but decode the in-segment doc_lengths — the
+    # Ranked reads skip the positions column entirely (columnar
+    # position-skip, R2) but keep the in-segment doc_lengths — the
     # scorer needs no doc_stats join.
-    dec = seg.withColumn(
-        "d",
-        decode_udf(
-            "docids_vb", "tftds_vb",
-            F.lit(b"").cast("binary"), F.lit(b"").cast("binary"),
-            "doc_lengths_vb",
-        ),
-    ).select(
+    arrays = {"doc_ids": "doc_id", "tftds": "tftd"}
+    if with_positions:
+        arrays["positions"] = "positions"
+    arrays["doc_lengths"] = "doc_length"
+    # Fail loudly rather than zero-fill: a missing doc_length would
+    # silently inflate BM25 wdt for every posting in the block. Only
+    # segments written without doc_lengths can hit this.
+    dl = F.col("doc_lengths")
+    zipped = F.when(
+        dl.isNull() | (F.size(dl) != F.size("doc_ids")),
+        F.raise_error(F.lit(
+            "segment is missing doc_lengths (written by an old format?) "
+            "— rebuild segments with build_segments()")),
+    ).otherwise(F.arrays_zip(*arrays))
+    extra = list(passthrough)
+    return seg.select("term", *extra, F.explode(zipped).alias("z")).select(
         "term", *extra,
-        F.explode(
-            F.arrays_zip("d.doc_ids", "d.tftds", "d.doc_lengths")
-        ).alias("z"),
-    )
-    return dec.select(
-        "term", *extra,
-        F.col("z.doc_ids").alias("doc_id"),
-        F.col("z.tftds").alias("tftd"),
-        F.col("z.doc_lengths").alias("doc_length"),
-    )
+        *(F.col(f"z.{src}").alias(dst) for src, dst in arrays.items()))

@@ -8,6 +8,11 @@ numpy-vectorized — no per-value Python in the encode hot path: byte
 widths come from masked comparisons, byte placement from a cumsum'd
 offset table and ≤9 masked scatter passes (full int64 range; realistic
 doc-id/position gaps use 1-5 bytes).
+
+This is the reference's on-disk codec, kept with its convention tests.
+It is no longer the segment format: segments store plain Parquet arrays
+(indexing/segments.py), which the Parquet writer dictionary-encodes and
+the JVM decodes without a Python worker.
 """
 
 from __future__ import annotations

@@ -168,7 +168,9 @@ def stage_segments(
     give per-(bucket, task) lineage in the manifest."""
     from ..indexing.segments import build_segments
 
-    fp = f"{PIPELINE_VERSION}:{fingerprint}:seg{block_span}x{term_buckets}"
+    # "arrays": the segment format; a VB-era checkpoint is not reused
+    fp = (f"{PIPELINE_VERSION}:{fingerprint}:arrays"
+          f":seg{block_span}x{term_buckets}")
 
     def build():
         return (
@@ -218,7 +220,7 @@ def publish_segments(
     from the table itself.
 
     ``biword`` (the index's two-term fast-path table, columns term
-    "t1 t2" + doc_id) rides in the SAME snapshot encoded through the
+    "t1 t2" + doc_id) rides in the SAME snapshot, stored in the
     segment format (indexing/segments.biword_as_segments): biword keys
     contain a space and unigram terms never do, so no discriminator
     column is needed and one table version serves the reference's whole

@@ -17,7 +17,7 @@ the closed crawl-refresh loop the north rule's Iceberg framing implies:
 
 Contrast with the two other maintenance paths:
 
-* ``indexing/segments.merge_segments`` (copy-on-write): re-encodes the
+* ``indexing/segments.merge_segments`` (copy-on-write): regroups the
   delta-touched (term, block) groups, but the whole segment set is
   written back per merge.
 * ``streaming/ingest.start_segment_maintenance``: merge_segments per
@@ -79,6 +79,12 @@ from .index_pipeline import PublishedScalars
 # corpus scalars per refresh, and url→doc_id identity for consumers.
 _DOCSTATS = "docstats"
 
+# Target size of one equality-delete file, in the spirit of Iceberg's
+# write.target-file-size-bytes. Delete rows are 8-byte doc_ids, so a
+# refresh writes one delete file per table until a delta passes ~64M
+# docs.
+_DELETE_FILE_BYTES = 512 << 20
+
 
 def _docstats_table(index_root: str) -> SnapshotTable:
     return SnapshotTable(os.path.join(index_root, _DOCSTATS))
@@ -88,7 +94,7 @@ def _delta_artifacts(analyzed: DataFrame, term_buckets: int,
                      block_span: int
                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(segment rows incl. biword family + bucket, docstats rows,
-    persisted encode handle) for an analyzed pages batch.  Callers
+    persisted segments handle) for an analyzed pages batch.  Callers
     must ``unpersist()`` the third frame once the commit lands."""
     postings = analyzed.select(
         "doc_id",
@@ -115,17 +121,16 @@ def _delta_artifacts(analyzed: DataFrame, term_buckets: int,
     # Range-cluster by bucket so per-file stats stay selective and the
     # serving read plans files away (publish_segments does the same).
     # persist first: repartitionByRange SAMPLES its input to place the
-    # range boundaries, which would run the VB-encode subtree twice
-    # (sample pass + real shuffle — measured 2x encode wall per
-    # commit). Caching the already-encoded rows makes it one encode;
-    # the cached frame is compressed segments, far smaller than the
-    # exploded postings.
-    encoded = seg.persist()
-    seg = encoded.repartitionByRange("bucket")
+    # range boundaries, which would run the (term, block) grouping —
+    # an exploded-postings shuffle plus collect_list/sort_array —
+    # twice (sample pass + real shuffle). The cached frame is the
+    # grouped segment rows, smaller than the exploded postings.
+    grouped = seg.persist()
+    seg = grouped.repartitionByRange("bucket")
     stats = analyzed.select(
         "doc_id", "url", F.col("doc_length").cast("double").alias(
             "doc_length"))
-    return seg, stats, encoded
+    return seg, stats, grouped
 
 
 def _scalar_props(spark: SparkSession, index_root: str) -> dict:
@@ -167,11 +172,11 @@ def build_pages_index(
     # the url window shuffle+sort runs twice.
     analyzed = analyze_pages(
         pages.read(spark, version=pages_version)).persist()
-    encoded = None
+    grouped = None
     try:
         if block_span is None:
             block_span = hash_block_span(analyzed.count())
-        seg, stats, encoded = _delta_artifacts(analyzed, term_buckets,
+        seg, stats, grouped = _delta_artifacts(analyzed, term_buckets,
                                                block_span)
         _docstats_table(index_root).commit(stats, mode="overwrite",
                                            note=f"pages v{pages_version}")
@@ -187,8 +192,8 @@ def build_pages_index(
             note=f"full build of pages v{pages_version}",
             properties=props)
     finally:
-        if encoded is not None:
-            encoded.unpersist()
+        if grouped is not None:
+            grouped.unpersist()
         analyzed.unpersist()
 
 
@@ -203,7 +208,7 @@ def refresh_pages_index(
     written both O(delta):
 
     * incremental scan of the new crawl rows (manifests only),
-    * analyze + encode ONLY those rows,
+    * analyze + group ONLY those rows,
     * equality-delete the delta's doc_ids (supersede-by-identity: a
       re-crawled url replaces its old postings; a brand-new url's
       delete matches nothing), re-add in the same commit — the
@@ -229,16 +234,20 @@ def refresh_pages_index(
     # recompute hazard as build_pages_index, delta-sized here.
     # (analyze_pages applies latest_per_url itself.)
     analyzed = analyze_pages(delta).persist()
-    encoded = None
+    grouped = None
     try:
-        seg, stats, encoded = _delta_artifacts(
+        seg, stats, grouped = _delta_artifacts(
             analyzed, props["term_buckets"], props["block_span"])
         # Delete rows are 8 bytes each; left at the analyzer's
         # partitioning they fan out into per-partition near-empty files
         # (measured: 33 files for 36 rows) that every merge-on-read
-        # scan must open. Coalesce to a few writer tasks — even a
-        # 10^9-doc delta is ~1 GB/file at 8.
-        ids = analyzed.select("doc_id").coalesce(8)
+        # scan must open. Size the writers from the appended page rows
+        # the pages manifests already count (read_appends spans append
+        # snapshots only; an upper bound on the delta's doc_ids).
+        delta_rows = (pages.manifest(pages_version)["total_rows"]
+                      - pages.manifest(from_v)["total_rows"])
+        ids = analyzed.select("doc_id").coalesce(
+            max(1, -(-delta_rows * 8 // _DELETE_FILE_BYTES)))
         _docstats_table(index_root).commit(
             stats, deletes=ids, equality_columns=["doc_id"],
             note=f"refresh to pages v{pages_version}")
@@ -249,8 +258,8 @@ def refresh_pages_index(
             note=f"delta refresh pages v{from_v}->v{pages_version}",
             properties=new_props)
     finally:
-        if encoded is not None:
-            encoded.unpersist()
+        if grouped is not None:
+            grouped.unpersist()
         analyzed.unpersist()
 
 
@@ -304,7 +313,7 @@ def _refreshed_scores(spark: SparkSession, index_root: str,
                                   version=version, with_positions=False)
     # Materialize the decode ONCE: the dft aggregate and the scoring
     # join both read it, and would otherwise each re-run the bucket scan
-    # + VB decode. It is bounded by the query terms' posting lists, and
+    # + decode. It is bounded by the query terms' posting lists, and
     # localCheckpoint trades fault re-compute for serving latency.
     postings = postings.localCheckpoint(eager=True)
     return score(postings, weights, (float(props["n_docs"]),
@@ -506,21 +515,21 @@ def rewrite_pages_index(spark: SparkSession, index_root: str,
     if block_span is None:
         # Re-derive the span for the corpus the table holds NOW — the
         # one moment re-blocking is free (everything is decoded and
-        # re-encoded anyway). Properties carry the new span forward.
+        # regrouped anyway). Properties carry the new span forward.
         block_span = hash_block_span(int(props["n_docs"]))
     live = published_postings(spark, index_root, terms=None,
                               with_positions=True)
     # persist before the range shuffle: its boundary-sampling pass
-    # would otherwise run the decode→re-encode subtree (the whole cost
+    # would otherwise run the decode→regroup subtree (the whole cost
     # of a compaction) twice — see _delta_artifacts.
-    encoded = build_segments(live, doc_stats=None,
+    grouped = build_segments(live, doc_stats=None,
                              block_span=block_span).withColumn(
         "bucket",
         F.pmod(F.crc32(F.col("term").cast("binary")),
                F.lit(props["term_buckets"])).cast("int"),
     ).persist()
     try:
-        seg = encoded.repartitionByRange("bucket")
+        seg = grouped.repartitionByRange("bucket")
         _docstats_table(index_root).rewrite_deletes(spark)
         new_props = {**_scalar_props(spark, index_root),
                      "block_span": block_span,
@@ -531,4 +540,4 @@ def rewrite_pages_index(spark: SparkSession, index_root: str,
                  f"v{props['pages_version']}",
             properties=new_props)
     finally:
-        encoded.unpersist()
+        grouped.unpersist()

@@ -1,4 +1,4 @@
-"""Block-max WAND top-k over compressed segments — the scale path for
+"""Block-max WAND top-k over block-split segments — the scale path for
 BM25 ranked retrieval (north rule: "BM25 top-k scoring with block-max
 WAND posting-list intersection as a DataFrame pipeline").
 
@@ -74,7 +74,7 @@ def wand_topk(
     """BM25 top-k via block-max WAND — one main DataFrame action plus
     a tiny per-term dft metadata collect, zero caches. ``index``
     supplies corpus scalars;
-    ``segments`` is the compressed block table (doc_lengths ride inside
+    ``segments`` is the block-split segment table (doc_lengths ride inside
     the segments — no doc_stats join). Returns DataFrame(doc_id, score)
     with the reference tie-break (score desc, doc_id desc —
     main.py:463-467).
@@ -107,8 +107,7 @@ def wand_topk(
             "sequence-number delete rule can apply post-decode")
     seg = term_filter(segments, list(terms), term_buckets).select(
         "term", "block", "df_block", "max_tftd", "min_doc_length",
-        "docids_vb", "tftds_vb", "pos_lens_vb", "positions_vb",
-        "doc_lengths_vb", *seq_cols,
+        "doc_ids", "tftds", "doc_lengths", *seq_cols,
     )
 
     # term-level dft from block metadata — a ≤|terms|-row aggregate,
@@ -159,7 +158,7 @@ def wand_topk(
     )
 
     def exact_scores(seg_subset: DataFrame) -> DataFrame:
-        # doc_length decodes from the segment itself (doc_lengths_vb):
+        # doc_length decodes from the segment itself (doc_lengths):
         # NO doc_stats join — at 10^12 docs that join would shuffle a
         # corpus-sized table per query.
         postings = decode_postings(seg_subset, list(terms),

@@ -23,7 +23,7 @@ Design (delta + compaction, the standard streaming-index shape):
 * ``start_segment_maintenance`` keeps the SERVING artifact (compressed
   block-split segments) current per micro-batch via ``merge_segments``
   with versioned directories and an atomic pointer swap — MVCC for
-  readers; re-encode work per batch ∝ batch size, but each batch
+  readers; regroup work per batch ∝ batch size, but each batch
   rewrites the whole segment set.
 * ``ingestion_stats`` is the watermarked event-time aggregation
   (1-minute windows on ``warc_ts``, 2-minute late-data watermark) —
@@ -294,7 +294,7 @@ def start_segment_maintenance(spark: SparkSession, input_dir: str,
     set containing exactly the latest crawl of every url seen so far —
     decodable by ``decode_postings`` and scoreable by WAND unchanged.
     Only the delta-touched (term, block) groups are decoded and
-    re-encoded (see merge_segments), but every micro-batch writes the
+    regrouped (see merge_segments), but every micro-batch writes the
     WHOLE merged segment set and doc-stats table to a new ``v{n}/``
     directory with ``mode("overwrite")``: bytes written per batch grow
     with the index, so a perpetual crawl's maintenance cost grows with

@@ -30,7 +30,7 @@ def _run(args: list[str]) -> dict:
     return json.loads(line)
 
 
-def test_cranfield_subset_rank_identical_and_map():
+def test_cranfield_subset_rank_identical_and_map(reference_tree):
     out = _run([
         "tools/cranfield_eval.py", "--n-docs", "120", "--n-queries", "6",
         "--strategies", "bm25,default",
@@ -40,13 +40,13 @@ def test_cranfield_subset_rank_identical_and_map():
         assert out[f"{s}_map_ref"] == out[f"{s}_map_spark"]
 
 
-def test_nps_subset_rank_and_boolean_identical():
+def test_nps_subset_rank_and_boolean_identical(reference_tree):
     out = _run(["tools/nps_parity.py", "--n-docs", "150"])
     assert out["rank_identical"], out["rank_mismatches"]
     assert out["boolean_identical"], out["boolean_mismatches"]
 
 
-def test_mlb_author_soundex_parity():
+def test_mlb_author_soundex_parity(reference_tree):
     out = _run(["tools/mlb_soundex_parity.py", "--n-docs", "800"])
     assert out["containment"], out["containment_misses"]
     assert out["spark_n_codes"] == out["ref_n_codes"]

@@ -12,7 +12,7 @@ import subprocess
 import sys
 
 
-def test_rank_identical_to_reference_implementation():
+def test_rank_identical_to_reference_implementation(reference_tree):
     out = subprocess.run(
         [sys.executable, "tools/reference_rank_parity.py", "800"],
         cwd="/root/repo", capture_output=True, text=True, timeout=420,

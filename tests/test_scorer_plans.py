@@ -9,6 +9,9 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 * refreshed_topk decodes its postings once: each segment scan is decoded
   once inside the one checkpointed frame, and the scoring plan (dft and
   scores) reads only the checkpoint;
+* the ranked, batch, AND/OR boolean and segment-build plans start no
+  Python worker (no ArrowEvalPythonExec or BatchEvalPythonExec): segments
+  are Parquet arrays decoded by a JVM explode;
 * the delete side of a merge-on-read read is planned from manifests:
   building it starts no Spark job, and its broadcast holds no aggregate
   and no shuffle.
@@ -104,16 +107,31 @@ def _batch(df: DataFrame) -> list:
     return nodes
 
 
-def _decodes(nodes) -> int:
-    return sum(1 for n, name in zip(nodes, _names(nodes))
-               if name == "ArrowEvalPythonExec"
-               and "_decode_batch" in n.toString())
+def _is_decode(node) -> bool:
+    """A posting decode: the Generate that explodes the segment arrays."""
+    return (node.getClass().getSimpleName() == "GenerateExec"
+            and "doc_ids" in node.generator().toString())
 
 
-def _segment_scans(nodes) -> int:
-    return sum(1 for n, name in zip(nodes, _names(nodes))
-               if name == "FileSourceScanExec"
-               and "docids_vb" in n.requiredSchema().simpleString())
+def _is_segment_scan(node) -> bool:
+    return (node.getClass().getSimpleName() == "FileSourceScanExec"
+            and "doc_ids" in node.requiredSchema().simpleString())
+
+
+def _decoded_scans(nodes) -> tuple[list[int], list[int]]:
+    """(plan ids of the segment scans below each decode — a scan under
+    two decodes counts twice —, plan ids of every segment scan).  Equal
+    lists mean each segment scan is decoded exactly once; one decode may
+    cover several snapshot layers' scans through their union."""
+    under = sorted(s.id() for n in nodes if _is_decode(n)
+                   for s in _nodes(n) if _is_segment_scan(s))
+    return under, sorted(n.id() for n in nodes if _is_segment_scan(n))
+
+
+def _no_python(nodes) -> None:
+    python = [name for name in _names(nodes)
+              if "Python" in name or "Pandas" in name]
+    assert not python, python
 
 
 @pytest.fixture(scope="module")
@@ -215,7 +233,14 @@ def test_ranked_batch_from_published_plan(spark, docs, tmp_path):
     nodes = _batch(ranked_batch_from_published(
         spark, str(tmp_path / "pub"), BATCH, k=10,
         normalize=simple_query_term))
-    assert _decodes(nodes) == _segment_scans(nodes) == 1
+    under, scans = _decoded_scans(nodes)
+    assert under == scans and len(scans) == 1
+    _no_python(nodes)
+
+
+def test_build_segments_plan_has_no_python(pidx):
+    nodes = _executed(build_segments(pidx.postings, pidx.doc_stats))
+    _no_python(nodes)
 
 
 def _checkpoint_plans(spark, monkeypatch) -> list:
@@ -237,11 +262,15 @@ def test_refreshed_topk_plan_decodes_once(spark, refreshed, monkeypatch):
     nodes = _single(R.refreshed_topk(spark, refreshed, CRAWL_QUERY, k=10))
     assert len(checkpointed) == 1
     _check_common(checkpointed[0])
-    # one decode per snapshot layer's scan (base + delta), all inside
-    # the checkpoint; the scoring plan only reads the checkpoint
-    assert _decodes(checkpointed[0]) == _segment_scans(checkpointed[0]) >= 2
-    assert _decodes(nodes) == _segment_scans(nodes) == 0
+    # each snapshot layer's scan (base + delta) is decoded once, all
+    # inside the checkpoint; the scoring plan only reads the checkpoint
+    under, scans = _decoded_scans(checkpointed[0])
+    assert under == scans and len(scans) >= 2
+    assert _decoded_scans(nodes) == ([], [])
+    assert not any(_is_decode(n) for n in nodes)
     assert "RDDScanExec" in _names(nodes)
+    _no_python(checkpointed[0])
+    _no_python(nodes)
 
 
 def test_refreshed_topk_batch_plan(spark, refreshed, monkeypatch):
@@ -250,10 +279,23 @@ def test_refreshed_topk_batch_plan(spark, refreshed, monkeypatch):
                                           k=10))
     assert len(checkpointed) == 1
     _check_common(checkpointed[0])
-    # one decode per snapshot layer's scan (base + delta), all inside
-    # the checkpoint; the scoring plan only reads the checkpoint
-    assert _decodes(checkpointed[0]) == _segment_scans(checkpointed[0]) >= 2
-    assert _decodes(nodes) == _segment_scans(nodes) == 0
+    # each snapshot layer's scan (base + delta) is decoded once, all
+    # inside the checkpoint; the scoring plan only reads the checkpoint
+    under, scans = _decoded_scans(checkpointed[0])
+    assert under == scans and len(scans) >= 2
+    assert _decoded_scans(nodes) == ([], [])
+    assert not any(_is_decode(n) for n in nodes)
+    _no_python(checkpointed[0])
+    _no_python(nodes)
+
+
+@pytest.mark.parametrize("query", ["refreshed crawl", "refreshed + page"])
+def test_refreshed_boolean_and_or_plan_has_no_python(spark, refreshed, query):
+    nodes = _executed(R.refreshed_boolean(spark, refreshed, query))
+    # every segment scan (one per term and snapshot layer) is decoded once
+    under, scans = _decoded_scans(nodes)
+    assert under == scans and len(scans) >= 4
+    _no_python(nodes)
 
 
 def test_literal_weights_keep_quotes_and_backslashes(spark):
@@ -306,3 +348,10 @@ def test_refreshed_topk_delete_broadcast_has_no_aggregate(
     assert len(delete_sides) == 1
     assert not {"HashAggregateExec", "ShuffleExchangeExec"} \
         & set(delete_sides[0]), delete_sides[0]
+
+
+def test_refresh_writes_one_delete_file_per_commit(refreshed_twice):
+    for tbl in (SnapshotTable(refreshed_twice),
+                R._docstats_table(refreshed_twice)):
+        deletes = tbl.manifest(tbl.current_version())["delete_files"]
+        assert sorted(f["seq"] for f in deletes) == [1, 2], deletes

@@ -1,4 +1,5 @@
-"""Segments (delta+VB, block-split) and block-max WAND tests.
+"""Segments (Parquet arrays, block-split), the VB codec and block-max
+WAND tests.
 
 Correctness contracts:
 * codec roundtrip (property-style over seeded random arrays);
@@ -96,6 +97,34 @@ def test_segments_write_read(spark, corpus_index, tmp_path):
     decoded = decode_postings(seg, ["scan"], term_buckets=8)
     orig_n = idx.postings.filter(F.col("term") == "scan").count()
     assert decoded.count() == orig_n
+
+
+def test_decode_refuses_vb_format_segments(spark):
+    """A table written in the retired VB format (``*_vb`` binaries) must
+    be rebuilt, not misread."""
+    vb_seg = spark.createDataFrame(
+        [("scan", 0, bytes([129]), bytes([129]), bytes([130]))],
+        "term string, block long, docids_vb binary, tftds_vb binary, "
+        "doc_lengths_vb binary")
+    with pytest.raises(ValueError, match="rebuild"):
+        decode_postings(vb_seg, ["scan"])
+
+
+@pytest.mark.parametrize("with_positions", [True, False])
+@pytest.mark.parametrize("doc_lengths", [
+    "cast(null as array<int>)",
+    "slice(doc_lengths, 1, 1)",
+])
+def test_decode_fails_on_missing_doc_lengths(spark, corpus_index,
+                                             with_positions, doc_lengths):
+    """Null or short doc_lengths raise instead of zero-filling, which
+    would silently inflate BM25 wdt."""
+    seg = build_segments(corpus_index.postings, corpus_index.doc_stats,
+                         block_span=64).filter(F.col("df_block") > 1)
+    broken = seg.withColumn("doc_lengths", F.expr(doc_lengths))
+    with pytest.raises(Exception, match="missing doc_lengths"):
+        decode_postings(broken, ["tabl"],
+                        with_positions=with_positions).collect()
 
 
 @pytest.mark.parametrize("query", ["table scan merge", "dup stream", "camping"])

@@ -82,7 +82,7 @@ def test_porter2_sql_fuzz_matches_python():
     assert not bad, bad[:10]
 
 
-def test_porter2_sql_real_corpus_vocab():
+def test_porter2_sql_real_corpus_vocab(reference_tree):
     """Real English vocabulary, extracted through the actual reference
     tokenizer path (EnglishTokenStream split + NewTokenProcessor clean
     + hyphen expansion) from the reference's own shipped corpora —
@@ -102,9 +102,9 @@ def test_porter2_sql_real_corpus_vocab():
             else:
                 vocab.add(c)
 
-    for fp in sorted(glob.glob("/root/reference/MobyDick10Chapters/*.txt"))[:5]:
+    for fp in sorted(glob.glob(f"{reference_tree}/MobyDick10Chapters/*.txt"))[:5]:
         add_text(open(fp, errors="ignore").read())
-    for fp in sorted(glob.glob("/root/reference/relevance_cranfield/*.json"))[:60]:
+    for fp in sorted(glob.glob(f"{reference_tree}/relevance_cranfield/*.json"))[:60]:
         try:
             add_text(jsonlib.load(open(fp, errors="ignore")).get("body", ""))
         except Exception:
