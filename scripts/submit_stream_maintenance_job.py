@@ -1,24 +1,24 @@
-"""spark-submit entrypoint for STREAMING segment maintenance: drain the
-pages drops under --input through start_segment_maintenance (per
-micro-batch: delta index → merge_segments with url supersede → versioned
-segment dir + atomic pointer swap), then optionally checkpoint the
-resulting current version into the published serving SnapshotTable
-(streaming/ingest.publish_current) so the query fleet can repin.
+"""spark-submit entrypoint for STREAMING index maintenance: drain the
+pages drops under --input through start_segment_maintenance. Each
+micro-batch is appended to the pages SnapshotTable at --pages-root, and
+the index table at --index-root is built (first batch) or refreshed with
+one O(delta) row-delta commit, then compacted only past the maintenance
+thresholds — the same loop submit_refresh_job.py runs per crawl cycle.
 
-Cluster usage (cron per crawl-drop cadence):
+Cluster usage (cron per crawl-drop cadence), from the repository root:
 
-    cd /root/repo && zip -r /tmp/searchengine_spark.zip searchengine_spark
-    spark-submit --py-files /tmp/searchengine_spark.zip \
+    zip -r searchengine_spark.zip searchengine_spark
+    spark-submit --py-files searchengine_spark.zip \
         scripts/submit_stream_maintenance_job.py \
-        --input /crawl/drops --seg-root /warehouse/stream_segments \
-        [--publish-root /warehouse/serving_table] \
-        [--term-buckets 64] [--block-span 4096]
+        --input /crawl/drops --pages-root /warehouse/pages \
+        --index-root /warehouse/pages_index
 
 Exactly-once across invocations comes from the stream's checkpoint dir
-(file-source offsets under {seg-root}/_checkpoint); re-running after a
-crash resumes from the last committed micro-batch. Prints one JSON line
-with the current version, doc count, and (if published) the committed
-table version.
+(file-source offsets under {pages-root}/_checkpoint) plus the batch id
+recorded on the pages table; re-running after a crash resumes from the
+last committed micro-batch. The index table serves directly through
+pipeline/refresh.refreshed_* (submit_query_job.py). Prints one JSON line
+with the drained versions, the live doc count and the maintenance stats.
 """
 
 from __future__ import annotations
@@ -29,59 +29,49 @@ import sys
 import time
 
 
-def main() -> None:
+def main(argv: list[str] | None = None, spark=None) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
                     help="directory the crawl drops (pages parquet) land in")
-    ap.add_argument("--seg-root", required=True,
-                    help="root for the maintained versioned segment dirs")
-    ap.add_argument("--publish-root", default=None,
-                    help="SnapshotTable root to checkpoint the drained "
-                         "current version into (publish_current)")
-    ap.add_argument("--term-buckets", type=int, default=64)
-    ap.add_argument("--cluster-partitions", type=int, default=None)
-    ap.add_argument("--block-span", type=int, default=4096)
-    args = ap.parse_args()
+    ap.add_argument("--pages-root", required=True,
+                    help="SnapshotTable root the micro-batches append to")
+    ap.add_argument("--index-root", required=True,
+                    help="SnapshotTable root of the maintained index")
+    args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    spark = (SparkSession.builder
-             .appName("searchengine-stream-maintenance").getOrCreate())
+    owns_spark = spark is None
+    if owns_spark:
+        from pyspark.sql import SparkSession
+        spark = (SparkSession.builder
+                 .appName("searchengine-stream-maintenance").getOrCreate())
     try:
         import searchengine_spark  # noqa: F401
     except ImportError:
         sys.path.insert(0, ".")
-    from searchengine_spark.streaming.ingest import (
-        current_queryable,
-        publish_current,
-        start_segment_maintenance,
-    )
+    from searchengine_spark.pipeline.refresh import maintenance_stats
+    from searchengine_spark.sources.snapshots import SnapshotTable
+    from searchengine_spark.streaming.ingest import start_segment_maintenance
 
     t0 = time.time()
-    start_segment_maintenance(
-        spark, args.input, args.seg_root,
-        block_span=args.block_span).awaitTermination()
-    drain_wall = time.time() - t0
-
-    out = {"seg_root": args.seg_root, "drain_wall_s": round(drain_wall, 3)}
-    seg, scalars = current_queryable(spark, args.seg_root)
-    if seg is None:
-        out["current"] = None  # no drops to drain
-    else:
-        n_docs, avg_dl = scalars.corpus_scalars()
-        out["current"] = {"n_docs": int(n_docs),
-                          "avg_doc_length": round(avg_dl, 3)}
-        if args.publish_root:
-            t1 = time.time()
-            v = publish_current(
-                spark, args.seg_root, args.publish_root,
-                term_buckets=args.term_buckets,
-                cluster_partitions=args.cluster_partitions)
-            out["published"] = {"table_root": args.publish_root,
-                                "version": v,
-                                "wall_s": round(time.time() - t1, 3)}
+    start_segment_maintenance(spark, args.input, args.pages_root,
+                              args.index_root).awaitTermination()
+    out: dict = {"pages_root": args.pages_root,
+                 "index_root": args.index_root,
+                 "drain_wall_s": round(time.time() - t0, 3),
+                 "pages_version": SnapshotTable(
+                     args.pages_root).current_version(),
+                 "index_version": None}
+    index = SnapshotTable(args.index_root)
+    if index.current_version() is not None:  # else: no drops to drain
+        props = index.properties()
+        out["index_version"] = index.current_version()
+        out["indexed_pages_version"] = props["pages_version"]
+        out["n_docs"] = props["n_docs"]
+        out["maintenance"] = maintenance_stats(args.index_root)
     print(json.dumps(out))
-    spark.stop()
+    if owns_spark:
+        spark.stop()
+    return out
 
 
 if __name__ == "__main__":

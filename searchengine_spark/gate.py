@@ -988,11 +988,12 @@ SELECT DISTINCT doc_id FROM (
 """,
 )
 def snapshot_boolean_serve(spark, sf_dir):
-    """The boolean serving path end to end (queries/serve.py): build →
-    compress to segments → publish as a snapshot version (biword family
-    included) → answer the mixed boolean query bucket-pruned from the
-    published table. Same oracle as bool_mixed — publication must not
-    change a single doc_id."""
+    """The boolean serving path end to end
+    (pipeline/refresh.refreshed_boolean): build → compress to segments
+    → publish as a snapshot version (biword family included) → answer
+    the mixed boolean query bucket-pruned from the published table.
+    Same oracle as bool_mixed — publication must not change a single
+    doc_id."""
     import hashlib
     import os
     import shutil
@@ -1000,7 +1001,7 @@ def snapshot_boolean_serve(spark, sf_dir):
 
     from .indexing.segments import build_segments
     from .pipeline.index_pipeline import publish_segments
-    from .queries.serve import boolean_from_published
+    from .pipeline.refresh import refreshed_boolean
 
     idx = simple_index(spark, sf_dir)
     root = os.path.join(
@@ -1012,7 +1013,7 @@ def snapshot_boolean_serve(spark, sf_dir):
         F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(8)).cast("int"))
     publish_segments(spark, root, seg, term_buckets=8, biword=idx.biword,
                      cluster_partitions=4)
-    return boolean_from_published(
+    return refreshed_boolean(
         spark, root, "table scan + agg -join",
         normalize=simple_query_term,
     ).select(F.col("doc_id").cast("long").alias("doc_id"))
@@ -1027,11 +1028,12 @@ def snapshot_boolean_serve(spark, sf_dir):
 )
 def snapshot_ranked_serve(spark, sf_dir):
     """BM25 batch serving end to end
-    (queries/serve.ranked_batch_from_published): build → compress to
+    (pipeline/refresh.refreshed_topk_batch): build → compress to
     segments → publish with corpus scalars → serve the
-    rank_bm25_batch query log from the published table in ONE job
-    (union-of-terms bucket-pruned read, per-query window top-k). Same
-    oracle as rank_bm25_batch — publication must not move a score."""
+    rank_bm25_batch query log from the published table (one
+    union-of-terms bucket-pruned decode, checkpointed, then per-query
+    window top-k). Same oracle as rank_bm25_batch — publication must
+    not move a score."""
     import hashlib
     import os
     import shutil
@@ -1041,7 +1043,7 @@ def snapshot_ranked_serve(spark, sf_dir):
 
     from .indexing.segments import build_segments
     from .pipeline.index_pipeline import publish_segments
-    from .queries.serve import ranked_batch_from_published
+    from .pipeline.refresh import refreshed_topk_batch
 
     idx = simple_index(spark, sf_dir)
     root = os.path.join(
@@ -1053,7 +1055,7 @@ def snapshot_ranked_serve(spark, sf_dir):
         F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(8)).cast("int"))
     publish_segments(spark, root, seg, term_buckets=8,
                      corpus_stats=idx.corpus_stats, cluster_partitions=4)
-    top = ranked_batch_from_published(
+    top = refreshed_topk_batch(
         spark, root, BATCH_RANK_QUERIES, k=10,
         normalize=simple_query_term)
     # re-rank on the quantized score (see _rank_batch_sql note)

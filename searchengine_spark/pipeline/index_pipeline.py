@@ -213,11 +213,12 @@ def publish_segments(
 
     ``cluster=True`` range-clusters the written files by term bucket so
     each data file covers a narrow bucket range — that makes the
-    manifest's per-file min/max stats selective, and
-    ``read_published_segments`` can plan away the files outside a
+    manifest's per-file min/max stats selective, and the serving reads
+    (pipeline/refresh.refreshed_*) plan away the files outside a
     query's buckets (Iceberg data-file pruning). ``term_buckets`` is
     recorded as a table property so readers recover the bucket modulus
-    from the table itself.
+    from the table itself; ``corpus_stats`` rides as the ``n_docs`` and
+    ``avg_doc_length`` properties the ranked readers need.
 
     ``biword`` (the index's two-term fast-path table, columns term
     "t1 t2" + doc_id) rides in the SAME snapshot, stored in the
@@ -282,64 +283,3 @@ def publish_segments(
         props["avg_doc_length"] = float(row["avg_doc_length"])
     return SnapshotTable(table_root).commit(segments, mode=mode, note=note,
                                             properties=props or None)
-
-
-def read_published_segments(
-    spark: SparkSession,
-    table_root: str,
-    terms: list[str] | None = None,
-    version: int | None = None,
-    tag: str | None = None,
-) -> DataFrame:
-    """Serve a published segment snapshot, pruned to a query's term
-    buckets. The bucket set is computed driver-side from the table's
-    ``term_buckets`` property (|terms| crc32 calls); files whose bucket
-    stats ranges cannot contain those buckets are planned away from the
-    manifest alone, then ``decode_postings``'s term filter applies as
-    usual — the 10^12-doc read path touches only the term-bucket files
-    a query needs."""
-    from ..indexing.build import term_bucket
-    from ..sources.snapshots import SnapshotTable
-
-    tbl = SnapshotTable(table_root)
-    tb = tbl.properties(version).get("term_buckets") if tag is None \
-        else tbl.properties(tbl.tags()[tag]).get("term_buckets")
-    preds = None
-    if terms and tb:
-        buckets = sorted({term_bucket(t, tb) for t in terms})
-        preds = [("bucket", "in", buckets)]
-    return tbl.read(spark, version=version, tag=tag, predicates=preds)
-
-
-class PublishedScalars:
-    """Adapter giving a published segment snapshot the
-    ``corpus_scalars()`` surface ranked/WAND queries expect from a
-    SparkIndex — built from table properties alone (no Spark job)."""
-
-    def __init__(self, n_docs: float, avg_dl: float):
-        self._scalars = (n_docs, avg_dl)
-
-    def corpus_scalars(self):
-        return self._scalars
-
-
-def queryable_published(
-    spark: SparkSession,
-    table_root: str,
-    version: int | None = None,
-) -> tuple:
-    """(scalars adapter, term_buckets) for serving a published segment
-    snapshot: everything ``wand_topk`` needs beyond the (per-query,
-    bucket-pruned) segments DataFrame from
-    :func:`read_published_segments`.  Raises if the snapshot was
-    published without ``corpus_stats``."""
-    from ..sources.snapshots import SnapshotTable
-
-    props = SnapshotTable(table_root).properties(version)
-    if "n_docs" not in props:
-        raise KeyError(
-            "snapshot was published without corpus_stats — republish "
-            "with publish_segments(..., corpus_stats=index.corpus_stats)")
-    return (PublishedScalars(float(props["n_docs"]),
-                             float(props["avg_doc_length"])),
-            props.get("term_buckets"))

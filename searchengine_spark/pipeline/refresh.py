@@ -15,19 +15,25 @@ the closed crawl-refresh loop the north rule's Iceberg framing implies:
         an equality-delete file interpreted at decode time (the
         sequence-number rule keeps the delta's own rows).
 
-Contrast with the two other maintenance paths:
+This loop is the one way an index stays current:
 
-* ``indexing/segments.merge_segments`` (copy-on-write): regroups the
-  delta-touched (term, block) groups, but the whole segment set is
-  written back per merge.
-* ``streaming/ingest.start_segment_maintenance``: merge_segments per
-  micro-batch into a new versioned directory — so every micro-batch
-  rewrites the whole segment set.
-* THIS module (merge-on-read): a refresh writes ONLY delta-sized
-  files (new segment rows + a delete file); readers reconcile (the
-  Iceberg v2 / Lucene-liveDocs shape).  ``rewrite_pages_index`` is the
-  major compaction that folds the accumulated layers back into a clean
-  base.
+* ``scripts/submit_refresh_job.py`` runs it per scheduled crawl cycle;
+* ``streaming/ingest.start_segment_maintenance`` runs it per stream
+  micro-batch (append the batch to the pages table, then refresh);
+* ``rewrite_pages_index`` is the major compaction that folds the
+  accumulated layers back into a clean base, and
+  ``maybe_rewrite_pages_index`` runs it only past the debt thresholds.
+
+A refresh writes ONLY delta-sized files (new segment rows + a delete
+file); readers reconcile (the Iceberg v2 / Lucene-liveDocs shape).
+``indexing/segments.merge_segments`` is the copy-on-write alternative
+a ``publish_segments`` append uses: it regroups the delta-touched
+(term, block) groups, but writes the whole segment set back per merge.
+
+The ``refreshed_*`` functions below are the serving module for every
+index table — a refreshed one and one written by
+``pipeline/index_pipeline.publish_segments`` alike (a delete-free
+snapshot skips the reconcile).
 
 Serving exactness contract (tested in tests/test_refresh.py):
 
@@ -71,7 +77,6 @@ from ..queries.ranked import (
 from ..queries.wand import wand_topk
 from ..sources.snapshots import SnapshotTable, drop_deleted
 from ..streaming.ingest import analyze_pages
-from .index_pipeline import PublishedScalars
 
 # Companion table (same root, its own snapshot lineage): (doc_id, url,
 # doc_length) per live doc. Its deletes ARE on a table column, so the
@@ -302,12 +307,35 @@ def published_postings(
     return postings
 
 
+def _corpus_scalars(props: dict) -> tuple[float, float]:
+    """(n_docs, avg_doc_length) from a snapshot's properties — a dict
+    lookup, no Spark job.  A table published without corpus scalars
+    fails here with the fix, not with a bare ``KeyError: 'n_docs'``."""
+    if "n_docs" not in props or "avg_doc_length" not in props:
+        raise KeyError(
+            "snapshot was published without corpus_stats — republish "
+            "with publish_segments(..., corpus_stats=index.corpus_stats)")
+    return float(props["n_docs"]), float(props["avg_doc_length"])
+
+
+class PublishedScalars:
+    """Adapter giving a published segment snapshot the
+    ``corpus_scalars()`` surface ranked/WAND queries expect from a
+    SparkIndex — built from table properties alone (no Spark job)."""
+
+    def __init__(self, n_docs: float, avg_dl: float):
+        self._scalars = (n_docs, avg_dl)
+
+    def corpus_scalars(self):
+        return self._scalars
+
+
 def _refreshed_scores(spark: SparkSession, index_root: str,
                       weights: dict, version: int | None) -> DataFrame:
     """Shared scorer over a refreshed snapshot: the bucket-pruned,
     delete-reconciled decode of the queries' terms, checkpointed once,
     with dft counted over that live checkpoint."""
-    props = SnapshotTable(index_root).properties(version)
+    scalars = _corpus_scalars(SnapshotTable(index_root).properties(version))
     terms = sorted({t for ts in weights.values() for t in ts})
     postings = published_postings(spark, index_root, terms,
                                   version=version, with_positions=False)
@@ -316,8 +344,7 @@ def _refreshed_scores(spark: SparkSession, index_root: str,
     # + decode. It is bounded by the query terms' posting lists, and
     # localCheckpoint trades fault re-compute for serving latency.
     postings = postings.localCheckpoint(eager=True)
-    return score(postings, weights, (float(props["n_docs"]),
-                                     float(props["avg_doc_length"])), "bm25")
+    return score(postings, weights, scalars, "bm25")
 
 
 def refreshed_topk(
@@ -373,6 +400,18 @@ def refreshed_topk_batch(
                  per_query=True)
 
 
+def lookup_terms(node, normalize) -> set[str]:
+    """Every normalized index term a query's evaluation will look up."""
+    if node.kind == "term":
+        return {normalize(node.term)}
+    if node.kind == "phrase":
+        return {normalize(w) for w in node.term.split(" ")}
+    out: set[str] = set()
+    for child in node.children:
+        out |= lookup_terms(child, normalize)
+    return out
+
+
 def refreshed_boolean(
     spark: SparkSession,
     index_root: str,
@@ -380,15 +419,26 @@ def refreshed_boolean(
     version: int | None = None,
     normalize=None,
 ) -> DataFrame:
-    """Boolean/phrase/NEAR serving from a refreshed snapshot — the
-    merge-on-read twin of queries/serve.boolean_from_published: same
-    parse-once term planning, same biword fast-path routing, same
-    compiled engine; the only difference is the delete reconciliation
-    between decode and evaluation."""
+    """Boolean/phrase/NEAR serving from an index snapshot; returns
+    DataFrame(doc_id) in the canonical sorted order, identical to
+    ``queries/engine.boolean_query`` over a from-scratch index of the
+    same pages.
+
+    The query is parsed ONCE driver-side to collect the normalized
+    lookup terms (plus the biword key when the whole query is a
+    two-term phrase — the only case the reference's main.py:413-418
+    routes to the biword index); only those terms' buckets
+    are planned from the manifest and decoded (positions included —
+    phrase/NEAR need them), deletes are reconciled, and the compiled
+    engine evaluates the query, quirks and all.
+
+    Two-term phrases need the snapshot's biword family: the fast path
+    has its own semantics (clean adjacency vs the positional merge's
+    quirks), so a snapshot without it raises rather than substituting
+    one for the other."""
     from ..indexing.build import SparkIndex
     from ..queries.engine import boolean_query, boolean_query_term
     from ..queries.parser import parse_boolean_query
-    from ..queries.serve import lookup_terms
 
     normalize = normalize or boolean_query_term
     node = parse_boolean_query(query)
@@ -433,8 +483,7 @@ def refreshed_wand_topk(
     (see queries/wand.wand_topk's deletes note)."""
     seg, dele, props = _published_segments(
         spark, index_root, list(query_rank_terms(query, normalize)), version)
-    scalars = PublishedScalars(float(props["n_docs"]),
-                               float(props["avg_doc_length"]))
+    scalars = PublishedScalars(*_corpus_scalars(props))
     return wand_topk(scalars, seg, query, k=k, normalize=normalize,
                      term_buckets=props.get("term_buckets"),
                      champion_blocks=champion_blocks,

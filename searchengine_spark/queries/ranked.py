@@ -224,23 +224,12 @@ def empty_topk(spark, per_query: bool = False) -> DataFrame:
         if per_query else "doc_id long, score double")
 
 
-def _with_doc_stats(index: SparkIndex, postings: DataFrame) -> DataFrame:
-    """Postings carrying every strategy's per-doc columns: the
-    denormalized ones when present (the SparkIndex contract — no
-    corpus-sized join at query time), else one doc_stats join (e.g.
-    streaming/ingest.compact_index's un-enriched postings)."""
-    if set(STAT_COLS) <= set(postings.columns):
-        return postings
-    return postings.select("term", "doc_id", "tftd").join(
-        index.doc_stats.select("doc_id", *STAT_COLS), "doc_id")
-
-
 def _score_index(index: SparkIndex, weights: dict, strategy: str,
                  prune: bool = False) -> DataFrame:
     terms = sorted({t for ts in weights.values() for t in ts})
     postings = term_filter(index.postings, terms, index.term_buckets)
-    return score(_with_doc_stats(index, postings), weights,
-                 index.corpus_scalars(), strategy, prune=prune)
+    return score(postings, weights, index.corpus_scalars(), strategy,
+                 prune=prune)
 
 
 def rank_scores(
@@ -276,9 +265,8 @@ def rank_scores_terms(
     postings scan prunes by broadcast semi-join."""
     matched = index.postings.join(
         F.broadcast(terms_df.select("term")), "term", "left_semi")
-    return score(_with_doc_stats(index, matched), terms_df,
-                 index.corpus_scalars(), strategy, prune=prune).select(
-        "doc_id", "score")
+    return score(matched, terms_df, index.corpus_scalars(), strategy,
+                 prune=prune).select("doc_id", "score")
 
 
 def rank_topk(
@@ -325,8 +313,7 @@ def champion_lists(index: SparkIndex, r: int = 64, salt: int = 16,
     contained in the union of per-salt top-rs), reducer fan-in bounded
     by salt·r rows regardless of df."""
     _, avg_dl = index.corpus_scalars()
-    base = _with_doc_stats(index, index.postings).select(
-        "term", "doc_id", "tftd", *STAT_COLS)
+    base = index.postings.select("term", "doc_id", "tftd", *STAT_COLS)
     impact = _wdt(strategy, avg_dl) / _normalizer(strategy)
     base = base.withColumn(
         "_impact_e6", F.floor(impact * F.lit(1e6)).cast("long")
@@ -378,8 +365,7 @@ def rank_topk_champions(
         champions.filter(F.col("term").isin(list(terms)))
         .select("doc_id").distinct()
     )
-    matched = _with_doc_stats(
-        index, term_filter(index.postings, list(terms), index.term_buckets))
+    matched = term_filter(index.postings, list(terms), index.term_buckets)
     scored = score(
         matched.join(F.broadcast(cand_docs), "doc_id", "left_semi"),
         {"": terms}, index.corpus_scalars(), strategy, dft=count_dft(matched))

@@ -9,6 +9,8 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 * refreshed_topk decodes its postings once: each segment scan is decoded
   once inside the one checkpointed frame, and the scoring plan (dft and
   scores) reads only the checkpoint;
+* a term lookup on a persisted index prunes to the term's bucket
+  partition and pushes the term predicate into the Parquet scan;
 * the ranked, batch, AND/OR boolean and segment-build plans start no
   Python worker (no ArrowEvalPythonExec or BatchEvalPythonExec): segments
   are Parquet arrays decoded by a JVM explode;
@@ -23,17 +25,22 @@ survive their trip through the scorer's SQL literal text.
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from searchengine_spark.indexing.build import read_index, write_index
+from searchengine_spark.indexing.build import (
+    read_index,
+    term_bucket,
+    term_filter,
+    write_index,
+)
 from searchengine_spark.indexing.fielded import build_fielded_index, rank_topk_fielded
 from searchengine_spark.indexing.segments import build_segments
 from searchengine_spark.indexing.simple import build_simple_index, simple_query_term
 from searchengine_spark.pipeline import refresh as R
-from searchengine_spark.pipeline.index_pipeline import publish_segments
 from searchengine_spark.queries.ranked import (
     _literal_map,
     champion_lists,
@@ -42,7 +49,6 @@ from searchengine_spark.queries.ranked import (
     rank_topk_champions,
     score,
 )
-from searchengine_spark.queries.serve import ranked_batch_from_published
 from searchengine_spark.sources.snapshots import SnapshotTable
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -223,19 +229,20 @@ def test_rank_topk_fielded_plan(docs):
     _single(rank_topk_fielded(fidx, QUERY, 10, normalize=simple_query_term))
 
 
-def test_ranked_batch_from_published_plan(spark, docs, tmp_path):
-    idx = build_simple_index(docs)
-    seg = build_segments(idx.postings, idx.doc_stats).withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(8)).cast("int"))
-    publish_segments(spark, str(tmp_path / "pub"), seg, term_buckets=8,
-                     corpus_stats=idx.corpus_stats, cluster_partitions=4)
-    nodes = _batch(ranked_batch_from_published(
-        spark, str(tmp_path / "pub"), BATCH, k=10,
-        normalize=simple_query_term))
-    under, scans = _decoded_scans(nodes)
-    assert under == scans and len(scans) == 1
-    _no_python(nodes)
+def test_term_lookup_prunes_bucket_and_pushes_term(pidx):
+    nodes = _executed(term_filter(pidx.postings, ["table"],
+                                  pidx.term_buckets))
+    scans = [n for n in nodes
+             if n.getClass().getSimpleName() == "FileSourceScanExec"]
+    assert len(scans) == 1
+    meta = scans[0].metadata()
+    bucket = term_bucket("table", pidx.term_buckets)
+    assert re.search(rf"\(bucket#\d+ = {bucket}\)",
+                     meta.apply("PartitionFilters")), \
+        meta.apply("PartitionFilters")
+    assert "term" not in meta.apply("PartitionFilters")
+    assert "EqualTo(term,table)" in meta.apply("PushedFilters"), \
+        meta.apply("PushedFilters")
 
 
 def test_build_segments_plan_has_no_python(pidx):

@@ -394,15 +394,14 @@ def test_compact_noop_and_expire_reclaims_small_files(spark, table):
     assert table.read(spark).count() == 30
 
 
-def test_read_published_segments_prunes_buckets(spark, tmp_path, table):
-    """The serving path: a published build is read back pruned to a
+def test_published_postings_prunes_buckets(spark, tmp_path, table):
+    """The serving read: a published build is read back pruned to a
     query's term buckets — file skipping planned from manifest stats,
     decoded postings identical to the source index."""
     from searchengine_spark.indexing.build import term_bucket
-    from searchengine_spark.indexing.segments import decode_postings
+    from searchengine_spark.pipeline import refresh as R
     from searchengine_spark.pipeline.index_pipeline import (
         publish_segments,
-        read_published_segments,
         run_index_pipeline,
         stage_segments,
     )
@@ -420,85 +419,78 @@ def test_read_published_segments_prunes_buckets(spark, tmp_path, table):
     term = idx.postings.select("term").first().term
     plan = table.plan_files([("bucket", "in", [term_bucket(term, 8)])])
     assert plan["skipped_files"] > 0  # stats actually plan files away
+    served, _, _ = R._published_segments(spark, table.root, [term], None)
+    assert len(served.inputFiles()) == plan["kept_files"]
 
-    served = read_published_segments(spark, table.root, terms=[term])
-    dec = decode_postings(served, [term], term_buckets=8)
+    dec = R.published_postings(spark, table.root, [term])
     want = idx.postings.filter(F.col("term") == term)
     assert dec.count() == want.count() > 0
     assert dec.select("term", "doc_id").exceptAll(
         want.select("term", "doc_id")).count() == 0
 
 
-def test_query_published_snapshot_parity(spark, tmp_path, table):
-    """The full serve loop: publish (with corpus scalars as table
-    properties) -> read a pinned version bucket-pruned -> WAND and
-    full-decode BM25 both match querying the staged segments
-    directly."""
+def _published(spark, tmp_path, table, n_docs, tag, corpus_stats=True,
+               biword=False, cluster_partitions=4):
+    """(staged index, staged segments, published version) of the first
+    ``n_docs`` sf0.001 documents."""
     from searchengine_spark.pipeline.index_pipeline import (
         publish_segments,
-        queryable_published,
-        read_published_segments,
         run_index_pipeline,
         stage_segments,
     )
-    from searchengine_spark.queries.wand import decode_topk, wand_topk
 
     root = str(tmp_path / "idx")
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .limit(60))
-    idx = run_index_pipeline(spark, root, docs, "pub3")
-    seg = stage_segments(spark, root, idx, "pub3", block_span=16,
+            .limit(n_docs))
+    idx = run_index_pipeline(spark, root, docs, tag)
+    seg = stage_segments(spark, root, idx, tag, block_span=16,
                          term_buckets=8)
-    v = publish_segments(spark, table.root, seg, term_buckets=8,
-                         corpus_stats=idx.corpus_stats,
-                         cluster_partitions=4)
-    scalars, tb = queryable_published(spark, table.root, v)
-    assert tb == 8
-    assert scalars.corpus_scalars()[0] == 60
+    v = publish_segments(
+        spark, table.root, seg, term_buckets=8,
+        cluster_partitions=cluster_partitions,
+        corpus_stats=idx.corpus_stats if corpus_stats else None,
+        biword=idx.biword if biword else None)
+    return idx, seg, v
+
+
+def test_query_published_snapshot_parity(spark, tmp_path, table):
+    """The full serve loop: publish (with corpus scalars as table
+    properties) -> serve a pinned version bucket-pruned -> exact BM25
+    and WAND both match WAND over the staged segments with the
+    in-memory index's scalars."""
+    from searchengine_spark.pipeline import refresh as R
+    from searchengine_spark.queries.wand import wand_topk
+
+    idx, seg, v = _published(spark, tmp_path, table, 60, "pub3")
+    props = table.properties(v)
+    assert props["term_buckets"] == 8 and props["n_docs"] == 60
 
     term = (idx.postings.groupBy("term").count()
             .orderBy(F.desc("count"), "term").first().term)
     ident = (lambda t: t)
-    served = read_published_segments(spark, table.root, terms=[term],
-                                     version=v)
 
     def key(rows):
         return [(r.doc_id, round(r.score, 9)) for r in rows]
 
     want = key(wand_topk(idx, seg, term, 5, normalize=ident,
                          term_buckets=8).collect())
-    got_wand = key(wand_topk(scalars, served, term, 5, normalize=ident,
-                             term_buckets=8).collect())
-    got_dec = key(decode_topk(scalars, served, term, 5, normalize=ident,
-                              term_buckets=8).collect())
-    assert want and got_wand == want and got_dec == want
+    got_exact = key(R.refreshed_topk(spark, table.root, term, 5,
+                                     normalize=ident, version=v).collect())
+    got_wand = key(R.refreshed_wand_topk(spark, table.root, term, 5,
+                                         normalize=ident,
+                                         version=v).collect())
+    assert want and got_exact == want and got_wand == want
 
 
 def test_ranked_batch_served_from_snapshot_parity(spark, tmp_path, table):
     """The query-log replay path over a published snapshot
-    (queries/serve.ranked_batch_from_published): one job serving a
-    whole query batch, per-query identical — doc_ids AND scores — to
-    single-query full-decode BM25 over the same snapshot version."""
-    from searchengine_spark.pipeline.index_pipeline import (
-        publish_segments,
-        queryable_published,
-        read_published_segments,
-        run_index_pipeline,
-        stage_segments,
-    )
-    from searchengine_spark.queries.serve import ranked_batch_from_published
+    (pipeline/refresh.refreshed_topk_batch): one decode serving a whole
+    query batch, per-query identical — doc_ids AND scores — to
+    single-query full-decode BM25 over the staged segments."""
+    from searchengine_spark.pipeline import refresh as R
     from searchengine_spark.queries.wand import decode_topk
 
-    root = str(tmp_path / "idx")
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .limit(60))
-    idx = run_index_pipeline(spark, root, docs, "pubbatch")
-    seg = stage_segments(spark, root, idx, "pubbatch", block_span=16,
-                         term_buckets=8)
-    v = publish_segments(spark, table.root, seg, term_buckets=8,
-                         corpus_stats=idx.corpus_stats,
-                         cluster_partitions=4)
-    scalars, tb = queryable_published(spark, table.root, v)
+    idx, seg, v = _published(spark, tmp_path, table, 60, "pubbatch")
 
     top = [r.term for r in idx.postings.groupBy("term").count()
            .orderBy(F.desc("count"), "term").limit(4).collect()]
@@ -509,7 +501,7 @@ def test_ranked_batch_served_from_snapshot_parity(spark, tmp_path, table):
         "q_repeat": f"{top[0]} {top[0]} {top[3]}",  # multiplicity 2
     }
 
-    batch = ranked_batch_from_published(
+    batch = R.refreshed_topk_batch(
         spark, table.root, queries, k=5, normalize=ident,
         version=v).collect()
     by_q = {}
@@ -519,15 +511,46 @@ def test_ranked_batch_served_from_snapshot_parity(spark, tmp_path, table):
 
     nonempty = 0
     for qid, q in queries.items():
-        terms = sorted(set(q.split()))
-        served = read_published_segments(spark, table.root, terms=terms,
-                                         version=v)
         want = [(r.doc_id, round(r.score, 9)) for r in
-                decode_topk(scalars, served, q, 5, normalize=ident,
-                            term_buckets=tb).collect()]
+                decode_topk(idx, seg, q, 5, normalize=ident,
+                            term_buckets=8).collect()]
         assert by_q.get(qid, []) == want, qid
         nonempty += bool(want)
     assert nonempty == len(queries)
+
+
+def test_ranked_serve_requires_corpus_stats(spark, table):
+    """A snapshot published without corpus_stats cannot be ranked: each
+    ranked reader raises with the republish instruction, before any
+    Spark job, instead of a bare KeyError on 'n_docs'."""
+    from searchengine_spark.indexing.segments import build_segments
+    from searchengine_spark.pipeline import refresh as R
+    from searchengine_spark.pipeline.index_pipeline import publish_segments
+
+    postings = spark.createDataFrame(
+        [("alpha", 1, 1, [0], 3), ("alpha", 2, 2, [0, 2], 4)],
+        "term string, doc_id long, tftd int, positions array<int>, "
+        "doc_length int")
+    publish_segments(spark, table.root,
+                     build_segments(postings, doc_stats=None, block_span=16))
+    sc = spark.sparkContext
+    sc.setJobGroup("no-corpus-stats", "ranked reads without scalars")
+    try:
+        for serve in (
+            lambda: R.refreshed_topk(spark, table.root, "alpha"),
+            lambda: R.refreshed_topk_batch(spark, table.root,
+                                           {"q": "alpha"}),
+            lambda: R.refreshed_wand_topk(spark, table.root, "alpha"),
+        ):
+            with pytest.raises(KeyError, match="corpus_stats"):
+                serve()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "no-corpus-stats")) == []
+    # boolean serving needs no corpus scalars
+    assert sorted(r.doc_id for r in R.refreshed_boolean(
+        spark, table.root, "alpha").collect()) == [1, 2]
 
 
 def test_lineage_entries_match_footers(spark, table):
@@ -541,28 +564,16 @@ def test_lineage_entries_match_footers(spark, table):
 
 
 def test_boolean_served_from_snapshot_parity(spark, tmp_path, table):
-    """The boolean half of the serving path (queries/serve.py): a
-    snapshot published WITH the biword family answers the reference's
-    whole boolean grammar — AND/OR/NOT, 2-term phrase (biword fast
-    path), 3-term positional phrase, NEAR/k — with exactly the
-    in-memory engine's doc_id sets."""
-    from searchengine_spark.pipeline.index_pipeline import (
-        publish_segments,
-        run_index_pipeline,
-        stage_segments,
-    )
+    """The boolean half of the serving path
+    (pipeline/refresh.refreshed_boolean): a snapshot published WITH the
+    biword family answers the reference's whole boolean grammar —
+    AND/OR/NOT, 2-term phrase (biword fast path), 3-term positional
+    phrase, NEAR/k — with exactly the in-memory engine's doc_id sets."""
+    from searchengine_spark.pipeline import refresh as R
     from searchengine_spark.queries.engine import boolean_query
-    from searchengine_spark.queries.serve import boolean_from_published
 
-    root = str(tmp_path / "idx")
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .limit(80))
-    idx = run_index_pipeline(spark, root, docs, "pubbool")
-    seg = stage_segments(spark, root, idx, "pubbool", block_span=16,
-                         term_buckets=8)
-    v = publish_segments(spark, table.root, seg, term_buckets=8,
-                         corpus_stats=idx.corpus_stats, biword=idx.biword,
-                         cluster_partitions=4)
+    idx, _, v = _published(spark, tmp_path, table, 80, "pubbool",
+                           biword=True)
     assert table.properties()["biword"] is True
 
     queries = [
@@ -578,45 +589,33 @@ def test_boolean_served_from_snapshot_parity(spark, tmp_path, table):
     for q in queries:
         want = [r.doc_id for r in boolean_query(idx, q).collect()]
         got = [r.doc_id for r in
-               boolean_from_published(spark, table.root, q,
-                                      version=v).collect()]
+               R.refreshed_boolean(spark, table.root, q,
+                                   version=v).collect()]
         assert got == want, q
         nonempty += bool(want)
     assert nonempty >= 4  # the corpus really exercises the paths
 
 
 def test_boolean_serve_guards(spark, tmp_path, table):
-    """Publishing without biword: 2-term phrase raises with the
-    republish instruction (never silently swaps in positional
-    semantics); appending a delta to a biword-carrying table without
-    the delta's biword rows raises."""
+    """Publishing without biword: 2-term phrase raises (never silently
+    swaps in positional semantics); appending a delta to a
+    biword-carrying table without the delta's biword rows raises."""
     import pytest as _pytest
 
-    from searchengine_spark.pipeline.index_pipeline import (
-        publish_segments,
-        run_index_pipeline,
-        stage_segments,
-    )
-    from searchengine_spark.queries.serve import boolean_from_published
+    from searchengine_spark.pipeline import refresh as R
+    from searchengine_spark.pipeline.index_pipeline import publish_segments
 
-    root = str(tmp_path / "idx")
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .limit(30))
-    idx = run_index_pipeline(spark, root, docs, "pubguard")
-    seg = stage_segments(spark, root, idx, "pubguard", block_span=16,
-                         term_buckets=8)
-
-    publish_segments(spark, table.root, seg, term_buckets=8,
-                     cluster_partitions=2)
+    idx, seg, _ = _published(spark, tmp_path, table, 30, "pubguard",
+                             corpus_stats=False, cluster_partitions=2)
     # other query kinds still work without the biword family
-    assert boolean_from_published(
+    assert R.refreshed_boolean(
         spark, table.root, "table scan").count() >= 0
     with _pytest.raises(KeyError, match="biword"):
-        boolean_from_published(spark, table.root, '"table scan"')
+        R.refreshed_boolean(spark, table.root, '"table scan"')
 
     with_bw = publish_segments(spark, table.root, seg, term_buckets=8,
                                biword=idx.biword, cluster_partitions=2)
-    assert boolean_from_published(
+    assert R.refreshed_boolean(
         spark, table.root, '"table scan"', version=with_bw).count() >= 0
     with _pytest.raises(ValueError, match="biword"):
         publish_segments(spark, table.root, seg, mode="append",

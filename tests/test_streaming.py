@@ -1,46 +1,76 @@
-"""Structured-Streaming ingestion tests: incremental index == batch
-index over the same pages; re-crawl upserts; watermarked stats."""
+"""Structured-Streaming ingestion tests: the streamed index equals a
+batch build over the same pages; re-crawls upsert; the per-micro-batch
+refresh is O(delta) and replay-safe; watermarked stats, stateful
+sessionization and streaming dedup match their batch twins."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.corpus import PAGES_SCHEMA, make_page
+from searchengine_spark.pipeline import refresh as R
+from searchengine_spark.sources.snapshots import SnapshotTable
 
 
-def _write_pages(spark, path, ids, seed=42, mutate=None):
+def _pages(ids, seed=42, mutate=None):
     rows = []
     for i in ids:
         p = make_page(i, seed)
         if mutate:
             p = mutate(p)
         rows.append(p)
-    spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    return rows
+
+
+def _write_pages(spark, path, ids, seed=42, mutate=None):
+    spark.createDataFrame(_pages(ids, seed, mutate), PAGES_SCHEMA).coalesce(
+        1).write.mode("append").parquet(path)
+
+
+def _recrawl(page_no):
+    """A mutate hook re-crawling one page a day later with new text."""
+    def mutate(p):
+        if p["url"].endswith(f"page{page_no:04d}"):
+            p = dict(p, text="fresh recrawl content only",
+                     html=b"<html><body>fresh recrawl content only"
+                          b"</body></html>",
+                     warc_ts=p["warc_ts"] + datetime.timedelta(days=1))
+        return p
+    return mutate
+
+
+def _drain(spark, inp, pages_root, index_root):
+    from searchengine_spark.streaming.ingest import start_segment_maintenance
+
+    start_segment_maintenance(spark, inp, pages_root,
+                              index_root).awaitTermination(120)
+
+
+def _decoded(spark, index_root):
+    """Every live decoded posting (biword rows included) as
+    (term, doc_id, tftd, positions, doc_length) tuples."""
+    return {
+        (r["term"], r["doc_id"], r["tftd"], tuple(r["positions"]),
+         r["doc_length"])
+        for r in R.published_postings(spark, index_root, None).collect()
+    }
 
 
 def test_incremental_matches_batch(spark, tmp_path):
     from searchengine_spark.indexing.build import build_index
-    from searchengine_spark.streaming.ingest import (
-        compact_index,
-        start_incremental_index,
-    )
 
     inp = str(tmp_path / "in")
-    root = str(tmp_path / "idx")
+    pr, ir = str(tmp_path / "pages"), str(tmp_path / "idx")
     _write_pages(spark, inp, range(0, 20))
-    q = start_incremental_index(spark, inp, root)
-    q.awaitTermination(120)
-    # second drop of files → second micro-batch
+    _drain(spark, inp, pr, ir)
+    # second drop of files → second micro-batch (10 new docs over 20:
+    # past the delete-ratio threshold, so this one also compacts)
     _write_pages(spark, inp, range(20, 30))
-    q2 = start_incremental_index(spark, inp, root)
-    q2.awaitTermination(120)
-
-    sidx = compact_index(spark, root)
+    _drain(spark, inp, pr, ir)
 
     batch_docs = spark.read.parquet(inp).select(
         F.xxhash64("url").bitwiseAND(F.lit((1 << 63) - 1)).alias("doc_id"),
@@ -49,24 +79,21 @@ def test_incremental_matches_batch(spark, tmp_path):
     )
     bidx = build_index(batch_docs, byte_size_col="byte_size")
 
-    s = {(r["term"], r["doc_id"], r["tftd"], tuple(r["positions"]))
-         for r in sidx.postings.collect()}
+    got = _decoded(spark, ir)
+    s = {(t, d, tf, pos) for (t, d, tf, pos, _) in got if " " not in t}
     b = {(r["term"], r["doc_id"], r["tftd"], tuple(r["positions"]))
          for r in bidx.postings.collect()}
     assert s == b and len(s) > 0
-    assert sidx.doc_stats.count() == 30
+    assert {(t, d) for (t, d, *_rest) in got if " " in t} \
+        == {(r["term"], r["doc_id"]) for r in bidx.biword.collect()}
+    assert R._docstats_table(ir).read(spark).count() == 30
 
 
 def test_recrawl_last_write_wins(spark, tmp_path):
-    from searchengine_spark.streaming.ingest import (
-        compact_index,
-        start_incremental_index,
-    )
-
     inp = str(tmp_path / "in")
-    root = str(tmp_path / "idx")
+    pr, ir = str(tmp_path / "pages"), str(tmp_path / "idx")
     _write_pages(spark, inp, [1, 2, 3])
-    start_incremental_index(spark, inp, root).awaitTermination(120)
+    _drain(spark, inp, pr, ir)
 
     # re-crawl page 2 with new content (same url → same doc_id)
     def mutate(p):
@@ -75,11 +102,10 @@ def test_recrawl_last_write_wins(spark, tmp_path):
         return p
 
     _write_pages(spark, inp, [2], mutate=mutate)
-    start_incremental_index(spark, inp, root).awaitTermination(120)
+    _drain(spark, inp, pr, ir)
 
-    idx = compact_index(spark, root)
-    assert idx.doc_stats.count() == 3  # still 3 unique urls
-    doc2 = idx.postings.filter(F.col("term") == "recrawl").collect()
+    assert R._docstats_table(ir).read(spark).count() == 3  # 3 unique urls
+    doc2 = R.published_postings(spark, ir, ["recrawl"]).collect()
     assert len(doc2) == 1  # new content indexed, old replaced
 
 
@@ -287,154 +313,120 @@ def test_dedup_stream_matches_batch_exact_dedup(spark, tmp_path):
     assert len(got_urls) == 11
 
 
-def test_segment_maintenance_matches_compacted_index(spark, tmp_path):
-    """Streaming segment maintenance: after replaying drops that include
-    a re-crawled url, the CURRENT segment version must decode to exactly
-    the postings of the compacted delta index (last-write-wins), and old
-    versions must be retired to the retention window."""
-    import os
+@pytest.fixture(scope="module")
+def streamed(spark, tmp_path_factory):
+    """Two drops through the streaming loop: 40 pages, then page 3
+    re-crawled with new text plus 3 new pages. The second micro-batch
+    stays under the compaction thresholds (4 deletes over 43 live
+    docs), so the index is a base plus one merge-on-read delta.
+    Returns (pages_root, index_root, index versions after each drop)."""
+    root = tmp_path_factory.mktemp("streamed")
+    inp, pr, ir = str(root / "in"), str(root / "pages"), str(root / "idx")
+    _write_pages(spark, inp, range(0, 40))
+    _drain(spark, inp, pr, ir)
+    v0 = SnapshotTable(ir).current_version()
+    _write_pages(spark, inp, [3, 40, 41, 42], mutate=_recrawl(3))
+    _drain(spark, inp, pr, ir)
+    return pr, ir, (v0, SnapshotTable(ir).current_version())
 
-    from searchengine_spark.indexing.segments import decode_postings
+
+def test_segment_maintenance_matches_scratch_build(spark, streamed,
+                                                   tmp_path):
+    """After replaying drops that include a re-crawled url, the
+    streamed index decodes to exactly the postings of a from-scratch
+    build over the same pages table, and serves the same BM25 rows and
+    scores."""
+    pr, ir, _ = streamed
+    twin = str(tmp_path / "twin")
+    R.build_pages_index(spark, pr, twin)
+
+    got = _decoded(spark, ir)
+    assert got == _decoded(spark, twin) and len(got) > 0
+    assert "recrawl" in {t for (t, *_rest) in got}
+
+    nonempty = 0
+    for q in ("fresh recrawl content", "page about", "the crawl"):
+        want = [(r.doc_id, round(r.score, 9)) for r in
+                R.refreshed_topk(spark, twin, q, k=5).collect()]
+        assert [(r.doc_id, round(r.score, 9)) for r in
+                R.refreshed_topk(spark, ir, q, k=5).collect()] == want, q
+        nonempty += bool(want)
+    assert nonempty >= 2
+
+
+def test_micro_batch_refresh_carries_files_by_reference(spark, streamed):
+    """A micro-batch below the compaction thresholds commits an append
+    to the index and docstats tables: every earlier data file is
+    carried by reference, and only the batch's own files are new."""
+    pr, ir, (v0, v1) = streamed
+    assert v1 > v0
+    for tbl in (SnapshotTable(ir), R._docstats_table(ir)):
+        cur = tbl.manifest(tbl.current_version())
+        parent = tbl.manifest(cur["parent"])
+        assert cur["mode"] == "append" and cur["delete_files"]
+        assert {f["path"] for f in parent["data_files"]} \
+            <= {f["path"] for f in cur["data_files"]}
+        assert cur["new_files"] == len(cur["data_files"]) \
+            - len(parent["data_files"])
+    pages = SnapshotTable(pr)
+    assert pages.properties()["stream_batch_id"] == 1
+    assert SnapshotTable(ir).properties()["pages_version"] \
+        == pages.current_version()
+
+
+def test_replayed_micro_batch_appends_once(spark, tmp_path):
+    """Running the foreachBatch body again with the same batch id
+    appends nothing and leaves the index unchanged; a batch whose pages
+    commit landed but whose index commit did not (a crash in between)
+    is healed by the replay's refresh."""
     from searchengine_spark.streaming.ingest import (
-        compact_index,
-        read_current_segments,
-        start_incremental_index,
-        start_segment_maintenance,
+        STREAM_BATCH_PROP,
+        maintain_batch,
     )
+
+    pr, ir = str(tmp_path / "pages"), str(tmp_path / "idx")
+    pages, index = SnapshotTable(pr), SnapshotTable(ir)
+    b0 = spark.createDataFrame(_pages(range(0, 12)), PAGES_SCHEMA)
+    maintain_batch(b0, 0, pr, ir)
+    state = (pages.current_version(), index.current_version(),
+             index.properties())
+    maintain_batch(b0, 0, pr, ir)
+    assert (pages.current_version(), index.current_version(),
+            index.properties()) == state
+    assert pages.read(spark).count() == 12
+
+    b1 = spark.createDataFrame(_pages(range(12, 15)), PAGES_SCHEMA)
+    pages.commit(b1, properties={STREAM_BATCH_PROP: 1})  # then a crash
+    maintain_batch(b1, 1, pr, ir)
+    assert pages.current_version() == state[0] + 1
+    assert pages.read(spark).count() == 15
+    assert index.properties()["pages_version"] == pages.current_version()
+    assert index.properties()["n_docs"] == 15
+
+
+def test_submit_stream_maintenance_job_two_drops(spark, tmp_path, capsys):
+    """The spark-submit driver end to end (session injected): the
+    first drop builds the index, the second refreshes it; each run
+    prints one JSON line."""
+    import json
+    import sys as _sys
+    _sys.path.insert(0, "scripts")
+    from submit_stream_maintenance_job import main as job
 
     inp = str(tmp_path / "in")
-    seg_root = str(tmp_path / "segs")
-    idx_root = str(tmp_path / "idx")
+    argv = ["--input", inp, "--pages-root", str(tmp_path / "pages"),
+            "--index-root", str(tmp_path / "idx")]
+    _write_pages(spark, inp, range(0, 30))
+    out0 = job(argv, spark=spark)
+    assert out0["pages_version"] == out0["indexed_pages_version"] == 0
+    assert out0["n_docs"] == 30
+    assert out0["maintenance"]["delta_commits"] == 0
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert json.loads(line)["index_version"] == out0["index_version"]
 
-    _write_pages(spark, inp, range(0, 12))
-    start_segment_maintenance(spark, inp, seg_root).awaitTermination(120)
-
-    # drop 2: re-crawl page 3 with NEW text (same url → same doc_id,
-    # old postings must vanish) + 4 fresh pages
-    def mutate(p):
-        if p["url"].endswith("page0003"):
-            import datetime
-
-            p = dict(p, text="fresh recrawl content only",
-                     html=b"<html><body>fresh recrawl content only"
-                          b"</body></html>",
-                     warc_ts=p["warc_ts"] + datetime.timedelta(days=1))
-        return p
-
-    _write_pages(spark, inp, [3, 12, 13, 14, 15], mutate=mutate)
-    start_segment_maintenance(spark, inp, seg_root).awaitTermination(120)
-
-    seg, cur = read_current_segments(spark, seg_root)
-    assert seg is not None and cur["version"] >= 1
-    got = {
-        (r["term"], r["doc_id"], r["tftd"], tuple(r["positions"]),
-         r["doc_length"])
-        for r in decode_postings(seg, terms=None).collect()
-    }
-
-    # batch twin: the delta-append + compact path over the same drops
-    start_incremental_index(spark, inp, idx_root).awaitTermination(120)
-    cidx = compact_index(spark, idx_root)
-    dl = {r["doc_id"]: int(r["doc_length"])
-          for r in cidx.doc_stats.collect()}
-    want = {
-        (r["term"], r["doc_id"], r["tftd"], tuple(r["positions"]),
-         dl[r["doc_id"]])
-        for r in cidx.postings.collect()
-    }
-    assert got == want and len(got) > 0
-
-    # the re-crawl actually replaced content: page 3's fresh terms exist
-    terms = {t for (t, *_rest) in got}
-    assert "recrawl" in terms
-
-    # retention: at most the two newest versions remain on disk
-    versions = [d for d in os.listdir(seg_root)
-                if d.startswith("v") and d[1:].isdigit()]
-    assert len(versions) <= 2
-
-    # the maintained set is directly QUERYABLE: block-max WAND over the
-    # current version (scalars from its doc-stats sidecar) must be
-    # rank-identical to unpruned BM25 over the compacted twin
-    from searchengine_spark.queries.ranked import rank_topk
-    from searchengine_spark.queries.wand import wand_topk
-    from searchengine_spark.streaming.ingest import current_queryable
-
-    seg_q, scalars = current_queryable(spark, seg_root)
-    got_top = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand_topk(scalars, seg_q, "fresh recrawl content",
-                           5).collect()
-    ]
-    want_top = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in rank_topk(cidx, "fresh recrawl content", "bm25",
-                           5).collect()
-    ]
-    assert got_top == want_top and len(got_top) > 0
-
-
-def test_publish_current_serves_streamed_index(spark, tmp_path):
-    """streaming/ingest.publish_current bridges the maintenance loop to
-    the published serving surface: after a re-crawl lands, the snapshot
-    version it commits serves BM25 — single-query decode AND the
-    one-job batch path — rank-and-score-identical to WAND over the
-    maintained current version, with corpus scalars equal to the
-    doc-stats sidecar's."""
-    import datetime
-
-    from searchengine_spark.pipeline.index_pipeline import (
-        queryable_published,
-        read_published_segments,
-    )
-    from searchengine_spark.queries.serve import ranked_batch_from_published
-    from searchengine_spark.queries.wand import decode_topk, wand_topk
-    from searchengine_spark.streaming.ingest import (
-        current_queryable,
-        publish_current,
-        start_segment_maintenance,
-    )
-
-    inp = str(tmp_path / "in")
-    seg_root = str(tmp_path / "segs")
-    tbl_root = str(tmp_path / "tbl")
-
-    _write_pages(spark, inp, range(0, 12))
-    start_segment_maintenance(spark, inp, seg_root).awaitTermination(120)
-
-    def mutate(p):
-        if p["url"].endswith("page0003"):
-            p = dict(p, text="fresh recrawl content only",
-                     html=b"<html><body>fresh recrawl content only"
-                          b"</body></html>",
-                     warc_ts=p["warc_ts"] + datetime.timedelta(days=1))
-        return p
-
-    _write_pages(spark, inp, [3, 12, 13, 14], mutate=mutate)
-    start_segment_maintenance(spark, inp, seg_root).awaitTermination(120)
-
-    v = publish_current(spark, seg_root, tbl_root, term_buckets=8,
-                        cluster_partitions=4)
-    cur_seg, cur_scalars = current_queryable(spark, seg_root)
-    pub_scalars, tb = queryable_published(spark, tbl_root, v)
-    assert pub_scalars.corpus_scalars() == cur_scalars.corpus_scalars()
-    assert tb == 8
-
-    q = "fresh recrawl content"
-    want = [(r["doc_id"], round(r["score"], 9))
-            for r in wand_topk(cur_scalars, cur_seg, q, 5).collect()]
-    assert want  # the re-crawled doc is findable
-
-    pub_seg = read_published_segments(spark, tbl_root,
-                                      terms=sorted(set(q.split())),
-                                      version=v)
-    got = [(r["doc_id"], round(r["score"], 9))
-           for r in decode_topk(pub_scalars, pub_seg, q, 5,
-                                term_buckets=tb).collect()]
-    assert got == want
-
-    batch = ranked_batch_from_published(
-        spark, tbl_root, {"q0": q}, k=5, version=v).collect()
-    got_batch = [(r.doc_id, round(r.score, 9))
-                 for r in sorted(batch, key=lambda r: r.rank)]
-    assert got_batch == want
+    _write_pages(spark, inp, [5, 30, 31], mutate=_recrawl(5))
+    out1 = job(argv, spark=spark)
+    assert out1["pages_version"] == out1["indexed_pages_version"] == 1
+    assert out1["n_docs"] == 32
+    assert out1["index_version"] > out0["index_version"]
+    assert out1["maintenance"]["delta_commits"] == 1

@@ -2,7 +2,7 @@
 recorded in PERF.md) — run `python tools/explain_audit.py` to verify
 partition pruning, filter pushdown, broadcast joins, and
 TakeOrderedAndProject claims against the live Catalyst output. The
-ranked entry points' plan claims are asserted by
+ranked entry points' and the term lookup's plan claims are asserted by
 tests/test_scorer_plans.py instead."""
 
 from __future__ import annotations
@@ -16,11 +16,7 @@ sys.path.insert(0, ".")
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from searchengine_spark.indexing.build import (
-        read_index,
-        term_filter,
-        write_index,
-    )
+    from searchengine_spark.indexing.build import read_index, write_index
     from searchengine_spark.indexing.simple import build_simple_index, simple_query_term
     from searchengine_spark.session import get_spark
 
@@ -30,12 +26,6 @@ def main() -> None:
     path = tempfile.mkdtemp(prefix="audit_idx_")
     write_index(idx, path, term_buckets=16)
     pidx = read_index(spark, path)
-
-    print("=" * 70)
-    print("TERM LOOKUP — expect PartitionFilters [bucket = k] and")
-    print("PushedFilters [EqualTo(term,...)], ReadSchema without waste")
-    print("=" * 70)
-    term_filter(pidx.postings, ["table"], pidx.term_buckets).explain("formatted")
 
     print("=" * 70)
     print("JACCARD VERIFY — candidate x shingle joins must be SortMergeJoin")
@@ -55,7 +45,7 @@ def main() -> None:
     print("SEGMENT MERGE — the base side must stream through BROADCAST")
     print("joins only (collision keys + superseded blocks/ids are all")
     print("delta-sized); the cold path is scan->filter->passthrough with")
-    print("no Exchange; only hot groups reach the decode/re-encode UDFs")
+    print("no Exchange; only hot groups reach the explode + regroup")
     print("=" * 70)
     from searchengine_spark.indexing.segments import (
         build_segments,
