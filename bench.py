@@ -726,8 +726,8 @@ def run_wand_crossover(queries: dict, extra: dict) -> None:
         )
 
     def run_wand():
-        return wand_topk(idx, seg, "hot", 10, normalize=lambda t: t,
-                         champion_blocks=8).collect()
+        return wand_topk((n_docs, avg_dl), seg, "hot", 10,
+                         normalize=lambda t: t, champion_blocks=8).collect()
 
     def unsettled(ws: list[float]) -> bool:
         if len(ws) < 2:
@@ -954,7 +954,8 @@ def run_main(queries: dict, extra: dict) -> None:
         phrase_walls.append(time.time() - t0)
         for q in wand_lat:
             t0 = time.time()
-            wand_topk(ridx, seg, q, 10, champion_blocks=4).collect()
+            wand_topk(ridx.corpus_scalars(), seg, q, 10,
+                      champion_blocks=4).collect()
             wand_lat[q].append(time.time() - t0)
         t0 = time.time()
         rank_topk_batch(ridx, batch_queries, "bm25", 10).collect()

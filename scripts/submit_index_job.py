@@ -68,11 +68,10 @@ def main() -> None:
             stage_segments,
         )
 
-        seg = stage_segments(spark, args.root, index, fp,
-                             term_buckets=args.term_buckets)
+        seg = stage_segments(spark, args.root, index, fp)
         published = publish_segments(spark, args.publish_root, seg,
-                                     note=f"build {fp}",
                                      term_buckets=args.term_buckets,
+                                     note=f"build {fp}",
                                      corpus_stats=index.corpus_stats,
                                      biword=index.biword)
     wall = time.time() - t0

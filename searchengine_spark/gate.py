@@ -790,34 +790,29 @@ def index_refresh_postings(spark, sf_dir):
     import tempfile
 
     from .indexing.segments import build_segments
+    from .pipeline.index_pipeline import publish_segments
     from .pipeline.refresh import published_postings
-    from .sources.snapshots import SnapshotTable
 
     docs = load_table(spark, sf_dir, "documents")
     root = os.path.join(
         tempfile.gettempdir(),
         "snapdelta_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
     shutil.rmtree(root, ignore_errors=True)
-    tbl = SnapshotTable(root)
-
-    def bucketed(seg):
-        return seg.withColumn(
-            "bucket",
-            F.pmod(F.crc32(F.col("term").cast("binary")),
-                   F.lit(8)).cast("int"))
 
     idx = simple_index(spark, sf_dir)
-    tbl.commit(bucketed(build_segments(idx.postings, idx.doc_stats,
-                                       block_span=64)),
-               mode="overwrite", note="base build",
-               properties={"term_buckets": 8})
+    publish_segments(spark, root,
+                     build_segments(idx.postings, idx.doc_stats,
+                                    block_span=64),
+                     term_buckets=8, block_span=64, note="base build")
     recrawled = docs.filter(F.col("doc_id") % 7 == 0).select(
         "doc_id", F.concat("text", F.lit(" merged refresh")).alias("text"))
     delta_idx = build_simple_index(recrawled)
-    tbl.commit(bucketed(build_segments(delta_idx.postings,
-                                       delta_idx.doc_stats, block_span=64)),
-               deletes=recrawled.select("doc_id"),
-               equality_columns=["doc_id"], note="re-crawl delta")
+    publish_segments(spark, root,
+                     build_segments(delta_idx.postings, delta_idx.doc_stats,
+                                    block_span=64),
+                     term_buckets=8, block_span=64, mode="append",
+                     note="re-crawl delta",
+                     deletes=recrawled.select("doc_id"))
     live = published_postings(spark, root, terms=None)
     return live.select(
         "term",
@@ -844,21 +839,14 @@ def index_refresh_bm25(spark, sf_dir):
     import tempfile
 
     from .indexing.segments import build_segments
+    from .pipeline.index_pipeline import publish_segments
     from .pipeline.refresh import refreshed_topk
-    from .sources.snapshots import SnapshotTable
 
     docs = load_table(spark, sf_dir, "documents")
     root = os.path.join(
         tempfile.gettempdir(),
         "snaprfr_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
     shutil.rmtree(root, ignore_errors=True)
-    tbl = SnapshotTable(root)
-
-    def bucketed(seg):
-        return seg.withColumn(
-            "bucket",
-            F.pmod(F.crc32(F.col("term").cast("binary")),
-                   F.lit(8)).cast("int"))
 
     stale = docs.select(
         "doc_id",
@@ -866,20 +854,19 @@ def index_refresh_bm25(spark, sf_dir):
                F.concat("text", F.lit(" stale crawl junk")))
         .otherwise(F.col("text")).alias("text"))
     stale_idx = build_simple_index(stale)
-    tbl.commit(bucketed(build_segments(stale_idx.postings,
-                                       stale_idx.doc_stats, block_span=64)),
-               mode="overwrite", note="stale base",
-               properties={"term_buckets": 8})
+    publish_segments(spark, root,
+                     build_segments(stale_idx.postings, stale_idx.doc_stats,
+                                    block_span=64),
+                     term_buckets=8, block_span=64, note="stale base")
     fresh = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id", "text")
     fresh_idx = build_simple_index(fresh)
-    scalars = simple_index(spark, sf_dir).corpus_stats.collect()[0]
-    tbl.commit(bucketed(build_segments(fresh_idx.postings,
-                                       fresh_idx.doc_stats, block_span=64)),
-               deletes=fresh.select("doc_id"),
-               equality_columns=["doc_id"], note="true-text re-crawl",
-               properties={"n_docs": int(scalars["n_docs"]),
-                           "avg_doc_length": float(
-                               scalars["avg_doc_length"])})
+    publish_segments(spark, root,
+                     build_segments(fresh_idx.postings, fresh_idx.doc_stats,
+                                    block_span=64),
+                     term_buckets=8, block_span=64, mode="append",
+                     note="true-text re-crawl",
+                     corpus_stats=simple_index(spark, sf_dir).corpus_stats,
+                     deletes=fresh.select("doc_id"))
     top = refreshed_topk(spark, root, RANK_QUERY, k=10,
                          normalize=simple_query_term)
     return top.select(
@@ -895,7 +882,8 @@ def wand_bm25(spark, sf_dir):
     from .queries.wand import wand_topk
 
     idx = simple_index(spark, sf_dir)
-    top = wand_topk(idx, _segments(spark, sf_dir), RANK_QUERY, 10,
+    top = wand_topk(idx.corpus_scalars(), _segments(spark, sf_dir),
+                    RANK_QUERY, 10,
                     normalize=simple_query_term, champion_blocks=4)
     return top.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1008,11 +996,8 @@ def snapshot_boolean_serve(spark, sf_dir):
         tempfile.gettempdir(),
         "snapbool_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
     shutil.rmtree(root, ignore_errors=True)
-    seg = build_segments(idx.postings, idx.doc_stats).withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(8)).cast("int"))
-    publish_segments(spark, root, seg, term_buckets=8, biword=idx.biword,
-                     cluster_partitions=4)
+    publish_segments(spark, root, build_segments(idx.postings, idx.doc_stats),
+                     term_buckets=8, biword=idx.biword)
     return refreshed_boolean(
         spark, root, "table scan + agg -join",
         normalize=simple_query_term,
@@ -1050,11 +1035,8 @@ def snapshot_ranked_serve(spark, sf_dir):
         tempfile.gettempdir(),
         "snaprank_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
     shutil.rmtree(root, ignore_errors=True)
-    seg = build_segments(idx.postings, idx.doc_stats).withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(8)).cast("int"))
-    publish_segments(spark, root, seg, term_buckets=8,
-                     corpus_stats=idx.corpus_stats, cluster_partitions=4)
+    publish_segments(spark, root, build_segments(idx.postings, idx.doc_stats),
+                     term_buckets=8, corpus_stats=idx.corpus_stats)
     top = refreshed_topk_batch(
         spark, root, BATCH_RANK_QUERIES, k=10,
         normalize=simple_query_term)

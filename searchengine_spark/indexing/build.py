@@ -23,8 +23,9 @@ Design for 10^12-doc scale — the index build is SHUFFLE-FREE:
   parallel by construction, which is why the measured N→4N scaling of
   this stage tracks ~1.0 (BENCH/PERF.md). The only shuffles left in
   the indexing lifecycle are the ones that buy a queryable layout:
-  the term-bucket repartition in ``write_index``/``stage_segments``
-  and per-TERM collection stats (``term_stats_salted``, skew-salted).
+  the term-bucket range clustering in
+  ``pipeline/index_pipeline.publish_segments`` and per-TERM collection
+  stats (``term_stats_salted``, skew-salted).
 * ``doc_stats`` / ``corpus_stats`` are tiny per-doc / scalar tables;
   corpus_stats is broadcast at query time.
 * Everything downstream is columnar: the ranked path never reads the
@@ -37,7 +38,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -140,7 +141,6 @@ class SparkIndex:
     doc_stats: DataFrame  # doc_id, Ld, doc_length, byte_size, avg_tftd
     corpus_stats: DataFrame  # n_docs, avg_doc_length
     biword: DataFrame  # term ("t1 t2"), doc_id
-    term_buckets: int | None = None  # bucket-partition count when persisted
     _scalars: tuple[int, float] | None = None
 
     def corpus_scalars(self) -> tuple[int, float]:
@@ -293,67 +293,10 @@ def term_stats_salted(postings: DataFrame, salt: int = 16) -> DataFrame:
     )
 
 
-def write_index(index: SparkIndex, path: str, term_buckets: int = 64) -> None:
-    """Persist the index as parquet, term-hash partitioned so query-time
-    term lookups prune to one directory (the Spark analogue of the
-    reference's SQLite term->offset B-tree, diskindexwriter.py:30-38).
-
-    The bucket count is stored in _meta.json and MUST be read back for
-    pruning — a mismatched modulus silently filters out real postings.
-    """
-    (
-        index.postings.withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(term_buckets)).cast("int")
-        )
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    index.doc_stats.write.mode("overwrite").parquet(f"{path}/doc_stats")
-    index.corpus_stats.write.mode("overwrite").parquet(f"{path}/corpus_stats")
-    (
-        index.biword.withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(term_buckets)).cast("int")
-        )
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/biword")
-    )
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(f"{path}/_meta.json", "w") as fh:
-        json.dump({"term_buckets": term_buckets}, fh)
-
-
-def read_index(spark: SparkSession, path: str) -> SparkIndex:
-    """Load a persisted index. The ``bucket`` partition column is kept:
-    the query engine filters on it so term lookups prune to a single
-    partition directory instead of scanning all postings."""
-    import json
-    import os
-
-    term_buckets = None
-    meta_path = f"{path}/_meta.json"
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            term_buckets = json.load(fh).get("term_buckets")
-    return SparkIndex(
-        postings=spark.read.parquet(f"{path}/postings"),
-        doc_stats=spark.read.parquet(f"{path}/doc_stats"),
-        corpus_stats=spark.read.parquet(f"{path}/corpus_stats"),
-        biword=spark.read.parquet(f"{path}/biword"),
-        term_buckets=term_buckets,
-    )
-
-
 def term_bucket(term: str, term_buckets: int = 64) -> int:
     """Driver-side bucket id for a term — crc32 so Python and the JVM
-    (F.crc32) agree, letting query-time lookups emit LITERAL bucket
-    predicates that Catalyst turns into partition pruning (the Spark
+    (:func:`term_bucket_col`) agree, letting query-time lookups emit
+    LITERAL bucket predicates that plan data files away (the Spark
     analogue of the reference's SQLite term->byte-offset seek,
     diskindexwriter.py:116-123)."""
     import zlib
@@ -361,12 +304,15 @@ def term_bucket(term: str, term_buckets: int = 64) -> int:
     return zlib.crc32(term.encode("utf-8")) % term_buckets
 
 
-def term_filter(df: DataFrame, terms: list[str], term_buckets: int | None = None):
-    """Filter a (possibly bucket-partitioned) postings frame to a term
-    set; adds literal bucket predicates for partition pruning when the
-    bucket count is known (from SparkIndex.term_buckets)."""
-    cond = F.col("term").isin(terms)
-    if term_buckets and "bucket" in df.columns and terms:
-        buckets = sorted({term_bucket(t, term_buckets) for t in terms})
-        return df.filter(F.col("bucket").isin(buckets) & cond)
-    return df.filter(cond)
+def term_bucket_col(term_buckets: int) -> F.Column:
+    """The JVM twin of :func:`term_bucket` over the ``term`` column —
+    the one place an index table's ``bucket`` column is computed."""
+    return F.pmod(F.crc32(F.col("term").cast("binary")),
+                  F.lit(term_buckets)).cast("int")
+
+
+def term_filter(df: DataFrame, terms: list[str]) -> DataFrame:
+    """Filter a postings or segments frame to a term set. Bucket
+    pruning happens earlier, when the index table's files are planned
+    (pipeline/refresh.published_postings)."""
+    return df.filter(F.col("term").isin(terms))

@@ -28,15 +28,16 @@ posting ``VB(docid_gap) VB(tftd) VB(position_gaps...)``), redesigned for
   ranked reads project only (doc_ids, tftds, doc_lengths) — the
   columnar replacement for the reference's byte-skipping read path
   (``indexes/diskpositionalindex.py``).
-* Written parquet partitioned by ``bucket = crc32(term) % n`` so a
-  query's term lookups prune to a handful of partition directories
-  (the Spark analogue of the SQLite term→offset B-tree,
-  /root/reference/diskindexwriter.py:30-38).
+* Committed by ONE writer, ``pipeline/index_pipeline.publish_segments``,
+  which adds ``bucket = crc32(term) % n`` and range-clusters the files
+  by it, so a query's term lookups plan away every file outside their
+  buckets from manifest stats (the Spark analogue of the SQLite
+  term→offset B-tree, the reference's diskindexwriter.py:30-38).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_BLOCK_SPAN = 4096
@@ -82,37 +83,6 @@ def build_segments(postings: DataFrame, doc_stats: DataFrame,
         F.col("ps.positions").alias("positions"),
         F.col("ps.doc_length").alias("doc_lengths"),
     )
-
-
-def write_segments(postings: DataFrame, doc_stats: DataFrame, path: str,
-                   block_span: int = DEFAULT_BLOCK_SPAN,
-                   term_buckets: int = 64) -> None:
-    """Materialize segments parquet, bucket-partitioned by term hash
-    (+ build lineage: spark partition id per row)."""
-    seg = build_segments(postings, doc_stats, block_span).withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(term_buckets)).cast("int"),
-    ).withColumn("_build_part", F.spark_partition_id())
-    (
-        seg.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/segments")
-    )
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(f"{path}/_segments_meta.json", "w") as fh:
-        json.dump({"block_span": block_span, "term_buckets": term_buckets}, fh)
-
-
-def read_segments(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
-    import json
-
-    with open(f"{path}/_segments_meta.json") as fh:
-        meta = json.load(fh)
-    return spark.read.parquet(f"{path}/segments"), meta
 
 
 SEG_COLS = [
@@ -171,6 +141,12 @@ def merge_segments(base: DataFrame, delta: DataFrame,
       identical to a from-scratch build of the logical union corpus
       (the grouping is deterministic: arrays sorted by doc_id;
       asserted by pytest and the ``segments_merge`` gate entry).
+
+    Returns the WHOLE merged set (cold base groups ∪ regrouped hot
+    groups), so it replaces the base: publish it with
+    ``mode="overwrite"`` — appended, the cold groups would be stored
+    twice.  ``pipeline/refresh.refresh_pages_index`` is the merge-on-read
+    alternative that writes only the delta.
 
     Scale shape: with B = blocks touched by the delta, the rewrite work
     is O(B · block_span) postings regardless of index size. A uniformly
@@ -235,7 +211,6 @@ def biword_as_segments(biword: DataFrame,
 
 
 def decode_postings(segments: DataFrame, terms: list[str] | None,
-                    term_buckets: int | None = None,
                     with_positions: bool = True,
                     passthrough: tuple = ()) -> DataFrame:
     """Segments → exploded postings for a term set. Ranked reads pass
@@ -252,7 +227,7 @@ def decode_postings(segments: DataFrame, terms: list[str] | None,
         raise ValueError(
             "segments are in the retired VB format (docids_vb binary "
             "columns) — rebuild them with build_segments()")
-    seg = segments if terms is None else term_filter(segments, terms, term_buckets)
+    seg = segments if terms is None else term_filter(segments, terms)
     # Ranked reads skip the positions column entirely (columnar
     # position-skip, R2) but keep the in-segment doc_lengths — the
     # scorer needs no doc_stats join.

@@ -70,7 +70,6 @@ def run_stage(
     stage: str,
     fingerprint: str,
     build: Callable[[], DataFrame],
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Build-or-resume one stage; returns the stage output DataFrame
     (always read back from parquet so downstream lineage starts at the
@@ -84,23 +83,9 @@ def run_stage(
     os.makedirs(stage_dir, exist_ok=True)
     t0 = time.time()
     df = build()
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_dir)
+    df.write.mode("overwrite").parquet(data_dir)
     wall = time.time() - t0
-
-    if partition_by:
-        # lineage per leaf directory
-        files: list[dict] = []
-        for dirpath, _, names in os.walk(data_dir):
-            if any(n.endswith(".parquet") for n in names):
-                rel = os.path.relpath(dirpath, data_dir)
-                for e in _collect_file_lineage(dirpath):
-                    e["partition"] = rel
-                    files.append(e)
-    else:
-        files = _collect_file_lineage(data_dir)
+    files = _collect_file_lineage(data_dir)
 
     manifest = {
         "stage": stage,

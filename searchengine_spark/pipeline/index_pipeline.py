@@ -35,6 +35,13 @@ from ..indexing.build import (
     analyze_udf,
     doc_local_avg_tftd,
     doc_local_ld,
+    term_bucket_col,
+)
+from ..indexing.segments import (
+    DEFAULT_BLOCK_SPAN,
+    SEG_COLS,
+    biword_as_segments,
+    build_segments,
 )
 from .checkpoint import run_stage
 
@@ -159,127 +166,110 @@ def stage_segments(
     root: str,
     index: SparkIndex,
     fingerprint: str,
-    block_span: int = 4096,
-    term_buckets: int = 64,
+    block_span: int = DEFAULT_BLOCK_SPAN,
 ) -> DataFrame:
-    """Optional final stage: compressed block-split segments
-    (indexing/segments.py) as a checkpointed, term-bucket-partitioned
-    table — the queryable artifact of the build. Partitioned writes
-    give per-(bucket, task) lineage in the manifest."""
-    from ..indexing.segments import build_segments
-
-    # "arrays": the segment format; a VB-era checkpoint is not reused
-    fp = (f"{PIPELINE_VERSION}:{fingerprint}:arrays"
-          f":seg{block_span}x{term_buckets}")
-
-    def build():
-        return (
-            build_segments(index.postings, index.doc_stats, block_span)
-            .withColumn(
-                "bucket",
-                F.pmod(
-                    F.crc32(F.col("term").cast("binary")), F.lit(term_buckets)
-                ).cast("int"),
-            )
-            .withColumn("_build_part", F.spark_partition_id())
-            .repartition("bucket")
-        )
-
-    return run_stage(spark, root, "segments", fp, build,
-                     partition_by=["bucket"])
+    """Optional final stage: block-split segments
+    (indexing/segments.build_segments) as a checkpoint, ready for
+    :func:`publish_segments` — which alone decides the served table's
+    bucketing and file clustering."""
+    # "arrays": the segment format; an older VB-era or bucketed
+    # checkpoint has another fingerprint and is rebuilt
+    fp = f"{PIPELINE_VERSION}:{fingerprint}:arrays:seg{block_span}"
+    return run_stage(
+        spark, root, "segments", fp,
+        lambda: build_segments(index.postings, index.doc_stats, block_span))
 
 
 def publish_segments(
     spark: SparkSession,
     table_root: str,
     segments: DataFrame,
-    note: str | None = None,
+    term_buckets: int = 64,
+    block_span: int = DEFAULT_BLOCK_SPAN,
+    *,
     mode: str = "overwrite",
-    term_buckets: int | None = None,
-    cluster: bool = True,
-    cluster_partitions: int | None = None,
-    corpus_stats: DataFrame | None = None,
+    note: str | None = None,
     biword: DataFrame | None = None,
+    corpus_stats: DataFrame | None = None,
+    properties: dict | None = None,
+    deletes: DataFrame | None = None,
 ) -> int:
-    """Commit the queryable segment table as a new snapshot of a
-    ``SnapshotTable`` (sources/snapshots.py) — the north rule's
-    "term-partitioned index segments written back to Iceberg" step.
-    Each build becomes a table version: serving readers pin
-    ``table.read(spark, version=v)`` (an immutable file list, so a
-    concurrent publish never disturbs them), a bad build is undone with
-    ``table.rollback(v-1)`` in O(1), and ``mode="append"`` publishes a
-    delta-merge build (indexing/segments.merge_segments) without
-    rewriting the base segment files. Returns the committed version.
+    """Commit segment rows (indexing/segments.SEG_COLS) as a new
+    snapshot of the index ``SnapshotTable`` at ``table_root`` — the
+    north rule's "term-partitioned index segments written back to
+    Iceberg" step, and the ONLY writer of an index table: it alone
+    decides the bucketing, the file clustering and the layout
+    properties, so readers and the files can never disagree on them.
+    Returns the committed version.
 
-    ``cluster=True`` range-clusters the written files by term bucket so
-    each data file covers a narrow bucket range — that makes the
-    manifest's per-file min/max stats selective, and the serving reads
-    (pipeline/refresh.refreshed_*) plan away the files outside a
-    query's buckets (Iceberg data-file pruning). ``term_buckets`` is
-    recorded as a table property so readers recover the bucket modulus
-    from the table itself; ``corpus_stats`` rides as the ``n_docs`` and
-    ``avg_doc_length`` properties the ranked readers need.
+    * ``bucket`` is derived here (``term_bucket_col(term_buckets)``);
+      any ``bucket`` column the caller brings is replaced.  The files
+      are range-clustered by it, so each covers a narrow bucket range,
+      the manifest's per-file min/max stats stay selective, and the
+      serving reads (pipeline/refresh.refreshed_*) plan away the files
+      outside a query's buckets (Iceberg data-file pruning).
+    * ``term_buckets`` and ``block_span`` are recorded as table
+      properties: readers take the bucket modulus from the table, and
+      refresh/rewrite reuse the span.  An append must match the
+      parent's values.
+    * ``biword`` — the index's two-term fast-path table (term "t1 t2",
+      doc_id) — rides in the SAME snapshot through the segment format
+      (indexing/segments.biword_as_segments, with this ``block_span``):
+      biword keys contain a space and unigram terms never do, so one
+      table version serves boolean, phrase (biword fast path), NEAR and
+      ranked queries.  Passing it sets the ``biword`` property, which
+      later commits inherit; an append to a biword table must pass the
+      delta's biword rows.
+    * ``corpus_stats`` rides as the ``n_docs`` and ``avg_doc_length``
+      properties the ranked readers need; ``properties`` adds any
+      other table property (the layout keys above are the writer's).
+    * ``deletes`` (a ``doc_id`` frame, ``mode="append"``) is a
+      merge-on-read row-delta commit: older rows of those doc_ids are
+      dropped at read time, this commit's rows are kept.
 
-    ``biword`` (the index's two-term fast-path table, columns term
-    "t1 t2" + doc_id) rides in the SAME snapshot, stored in the
-    segment format (indexing/segments.biword_as_segments): biword keys
-    contain a space and unigram terms never do, so no discriminator
-    column is needed and one table version serves the reference's whole
-    query surface — boolean, phrase (biword fast path), NEAR and
-    ranked. Recorded as the ``biword`` table property so serving
-    readers know the fast path is available."""
+    Each commit is a table version: serving readers pin a version (an
+    immutable file list, so a concurrent publish never disturbs them),
+    and a bad build is undone with ``SnapshotTable.rollback`` in O(1).
+    ``mode="append"`` adds the segments as a new layer next to the
+    parent's files — for fresh documents, or with ``deletes`` for
+    superseded ones.  An ``indexing/segments.merge_segments`` result is
+    a whole segment set and is published with ``mode="overwrite"``."""
     from ..sources.snapshots import SnapshotTable
 
-    if biword is None and mode == "append":
-        # A delta append to a table that serves the biword fast path
-        # must carry the delta's biword rows too, or two-term phrase
-        # queries silently miss every new document.
-        try:
-            parent_has_biword = SnapshotTable(table_root).properties().get(
-                "biword")
-        except (OSError, ValueError, KeyError, IndexError):
-            parent_has_biword = False
-        if parent_has_biword:
+    table = SnapshotTable(table_root)
+    if mode == "append":
+        parent = (table.properties()
+                  if table.current_version() is not None else {})
+        if biword is None and parent.get("biword"):
+            # two-term phrase queries would silently miss every
+            # appended document
             raise ValueError(
                 "appending to a snapshot published with the biword family "
                 "requires biword=<delta biword DataFrame> so the fast path "
                 "stays complete for the appended documents")
-
-    if biword is not None:
-        from ..indexing.segments import biword_as_segments
-
-        bw = biword_as_segments(biword)
-        if "bucket" in segments.columns:
-            if not term_buckets:
+        for key, value in (("term_buckets", term_buckets),
+                           ("block_span", block_span)):
+            if parent.get(key, value) != value:
                 raise ValueError(
-                    "publish_segments(biword=...) on a bucket-partitioned "
-                    "segment set needs term_buckets= to bucket the biword "
-                    "keys with the same modulus")
-            bw = bw.withColumn(
-                "bucket",
-                F.pmod(F.crc32(F.col("term").cast("binary")),
-                       F.lit(term_buckets)).cast("int"),
-            )
-        segments = segments.unionByName(bw, allowMissingColumns=True)
+                    f"append with {key}={value} to a table recorded with "
+                    f"{key}={parent[key]}: every layer of an index table "
+                    "shares one layout")
 
-    if cluster and "bucket" in segments.columns:
-        # Explicit partition count pins the file layout (AQE may
-        # coalesce a count-less range repartition on small inputs,
-        # which would merge bucket ranges and blunt the file stats).
-        segments = (
-            segments.repartitionByRange(cluster_partitions, "bucket")
-            if cluster_partitions
-            else segments.repartitionByRange("bucket"))
-    props: dict = {"term_buckets": term_buckets} if term_buckets else {}
+    segments = segments.select(*SEG_COLS)
+    if biword is not None:
+        segments = segments.unionByName(
+            biword_as_segments(biword, block_span))
+    segments = segments.withColumn(
+        "bucket", term_bucket_col(term_buckets)).repartitionByRange("bucket")
+
+    props = {**(properties or {}),
+             "term_buckets": term_buckets, "block_span": block_span}
     if biword is not None:
         props["biword"] = True
     if corpus_stats is not None:
-        # The two corpus scalars every BM25/WAND query needs ride as
-        # table properties, so a serving reader needs the catalog
-        # pointer and nothing else (doc_lengths already ride inside the
-        # segments).
         row = corpus_stats.collect()[0]
         props["n_docs"] = int(row["n_docs"])
         props["avg_doc_length"] = float(row["avg_doc_length"])
-    return SnapshotTable(table_root).commit(segments, mode=mode, note=note,
-                                            properties=props or None)
+    return table.commit(
+        segments, mode=mode, note=note, properties=props, deletes=deletes,
+        equality_columns=["doc_id"] if deletes is not None else None)

@@ -26,9 +26,12 @@ This loop is the one way an index stays current:
 
 A refresh writes ONLY delta-sized files (new segment rows + a delete
 file); readers reconcile (the Iceberg v2 / Lucene-liveDocs shape).
-``indexing/segments.merge_segments`` is the copy-on-write alternative
-a ``publish_segments`` append uses: it regroups the delta-touched
-(term, block) groups, but writes the whole segment set back per merge.
+``indexing/segments.merge_segments`` is the copy-on-write alternative:
+it regroups only the delta-touched (term, block) groups, but returns
+the whole segment set, which is published as an overwrite per merge.
+Every commit of the index table — build, refresh and rewrite — goes
+through ``pipeline/index_pipeline.publish_segments``, the one writer
+of the table's bucketing, clustering and layout properties.
 
 The ``refreshed_*`` functions below are the serving module for every
 index table — a refreshed one and one written by
@@ -62,7 +65,6 @@ from pyspark.sql import functions as F
 
 from ..indexing.build import term_bucket, term_filter
 from ..indexing.segments import (
-    biword_as_segments,
     build_segments,
     decode_postings,
     hash_block_span,
@@ -77,6 +79,7 @@ from ..queries.ranked import (
 from ..queries.wand import wand_topk
 from ..sources.snapshots import SnapshotTable, drop_deleted
 from ..streaming.ingest import analyze_pages
+from .index_pipeline import publish_segments
 
 # Companion table (same root, its own snapshot lineage): (doc_id, url,
 # doc_length) per live doc. Its deletes ARE on a table column, so the
@@ -95,12 +98,11 @@ def _docstats_table(index_root: str) -> SnapshotTable:
     return SnapshotTable(os.path.join(index_root, _DOCSTATS))
 
 
-def _delta_artifacts(analyzed: DataFrame, term_buckets: int,
-                     block_span: int
+def _delta_artifacts(analyzed: DataFrame, block_span: int
                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(segment rows incl. biword family + bucket, docstats rows,
-    persisted segments handle) for an analyzed pages batch.  Callers
-    must ``unpersist()`` the third frame once the commit lands."""
+    """(unigram segment rows, biword (term, doc_id) pairs, docstats
+    rows) for an analyzed pages batch — ``publish_segments`` adds the
+    biword family and the bucket layout."""
     postings = analyzed.select(
         "doc_id",
         F.col("doc_length").cast("int").alias("doc_length"),
@@ -116,26 +118,10 @@ def _delta_artifacts(analyzed: DataFrame, term_buckets: int,
     biword = analyzed.select(
         "doc_id", F.explode("biwords").alias("term")
     ).select("term", "doc_id")
-    seg = seg.unionByName(
-        biword_as_segments(biword, block_span=block_span))
-    seg = seg.withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("term").cast("binary")),
-               F.lit(term_buckets)).cast("int"),
-    )
-    # Range-cluster by bucket so per-file stats stay selective and the
-    # serving read plans files away (publish_segments does the same).
-    # persist first: repartitionByRange SAMPLES its input to place the
-    # range boundaries, which would run the (term, block) grouping —
-    # an exploded-postings shuffle plus collect_list/sort_array —
-    # twice (sample pass + real shuffle). The cached frame is the
-    # grouped segment rows, smaller than the exploded postings.
-    grouped = seg.persist()
-    seg = grouped.repartitionByRange("bucket")
     stats = analyzed.select(
         "doc_id", "url", F.col("doc_length").cast("double").alias(
             "doc_length"))
-    return seg, stats, grouped
+    return seg, biword, stats
 
 
 def _scalar_props(spark: SparkSession, index_root: str) -> dict:
@@ -177,28 +163,18 @@ def build_pages_index(
     # the url window shuffle+sort runs twice.
     analyzed = analyze_pages(
         pages.read(spark, version=pages_version)).persist()
-    grouped = None
     try:
         if block_span is None:
             block_span = hash_block_span(analyzed.count())
-        seg, stats, grouped = _delta_artifacts(analyzed, term_buckets,
-                                               block_span)
+        seg, biword, stats = _delta_artifacts(analyzed, block_span)
         _docstats_table(index_root).commit(stats, mode="overwrite",
                                            note=f"pages v{pages_version}")
-        props = {
-            "term_buckets": term_buckets,
-            "block_span": block_span,
-            "biword": True,
-            "pages_version": pages_version,
-            **_scalar_props(spark, index_root),
-        }
-        return SnapshotTable(index_root).commit(
-            seg, mode="overwrite",
-            note=f"full build of pages v{pages_version}",
-            properties=props)
+        return publish_segments(
+            spark, index_root, seg, term_buckets, block_span,
+            note=f"full build of pages v{pages_version}", biword=biword,
+            properties={"pages_version": pages_version,
+                        **_scalar_props(spark, index_root)})
     finally:
-        if grouped is not None:
-            grouped.unpersist()
         analyzed.unpersist()
 
 
@@ -239,10 +215,8 @@ def refresh_pages_index(
     # recompute hazard as build_pages_index, delta-sized here.
     # (analyze_pages applies latest_per_url itself.)
     analyzed = analyze_pages(delta).persist()
-    grouped = None
     try:
-        seg, stats, grouped = _delta_artifacts(
-            analyzed, props["term_buckets"], props["block_span"])
+        seg, biword, stats = _delta_artifacts(analyzed, props["block_span"])
         # Delete rows are 8 bytes each; left at the analyzer's
         # partitioning they fan out into per-partition near-empty files
         # (measured: 33 files for 36 rows) that every merge-on-read
@@ -256,15 +230,13 @@ def refresh_pages_index(
         _docstats_table(index_root).commit(
             stats, deletes=ids, equality_columns=["doc_id"],
             note=f"refresh to pages v{pages_version}")
-        new_props = {"pages_version": pages_version,
-                     **_scalar_props(spark, index_root)}
-        return index.commit(
-            seg, deletes=ids, equality_columns=["doc_id"],
+        return publish_segments(
+            spark, index_root, seg, props["term_buckets"],
+            props["block_span"], mode="append", biword=biword, deletes=ids,
             note=f"delta refresh pages v{from_v}->v{pages_version}",
-            properties=new_props)
+            properties={"pages_version": pages_version,
+                        **_scalar_props(spark, index_root)})
     finally:
-        if grouped is not None:
-            grouped.unpersist()
         analyzed.unpersist()
 
 
@@ -298,7 +270,7 @@ def published_postings(
     generic merge-on-read read)."""
     seg, dele, props = _published_segments(spark, index_root, terms, version)
     if terms is not None:
-        seg = term_filter(seg, terms, props.get("term_buckets"))
+        seg = term_filter(seg, terms)
     postings = decode_postings(
         seg, terms=None, with_positions=with_positions,
         passthrough=("_seq",) if dele is not None else ())
@@ -318,16 +290,18 @@ def _corpus_scalars(props: dict) -> tuple[float, float]:
     return float(props["n_docs"]), float(props["avg_doc_length"])
 
 
-class PublishedScalars:
-    """Adapter giving a published segment snapshot the
-    ``corpus_scalars()`` surface ranked/WAND queries expect from a
-    SparkIndex — built from table properties alone (no Spark job)."""
-
-    def __init__(self, n_docs: float, avg_dl: float):
-        self._scalars = (n_docs, avg_dl)
-
-    def corpus_scalars(self):
-        return self._scalars
+def _live_checkpoint(spark: SparkSession, index_root: str,
+                     terms: list[str], version: int | None,
+                     with_positions: bool) -> DataFrame:
+    """:func:`published_postings` for a query's terms, materialized
+    ONCE: every consumer of the decode (dft and scoring join, or each
+    leaf of a boolean query) reads the checkpoint instead of re-running
+    the bucket scan + decode + delete reconcile.  It is bounded by the
+    terms' posting lists, and localCheckpoint trades fault re-compute
+    for serving latency."""
+    return published_postings(
+        spark, index_root, terms, version=version,
+        with_positions=with_positions).localCheckpoint(eager=True)
 
 
 def _refreshed_scores(spark: SparkSession, index_root: str,
@@ -337,13 +311,8 @@ def _refreshed_scores(spark: SparkSession, index_root: str,
     with dft counted over that live checkpoint."""
     scalars = _corpus_scalars(SnapshotTable(index_root).properties(version))
     terms = sorted({t for ts in weights.values() for t in ts})
-    postings = published_postings(spark, index_root, terms,
-                                  version=version, with_positions=False)
-    # Materialize the decode ONCE: the dft aggregate and the scoring
-    # join both read it, and would otherwise each re-run the bucket scan
-    # + decode. It is bounded by the query terms' posting lists, and
-    # localCheckpoint trades fault re-compute for serving latency.
-    postings = postings.localCheckpoint(eager=True)
+    postings = _live_checkpoint(spark, index_root, terms, version,
+                                with_positions=False)
     return score(postings, weights, scalars, "bm25")
 
 
@@ -428,9 +397,10 @@ def refreshed_boolean(
     lookup terms (plus the biword key when the whole query is a
     two-term phrase — the only case the reference's main.py:413-418
     routes to the biword index); only those terms' buckets
-    are planned from the manifest and decoded (positions included —
-    phrase/NEAR need them), deletes are reconciled, and the compiled
-    engine evaluates the query, quirks and all.
+    are planned from the manifest, decoded once into a checkpoint
+    (positions included — phrase/NEAR need them) with deletes
+    reconciled, and the compiled engine evaluates the query over that
+    checkpoint, quirks and all.
 
     Two-term phrases need the snapshot's biword family: the fast path
     has its own semantics (clean adjacency vs the positional merge's
@@ -454,15 +424,14 @@ def refreshed_boolean(
         t1, t2 = node.term.split(" ")
         terms = {normalize(t1) + " " + normalize(t2)}
 
-    postings = published_postings(spark, index_root, sorted(terms),
-                                  version=version, with_positions=True)
+    postings = _live_checkpoint(spark, index_root, sorted(terms), version,
+                                with_positions=True)
     idx = SparkIndex(
         postings=postings.filter(~F.col("term").contains(" ")),
         doc_stats=None,
         corpus_stats=None,
         biword=postings.filter(F.col("term").contains(" "))
         .select("term", "doc_id"),
-        term_buckets=None,
     )
     return boolean_query(idx, query, normalize)
 
@@ -483,10 +452,8 @@ def refreshed_wand_topk(
     (see queries/wand.wand_topk's deletes note)."""
     seg, dele, props = _published_segments(
         spark, index_root, list(query_rank_terms(query, normalize)), version)
-    scalars = PublishedScalars(*_corpus_scalars(props))
-    return wand_topk(scalars, seg, query, k=k, normalize=normalize,
-                     term_buckets=props.get("term_buckets"),
-                     champion_blocks=champion_blocks,
+    return wand_topk(_corpus_scalars(props), seg, query, k=k,
+                     normalize=normalize, champion_blocks=champion_blocks,
                      deletes=dele)
 
 
@@ -568,25 +535,13 @@ def rewrite_pages_index(spark: SparkSession, index_root: str,
         block_span = hash_block_span(int(props["n_docs"]))
     live = published_postings(spark, index_root, terms=None,
                               with_positions=True)
-    # persist before the range shuffle: its boundary-sampling pass
-    # would otherwise run the decode→regroup subtree (the whole cost
-    # of a compaction) twice — see _delta_artifacts.
-    grouped = build_segments(live, doc_stats=None,
-                             block_span=block_span).withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("term").cast("binary")),
-               F.lit(props["term_buckets"])).cast("int"),
-    ).persist()
-    try:
-        seg = grouped.repartitionByRange("bucket")
-        _docstats_table(index_root).rewrite_deletes(spark)
-        new_props = {**_scalar_props(spark, index_root),
-                     "block_span": block_span,
-                     "pages_version": props["pages_version"]}
-        return index.commit(
-            seg, mode="overwrite",
-            note="rewrite (major compaction) at pages "
-                 f"v{props['pages_version']}",
-            properties=new_props)
-    finally:
-        grouped.unpersist()
+    _docstats_table(index_root).rewrite_deletes(spark)
+    # the decoded postings carry the biword rows; the table keeps its
+    # ``biword`` property from the parent commit
+    return publish_segments(
+        spark, index_root,
+        build_segments(live, doc_stats=None, block_span=block_span),
+        props["term_buckets"], block_span,
+        note=f"rewrite (major compaction) at pages v{props['pages_version']}",
+        properties={**_scalar_props(spark, index_root),
+                    "pages_version": props["pages_version"]})

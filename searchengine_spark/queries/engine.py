@@ -67,9 +67,8 @@ def boolean_query_term(raw_term: str) -> str:
 
 
 def _boolean_term(index: SparkIndex, raw_term: str, normalize) -> DataFrame:
-    return term_filter(
-        index.postings, [normalize(raw_term)], index.term_buckets
-    ).select("doc_id", "positions")
+    return term_filter(index.postings, [normalize(raw_term)]).select(
+        "doc_id", "positions")
 
 
 def _positional_fold(left: DataFrame, right: DataFrame, offset: int, udf) -> DataFrame:
@@ -144,7 +143,7 @@ def boolean_query(index: SparkIndex, query: str, normalize=None) -> DataFrame:
         t1, t2 = node.term.split(" ")
         key = normalize(t1) + " " + normalize(t2)
         return (
-            term_filter(index.biword, [key], index.term_buckets)
+            term_filter(index.biword, [key])
             .select("doc_id")
             .distinct()
             .orderBy("doc_id")

@@ -15,7 +15,8 @@ merge-on-read snapshots, BM25F, champion lists, WAND's exact pass) is a
 thin call onto :func:`score` and :func:`top_k`.
 
 Scale notes: the postings scan is filtered to the handful of query
-terms (partition-pruned when the index is bucket-partitioned); dft
+terms (file-pruned by term bucket when served from an index table,
+pipeline/refresh.published_postings); dft
 counts are a tiny aggregate joined back by broadcast; corpus scalars
 and driver-known query weights are literals (no join, no Python-RDD
 frame); the only wide shuffle is groupBy(query_id, doc_id) over the
@@ -227,7 +228,7 @@ def empty_topk(spark, per_query: bool = False) -> DataFrame:
 def _score_index(index: SparkIndex, weights: dict, strategy: str,
                  prune: bool = False) -> DataFrame:
     terms = sorted({t for ts in weights.values() for t in ts})
-    postings = term_filter(index.postings, terms, index.term_buckets)
+    postings = term_filter(index.postings, terms)
     return score(postings, weights, index.corpus_scalars(), strategy,
                  prune=prune)
 
@@ -365,7 +366,7 @@ def rank_topk_champions(
         champions.filter(F.col("term").isin(list(terms)))
         .select("doc_id").distinct()
     )
-    matched = term_filter(index.postings, list(terms), index.term_buckets)
+    matched = term_filter(index.postings, list(terms))
     scored = score(
         matched.join(F.broadcast(cand_docs), "doc_id", "left_semi"),
         {"": terms}, index.corpus_scalars(), strategy, dft=count_dft(matched))

@@ -42,7 +42,7 @@ def query_hits(index: SparkIndex, terms: list[str],
                docs_subset: DataFrame) -> DataFrame:
     """(doc_id, term, pos) for the query terms within the given doc
     subset (a small DataFrame with a doc_id column — broadcast)."""
-    matched = term_filter(index.postings, terms, index.term_buckets)
+    matched = term_filter(index.postings, terms)
     return (
         matched.join(F.broadcast(docs_subset.select("doc_id")), "doc_id")
         .select("doc_id", "term", F.explode("positions").alias("pos"))

@@ -62,18 +62,17 @@ def block_dft(seg: DataFrame) -> DataFrame:
 
 
 def wand_topk(
-    index,
+    scalars: tuple[float, float],
     segments: DataFrame,
     query: str,
     k: int = 10,
     normalize=None,
-    term_buckets: int | None = None,
     champion_blocks: int = 8,
     deletes: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k via block-max WAND — one main DataFrame action plus
-    a tiny per-term dft metadata collect, zero caches. ``index``
-    supplies corpus scalars;
+    a tiny per-term dft metadata collect, zero caches. ``scalars`` is
+    the corpus ``(n_docs, avg_doc_length)`` (``SparkIndex.corpus_scalars()``);
     ``segments`` is the block-split segment table (doc_lengths ride inside
     the segments — no doc_stats join). Returns DataFrame(doc_id, score)
     with the reference tie-break (score desc, doc_id desc —
@@ -98,14 +97,14 @@ def wand_topk(
     terms = query_rank_terms(query, normalize)
     if not terms:
         return empty_topk(spark)
-    n_docs, avg_dl = scalars = index.corpus_scalars()
+    n_docs, avg_dl = scalars
 
     seq_cols = ["_seq"] if deletes is not None else []
     if deletes is not None and "_seq" not in segments.columns:
         raise ValueError(
             "deletes requires segments read with with_seq=True so the "
             "sequence-number delete rule can apply post-decode")
-    seg = term_filter(segments, list(terms), term_buckets).select(
+    seg = term_filter(segments, list(terms)).select(
         "term", "block", "df_block", "max_tftd", "min_doc_length",
         "doc_ids", "tftds", "doc_lengths", *seq_cols,
     )
@@ -162,7 +161,7 @@ def wand_topk(
         # NO doc_stats join — at 10^12 docs that join would shuffle a
         # corpus-sized table per query.
         postings = decode_postings(seg_subset, list(terms),
-                                   term_buckets=None, with_positions=False,
+                                   with_positions=False,
                                    passthrough=tuple(seq_cols))
         if deletes is not None:
             postings = drop_deleted(postings, deletes).drop("_seq")
@@ -193,12 +192,11 @@ def wand_topk(
 
 
 def decode_topk(
-    index,
+    scalars: tuple[float, float],
     segments: DataFrame,
     query: str,
     k: int = 10,
     normalize=None,
-    term_buckets: int | None = None,
 ) -> DataFrame:
     """BM25 top-k by decoding the query terms' full posting blocks —
     the non-pruned baseline ``wand_topk`` must beat at decode-bound
@@ -209,8 +207,7 @@ def decode_topk(
     terms = query_rank_terms(query, normalize)
     if not terms:
         return empty_topk(segments.sparkSession)
-    seg = term_filter(segments, list(terms), term_buckets)
-    postings = decode_postings(seg, list(terms), term_buckets=None,
-                               with_positions=False)
-    return top_k(score(postings, {"": terms}, index.corpus_scalars(), "bm25",
+    seg = term_filter(segments, list(terms))
+    postings = decode_postings(seg, list(terms), with_positions=False)
+    return top_k(score(postings, {"": terms}, scalars, "bm25",
                        dft=block_dft(seg)), k)

@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -12,6 +13,27 @@ def spark():
 
     s = get_spark(app_name="pytest", cores=4, shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture(scope="session")
+def uncoalesced(spark):
+    """``with uncoalesced(): ...`` turns AQE partition coalescing off for
+    the writes inside it and restores the setting afterwards, so a
+    small ``publish_segments`` keeps one file per range partition of
+    its count-less bucket clustering — enough files for the manifest's
+    per-file stats to plan some away."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+
+    @contextlib.contextmanager
+    def scope():
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return scope
 
 
 @pytest.fixture(scope="session")

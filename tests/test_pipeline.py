@@ -73,7 +73,7 @@ def test_index_pipeline_end_to_end_and_resume(spark, tmp_path):
 
 
 def test_stage_segments(spark, tmp_path):
-    from searchengine_spark.indexing.segments import decode_postings
+    from searchengine_spark.indexing.segments import SEG_COLS, decode_postings
     from searchengine_spark.pipeline.index_pipeline import stage_segments
 
     root = str(tmp_path / "idx")
@@ -81,13 +81,14 @@ def test_stage_segments(spark, tmp_path):
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
     )
     idx = run_index_pipeline(spark, root, docs, "t2")
-    seg = stage_segments(spark, root, idx, "t2", block_span=16, term_buckets=8)
-    assert "bucket" in seg.columns and "_build_part" in seg.columns
+    seg = stage_segments(spark, root, idx, "t2", block_span=16)
+    # plain build_segments rows: the bucket layout is publish_segments'
+    assert seg.columns == SEG_COLS
     m = read_manifest(root, "segments")
-    assert m["complete"] and all("partition" in e for e in m["partitions"])
+    assert m["complete"] and m["rows"] == seg.count()
     # decode equals source postings for a term
-    dec = decode_postings(seg, ["scan"], term_buckets=8)
+    dec = decode_postings(seg, ["scan"])
     assert dec.count() == idx.postings.filter("term = 'scan'").count()
     # resume: second call instant, same row count
-    seg2 = stage_segments(spark, root, idx, "t2", block_span=16, term_buckets=8)
+    seg2 = stage_segments(spark, root, idx, "t2", block_span=16)
     assert seg2.count() == seg.count()

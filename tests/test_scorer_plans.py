@@ -6,11 +6,14 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 * no plan scans a Python-built RDD — query weights are literals; the only
   RDD scan allowed is the merge-on-read path's eager localCheckpoint;
 * no ranked scan reads a positions column;
-* refreshed_topk decodes its postings once: each segment scan is decoded
-  once inside the one checkpointed frame, and the scoring plan (dft and
-  scores) reads only the checkpoint;
-* a term lookup on a persisted index prunes to the term's bucket
-  partition and pushes the term predicate into the Parquet scan;
+* refreshed_topk and refreshed_boolean decode their postings once: each
+  segment scan is decoded once inside the one checkpointed frame, and the
+  scoring or boolean evaluation plan reads only the checkpoint;
+* a term lookup on a published index table scans only the files the
+  manifest keeps for the term's bucket, and pushes the term and bucket
+  predicates into the Parquet scan;
+* a segment merge streams the base through broadcast joins only, and its
+  cold (untouched) groups pass through with no Exchange;
 * the ranked, batch, AND/OR boolean and segment-build plans start no
   Python worker (no ArrowEvalPythonExec or BatchEvalPythonExec): segments
   are Parquet arrays decoded by a JVM explode;
@@ -31,16 +34,12 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from searchengine_spark.indexing.build import (
-    read_index,
-    term_bucket,
-    term_filter,
-    write_index,
-)
+from searchengine_spark.indexing.build import SparkIndex, term_bucket
 from searchengine_spark.indexing.fielded import build_fielded_index, rank_topk_fielded
-from searchengine_spark.indexing.segments import build_segments
+from searchengine_spark.indexing.segments import build_segments, merge_segments
 from searchengine_spark.indexing.simple import build_simple_index, simple_query_term
 from searchengine_spark.pipeline import refresh as R
+from searchengine_spark.pipeline.index_pipeline import publish_segments
 from searchengine_spark.queries.ranked import (
     _literal_map,
     champion_lists,
@@ -58,15 +57,18 @@ CRAWL_QUERY = "the crawl"
 CRAWL_BATCH = {"q0": "the crawl", "q1": "page body", "q2": "crawl body"}
 
 
-def _nodes(plan) -> list:
+def _nodes(plan, skip: tuple = ()) -> list:
     """Every node of a physical plan, descending into AQE query stages,
-    reused exchanges and subqueries."""
+    reused exchanges and subqueries — except the subtrees of the node
+    classes named in ``skip``."""
     out, todo = [], [plan]
     while todo:
         node = todo.pop()
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
             todo.append(node.executedPlan())
+            continue
+        if name in skip:
             continue
         out.append(node)
         if name.endswith("QueryStageExec"):
@@ -147,11 +149,30 @@ def docs(spark):
 
 @pytest.fixture(scope="module")
 def pidx(spark, docs, tmp_path_factory):
-    """The sf0.01 simple index persisted bucket-partitioned, so ranked
-    reads are file scans whose read schema the contract can inspect."""
-    path = str(tmp_path_factory.mktemp("plan_idx"))
-    write_index(build_simple_index(docs), path, term_buckets=16)
-    return read_index(spark, path)
+    """The sf0.01 simple index with its postings and doc_stats written
+    to Parquet, so ranked reads are file scans whose read schema the
+    contract can inspect."""
+    path = tmp_path_factory.mktemp("plan_idx")
+    idx = build_simple_index(docs)
+    idx.postings.write.parquet(str(path / "postings"))
+    idx.doc_stats.write.parquet(str(path / "doc_stats"))
+    return SparkIndex(spark.read.parquet(str(path / "postings")),
+                      spark.read.parquet(str(path / "doc_stats")),
+                      idx.corpus_stats, idx.biword)
+
+
+@pytest.fixture(scope="module")
+def published(spark, docs, tmp_path_factory, uncoalesced):
+    """The sf0.01 simple index's segments published as an index table
+    (16 term buckets, block span 64), one file per range partition."""
+    root = str(tmp_path_factory.mktemp("plan_published"))
+    idx = build_simple_index(docs)
+    with uncoalesced():
+        publish_segments(spark, root,
+                         build_segments(idx.postings, idx.doc_stats,
+                                        block_span=64),
+                         term_buckets=16, block_span=64)
+    return root
 
 
 @pytest.fixture(scope="module")
@@ -229,20 +250,53 @@ def test_rank_topk_fielded_plan(docs):
     _single(rank_topk_fielded(fidx, QUERY, 10, normalize=simple_query_term))
 
 
-def test_term_lookup_prunes_bucket_and_pushes_term(pidx):
-    nodes = _executed(term_filter(pidx.postings, ["table"],
-                                  pidx.term_buckets))
+def test_term_lookup_prunes_bucket_and_pushes_term(spark, published):
+    bucket = term_bucket("table", 16)
+    plan = SnapshotTable(published).plan_files([("bucket", "in", [bucket])])
+    assert plan["skipped_files"] > 0, plan
+    looked_up = R.published_postings(spark, published, ["table"])
+    nodes = _executed(looked_up)
     scans = [n for n in nodes
              if n.getClass().getSimpleName() == "FileSourceScanExec"]
     assert len(scans) == 1
-    meta = scans[0].metadata()
-    bucket = term_bucket("table", pidx.term_buckets)
-    assert re.search(rf"\(bucket#\d+ = {bucket}\)",
-                     meta.apply("PartitionFilters")), \
-        meta.apply("PartitionFilters")
-    assert "term" not in meta.apply("PartitionFilters")
-    assert "EqualTo(term,table)" in meta.apply("PushedFilters"), \
-        meta.apply("PushedFilters")
+    pushed = scans[0].metadata().apply("PushedFilters")
+    assert "EqualTo(term,table)" in pushed, pushed
+    assert re.search(
+        rf"EqualTo\(bucket,{bucket}\)|In\(bucket, \[{bucket}\]\)",
+        pushed), pushed
+    scanned = {f.split(published, 1)[1].lstrip("/")
+               for f in looked_up.inputFiles()}
+    assert scanned == set(plan["kept_paths"])
+
+
+# the build side of a broadcast join is a delta-sized frame
+_BROADCAST = ("BroadcastExchangeExec", "BroadcastQueryStageExec")
+
+
+def test_merge_segments_plan_streams_cold_groups(spark, docs, published):
+    base = SnapshotTable(published).read(spark)
+    # re-crawls inside block 0 only: every group of a later block is cold
+    assert base.filter(F.col("block") > 0).count() > 0
+    in_block0 = (F.col("doc_id") < 64) & (F.col("doc_id") % 7 == 0)
+    recrawl = docs.filter(in_block0).select(
+        "doc_id", F.concat("text", F.lit(" refresh")).alias("text"))
+    didx = build_simple_index(recrawl)
+    merged = merge_segments(
+        base, build_segments(didx.postings, didx.doc_stats, block_span=64),
+        superseded=recrawl.select("doc_id"), block_span=64)
+    nodes = _executed(merged)
+    joins = {n for n in _names(nodes) if "Join" in n}
+    assert joins and all(n.startswith("Broadcast") for n in joins), joins
+    union = next(n for n in _nodes(nodes[0], skip=_BROADCAST)
+                 if n.getClass().getSimpleName() == "UnionExec")
+    children = [_nodes(union.children().apply(i), skip=_BROADCAST)
+                for i in range(union.children().size())]
+    cold = [c for c in children
+            if any(_is_segment_scan(n) for n in c)
+            and not any(_is_decode(n) for n in c)]
+    assert len(cold) == 1
+    assert not [n for n in _names(cold[0]) if "Exchange" in n
+                or "Shuffle" in n], _names(cold[0])
 
 
 def test_build_segments_plan_has_no_python(pidx):
@@ -297,11 +351,18 @@ def test_refreshed_topk_batch_plan(spark, refreshed, monkeypatch):
 
 
 @pytest.mark.parametrize("query", ["refreshed crawl", "refreshed + page"])
-def test_refreshed_boolean_and_or_plan_has_no_python(spark, refreshed, query):
+def test_refreshed_boolean_and_or_plan_has_no_python(spark, refreshed, query,
+                                                     monkeypatch):
+    checkpointed = _checkpoint_plans(spark, monkeypatch)
     nodes = _executed(R.refreshed_boolean(spark, refreshed, query))
-    # every segment scan (one per term and snapshot layer) is decoded once
-    under, scans = _decoded_scans(nodes)
-    assert under == scans and len(scans) >= 4
+    assert len(checkpointed) == 1
+    # each snapshot layer's scan (base + delta) is decoded once, all
+    # inside the checkpoint; the evaluation plan only reads the checkpoint
+    under, scans = _decoded_scans(checkpointed[0])
+    assert under == scans and len(scans) >= 2
+    assert _decoded_scans(nodes) == ([], [])
+    assert not any(_is_decode(n) for n in nodes)
+    _no_python(checkpointed[0])
     _no_python(nodes)
 
 

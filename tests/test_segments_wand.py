@@ -18,8 +18,6 @@ from searchengine_spark.indexing.build import build_index
 from searchengine_spark.indexing.segments import (
     build_segments,
     decode_postings,
-    read_segments,
-    write_segments,
 )
 from searchengine_spark.indexing.vb import (
     delta_decode,
@@ -87,18 +85,6 @@ def test_segments_block_split(spark, corpus_index):
         assert r["max_tftd"] >= 1
 
 
-def test_segments_write_read(spark, corpus_index, tmp_path):
-    idx = corpus_index
-    path = str(tmp_path / "segidx")
-    write_segments(idx.postings, idx.doc_stats, path, block_span=128,
-                   term_buckets=8)
-    seg, meta = read_segments(spark, path)
-    assert meta["block_span"] == 128
-    decoded = decode_postings(seg, ["scan"], term_buckets=8)
-    orig_n = idx.postings.filter(F.col("term") == "scan").count()
-    assert decoded.count() == orig_n
-
-
 def test_decode_refuses_vb_format_segments(spark):
     """A table written in the retired VB format (``*_vb`` binaries) must
     be rebuilt, not misread."""
@@ -137,7 +123,8 @@ def test_wand_matches_unpruned_bm25(spark, corpus_index, query):
     ]
     got = [
         (r["doc_id"], round(r["score"], 9))
-        for r in wand_topk(idx, seg, query, 10, champion_blocks=2).collect()
+        for r in wand_topk(idx.corpus_scalars(), seg, query, 10,
+                             champion_blocks=2).collect()
     ]
     assert got == expected
 
@@ -148,7 +135,8 @@ def test_wand_prunes_blocks(spark, corpus_index):
     idx = corpus_index
     seg = build_segments(idx.postings, idx.doc_stats, block_span=16)
     # rare term 'dup' + head term: k=1 forces a high θ
-    top = wand_topk(idx, seg, "dup", 1, champion_blocks=4).collect()
+    top = wand_topk(idx.corpus_scalars(), seg, "dup", 1,
+                    champion_blocks=4).collect()
     assert len(top) == 1
 
 

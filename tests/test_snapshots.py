@@ -183,9 +183,9 @@ def test_publish_segments_versioned_roundtrip(spark, tmp_path, table):
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .limit(40))
     idx = run_index_pipeline(spark, root, docs, "pub1")
-    seg = stage_segments(spark, root, idx, "pub1", block_span=16,
-                         term_buckets=8)
-    v0 = publish_segments(spark, table.root, seg, note="build pub1")
+    seg = stage_segments(spark, root, idx, "pub1", block_span=16)
+    v0 = publish_segments(spark, table.root, seg, block_span=16,
+                          note="build pub1")
     assert v0 == 0 and table.manifest(0)["note"] == "build pub1"
 
     served = table.read(spark, version=v0)
@@ -195,7 +195,8 @@ def test_publish_segments_versioned_roundtrip(spark, tmp_path, table):
         idx.postings.select("term", "doc_id")).count() == 0)
 
     # A second publish is a new version; the pinned v0 still serves.
-    v1 = publish_segments(spark, table.root, seg.limit(1), note="bad build")
+    v1 = publish_segments(spark, table.root, seg.limit(1), block_span=16,
+                          note="bad build")
     assert v1 == 1 and table.read(spark).count() == 1
     assert decode_postings(table.read(spark, version=v0),
                            terms=None).count() == idx.postings.count()
@@ -394,10 +395,12 @@ def test_compact_noop_and_expire_reclaims_small_files(spark, table):
     assert table.read(spark).count() == 30
 
 
-def test_published_postings_prunes_buckets(spark, tmp_path, table):
-    """The serving read: a published build is read back pruned to a
-    query's term buckets — file skipping planned from manifest stats,
-    decoded postings identical to the source index."""
+def test_published_postings_prunes_buckets(spark, tmp_path, table,
+                                           uncoalesced):
+    """The serving read: a published build records its layout and is
+    read back pruned to a query's term buckets — file skipping planned
+    from manifest stats, decoded postings identical to the source
+    index."""
     from searchengine_spark.indexing.build import term_bucket
     from searchengine_spark.pipeline import refresh as R
     from searchengine_spark.pipeline.index_pipeline import (
@@ -410,11 +413,12 @@ def test_published_postings_prunes_buckets(spark, tmp_path, table):
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .limit(40))
     idx = run_index_pipeline(spark, root, docs, "pub2")
-    seg = stage_segments(spark, root, idx, "pub2", block_span=16,
-                         term_buckets=8)
-    publish_segments(spark, table.root, seg, term_buckets=8,
-                     cluster_partitions=4)
-    assert table.properties()["term_buckets"] == 8
+    seg = stage_segments(spark, root, idx, "pub2", block_span=16)
+    with uncoalesced():
+        publish_segments(spark, table.root, seg, term_buckets=8,
+                         block_span=16)
+    props = table.properties()
+    assert props["term_buckets"] == 8 and props["block_span"] == 16
 
     term = idx.postings.select("term").first().term
     plan = table.plan_files([("bucket", "in", [term_bucket(term, 8)])])
@@ -430,7 +434,7 @@ def test_published_postings_prunes_buckets(spark, tmp_path, table):
 
 
 def _published(spark, tmp_path, table, n_docs, tag, corpus_stats=True,
-               biword=False, cluster_partitions=4):
+               biword=False):
     """(staged index, staged segments, published version) of the first
     ``n_docs`` sf0.001 documents."""
     from searchengine_spark.pipeline.index_pipeline import (
@@ -443,11 +447,9 @@ def _published(spark, tmp_path, table, n_docs, tag, corpus_stats=True,
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .limit(n_docs))
     idx = run_index_pipeline(spark, root, docs, tag)
-    seg = stage_segments(spark, root, idx, tag, block_span=16,
-                         term_buckets=8)
+    seg = stage_segments(spark, root, idx, tag, block_span=16)
     v = publish_segments(
-        spark, table.root, seg, term_buckets=8,
-        cluster_partitions=cluster_partitions,
+        spark, table.root, seg, term_buckets=8, block_span=16,
         corpus_stats=idx.corpus_stats if corpus_stats else None,
         biword=idx.biword if biword else None)
     return idx, seg, v
@@ -472,8 +474,8 @@ def test_query_published_snapshot_parity(spark, tmp_path, table):
     def key(rows):
         return [(r.doc_id, round(r.score, 9)) for r in rows]
 
-    want = key(wand_topk(idx, seg, term, 5, normalize=ident,
-                         term_buckets=8).collect())
+    want = key(wand_topk(idx.corpus_scalars(), seg, term, 5,
+                         normalize=ident).collect())
     got_exact = key(R.refreshed_topk(spark, table.root, term, 5,
                                      normalize=ident, version=v).collect())
     got_wand = key(R.refreshed_wand_topk(spark, table.root, term, 5,
@@ -512,8 +514,8 @@ def test_ranked_batch_served_from_snapshot_parity(spark, tmp_path, table):
     nonempty = 0
     for qid, q in queries.items():
         want = [(r.doc_id, round(r.score, 9)) for r in
-                decode_topk(idx, seg, q, 5, normalize=ident,
-                            term_buckets=8).collect()]
+                decode_topk(idx.corpus_scalars(), seg, q, 5,
+                            normalize=ident).collect()]
         assert by_q.get(qid, []) == want, qid
         nonempty += bool(want)
     assert nonempty == len(queries)
@@ -606,7 +608,7 @@ def test_boolean_serve_guards(spark, tmp_path, table):
     from searchengine_spark.pipeline.index_pipeline import publish_segments
 
     idx, seg, _ = _published(spark, tmp_path, table, 30, "pubguard",
-                             corpus_stats=False, cluster_partitions=2)
+                             corpus_stats=False)
     # other query kinds still work without the biword family
     assert R.refreshed_boolean(
         spark, table.root, "table scan").count() >= 0
@@ -614,9 +616,40 @@ def test_boolean_serve_guards(spark, tmp_path, table):
         R.refreshed_boolean(spark, table.root, '"table scan"')
 
     with_bw = publish_segments(spark, table.root, seg, term_buckets=8,
-                               biword=idx.biword, cluster_partitions=2)
+                               block_span=16, biword=idx.biword)
     assert R.refreshed_boolean(
         spark, table.root, '"table scan"', version=with_bw).count() >= 0
     with _pytest.raises(ValueError, match="biword"):
-        publish_segments(spark, table.root, seg, mode="append",
-                         term_buckets=8, cluster_partitions=2)
+        publish_segments(spark, table.root, seg, term_buckets=8,
+                         block_span=16, mode="append")
+
+
+def test_publish_derives_bucket_from_term_buckets(spark, table):
+    """The writer computes ``bucket`` itself: segments that arrive with
+    a bucket column of another modulus (16) are re-bucketed to the
+    recorded ``term_buckets`` (8), so the bucket-planned read returns
+    every posting of every term; an append cannot change the layout."""
+    from searchengine_spark.indexing.build import term_bucket
+    from searchengine_spark.indexing.segments import build_segments
+    from searchengine_spark.pipeline import refresh as R
+    from searchengine_spark.pipeline.index_pipeline import publish_segments
+
+    terms = [f"term{i}" for i in range(12)]
+    # the two moduli disagree for some terms — the case that drops rows
+    assert any(term_bucket(t, 16) != term_bucket(t, 8) for t in terms)
+    postings = spark.createDataFrame(
+        [(t, d, 1, [0], 5) for i, t in enumerate(terms)
+         for d in range(i + 1)],
+        "term string, doc_id long, tftd int, positions array<int>, "
+        "doc_length int")
+    seg = build_segments(postings, doc_stats=None).withColumn(
+        "bucket",
+        F.pmod(F.crc32(F.col("term").cast("binary")), F.lit(16)).cast("int"))
+    publish_segments(spark, table.root, seg, term_buckets=8)
+
+    got = {r.term: r.n for r in R.published_postings(spark, table.root, terms)
+           .groupBy("term").agg(F.count("*").alias("n")).collect()}
+    assert got == {t: i + 1 for i, t in enumerate(terms)}
+    with pytest.raises(ValueError, match="layout"):
+        publish_segments(spark, table.root, seg, term_buckets=16,
+                         mode="append")

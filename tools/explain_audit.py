@@ -2,13 +2,12 @@
 recorded in PERF.md) — run `python tools/explain_audit.py` to verify
 partition pruning, filter pushdown, broadcast joins, and
 TakeOrderedAndProject claims against the live Catalyst output. The
-ranked entry points' and the term lookup's plan claims are asserted by
-tests/test_scorer_plans.py instead."""
+ranked entry points', the term lookup's and the segment merge's plan
+claims are asserted by tests/test_scorer_plans.py instead."""
 
 from __future__ import annotations
 
 import sys
-import tempfile
 
 sys.path.insert(0, ".")
 
@@ -16,16 +15,12 @@ sys.path.insert(0, ".")
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from searchengine_spark.indexing.build import read_index, write_index
     from searchengine_spark.indexing.simple import build_simple_index, simple_query_term
     from searchengine_spark.session import get_spark
 
     spark = get_spark("explain-audit", cores=4, shuffle_partitions=4)
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     idx = build_simple_index(docs)
-    path = tempfile.mkdtemp(prefix="audit_idx_")
-    write_index(idx, path, term_buckets=16)
-    pidx = read_index(spark, path)
 
     print("=" * 70)
     print("JACCARD VERIFY — candidate x shingle joins must be SortMergeJoin")
@@ -42,25 +37,6 @@ def main() -> None:
     jaccard_verify(docs, cand).explain()
 
     print("=" * 70)
-    print("SEGMENT MERGE — the base side must stream through BROADCAST")
-    print("joins only (collision keys + superseded blocks/ids are all")
-    print("delta-sized); the cold path is scan->filter->passthrough with")
-    print("no Exchange; only hot groups reach the explode + regroup")
-    print("=" * 70)
-    from searchengine_spark.indexing.segments import (
-        build_segments,
-        merge_segments,
-    )
-
-    base_seg = build_segments(idx.postings, idx.doc_stats, block_span=64)
-    recrawl = docs.filter(F.col("doc_id") % 7 == 0).select(
-        "doc_id", F.concat("text", F.lit(" refresh")).alias("text"))
-    didx = build_simple_index(recrawl)
-    delta_seg = build_segments(didx.postings, didx.doc_stats, block_span=64)
-    merge_segments(base_seg, delta_seg, superseded=recrawl.select("doc_id"),
-                   block_span=64).explain()
-
-    print("=" * 70)
     print("SNIPPETS — hits bounded by a BROADCAST semi-join to the k")
     print("result docs BEFORE the positions explode; ONE RANGE-frame")
     print("window over those hits (RunningWindowFunction/Window, no")
@@ -68,7 +44,7 @@ def main() -> None:
     print("=" * 70)
     from searchengine_spark.queries.snippets import snippets_topk
 
-    snippets_topk(pidx, docs, "table scan merge", "bm25", 10, 8,
+    snippets_topk(idx, docs, "table scan merge", "bm25", 10, 8,
                   normalize=simple_query_term).explain("formatted")
 
     print("=" * 70)
@@ -81,7 +57,7 @@ def main() -> None:
 
     clusters = spark.createDataFrame(
         [(1, 1), (2, 1)], "doc_id long, cluster_id long")
-    rank_topk_diverse(pidx, "table scan", clusters, "bm25", 10,
+    rank_topk_diverse(idx, "table scan", clusters, "bm25", 10,
                       normalize=simple_query_term).explain("formatted")
 
     print("=" * 70)
