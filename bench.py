@@ -717,8 +717,8 @@ def run_wand_crossover(queries: dict, extra: dict) -> None:
             dec.withColumn(
                 "score",
                 F.lit(wqt)
-                * bm25_wdt_expr(F.col("tftd"),
-                                F.col("doc_length").cast("double"), avg_dl),
+                * bm25_wdt_expr("tftd", "CAST(doc_length AS DOUBLE)",
+                                avg_dl),
             )
             .orderBy(F.desc("score"), F.desc("doc_id"))
             .limit(10)

@@ -37,8 +37,11 @@ posting ``VB(docid_gap) VB(tftd) VB(position_gaps...)``), redesigned for
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sqltext import sql_literal
 
 DEFAULT_BLOCK_SPAN = 4096
 
@@ -213,21 +216,15 @@ def biword_as_segments(biword: DataFrame,
 def decode_postings(segments: DataFrame, terms: list[str] | None,
                     with_positions: bool = True,
                     passthrough: tuple = ()) -> DataFrame:
-    """Segments → exploded postings for a term set. Ranked reads pass
-    ``with_positions=False`` and never touch the positions column
-    (columnar projection = the reference's position-skip, R2).
-    ``terms=None`` decodes EVERY segment (full-index scan — bulk
-    verification / reindexing path) without collecting the vocabulary
-    to the driver.  ``passthrough`` names extra segment columns carried
-    onto every decoded posting row (e.g. the snapshot layer's ``_seq``
-    sequence number, which the merge-on-read delete rule keys on)."""
-    from .build import term_filter
-
-    if "docids_vb" in segments.columns:
-        raise ValueError(
-            "segments are in the retired VB format (docids_vb binary "
-            "columns) — rebuild them with build_segments()")
-    seg = segments if terms is None else term_filter(segments, terms)
+    """Segments → exploded postings for a term set, as ONE ``spark.sql``
+    statement. Ranked reads pass ``with_positions=False`` and never
+    touch the positions column (columnar projection = the reference's
+    position-skip, R2).  ``terms=None`` decodes EVERY segment
+    (full-index scan — bulk verification / reindexing path) without
+    collecting the vocabulary to the driver.  ``passthrough`` names
+    extra segment columns carried onto every decoded posting row (e.g.
+    the snapshot layer's ``_seq`` sequence number, which the
+    merge-on-read delete rule keys on)."""
     # Ranked reads skip the positions column entirely (columnar
     # position-skip, R2) but keep the in-segment doc_lengths — the
     # scorer needs no doc_stats join.
@@ -235,17 +232,29 @@ def decode_postings(segments: DataFrame, terms: list[str] | None,
     if with_positions:
         arrays["positions"] = "positions"
     arrays["doc_lengths"] = "doc_length"
+    keep = ", ".join(["term", *passthrough])
+    where = ""
+    if terms is not None:
+        listed = ", ".join(map(sql_literal, terms))
+        where = f" WHERE term IN ({listed})" if terms else " WHERE false"
     # Fail loudly rather than zero-fill: a missing doc_length would
     # silently inflate BM25 wdt for every posting in the block. Only
     # segments written without doc_lengths can hit this.
-    dl = F.col("doc_lengths")
-    zipped = F.when(
-        dl.isNull() | (F.size(dl) != F.size("doc_ids")),
-        F.raise_error(F.lit(
-            "segment is missing doc_lengths (written by an old format?) "
-            "— rebuild segments with build_segments()")),
-    ).otherwise(F.arrays_zip(*arrays))
-    extra = list(passthrough)
-    return seg.select("term", *extra, F.explode(zipped).alias("z")).select(
-        "term", *extra,
-        *(F.col(f"z.{src}").alias(dst) for src, dst in arrays.items()))
+    missing = sql_literal(
+        "segment is missing doc_lengths (written by an old format?) — "
+        "rebuild segments with build_segments()")
+    text = (
+        f"SELECT {keep}, "
+        + ", ".join(f"z.{src} AS {dst}" for src, dst in arrays.items())
+        + f" FROM (SELECT {keep}, explode(CASE WHEN doc_lengths IS NULL OR "
+        f"size(doc_lengths) != size(doc_ids) THEN raise_error({missing}) "
+        f"ELSE arrays_zip({', '.join(arrays)}) END) AS z "
+        f"FROM {{segments}}{where})")
+    try:
+        return segments.sparkSession.sql(text, segments=segments)
+    except AnalysisException:
+        if "docids_vb" in segments.columns:
+            raise ValueError(
+                "segments are in the retired VB format (docids_vb binary "
+                "columns) — rebuild them with build_segments()") from None
+        raise

@@ -63,7 +63,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..indexing.build import term_bucket, term_filter
+from ..indexing.build import term_bucket
 from ..indexing.segments import (
     build_segments,
     decode_postings,
@@ -269,10 +269,8 @@ def published_postings(
     post-decode (the index-table analogue of the snapshot layer's
     generic merge-on-read read)."""
     seg, dele, props = _published_segments(spark, index_root, terms, version)
-    if terms is not None:
-        seg = term_filter(seg, terms)
     postings = decode_postings(
-        seg, terms=None, with_positions=with_positions,
+        seg, terms, with_positions=with_positions,
         passthrough=("_seq",) if dele is not None else ())
     if dele is not None:
         postings = drop_deleted(postings, dele).drop("_seq")
@@ -290,29 +288,16 @@ def _corpus_scalars(props: dict) -> tuple[float, float]:
     return float(props["n_docs"]), float(props["avg_doc_length"])
 
 
-def _live_checkpoint(spark: SparkSession, index_root: str,
-                     terms: list[str], version: int | None,
-                     with_positions: bool) -> DataFrame:
-    """:func:`published_postings` for a query's terms, materialized
-    ONCE: every consumer of the decode (dft and scoring join, or each
-    leaf of a boolean query) reads the checkpoint instead of re-running
-    the bucket scan + decode + delete reconcile.  It is bounded by the
-    terms' posting lists, and localCheckpoint trades fault re-compute
-    for serving latency."""
-    return published_postings(
-        spark, index_root, terms, version=version,
-        with_positions=with_positions).localCheckpoint(eager=True)
-
-
 def _refreshed_scores(spark: SparkSession, index_root: str,
                       weights: dict, version: int | None) -> DataFrame:
     """Shared scorer over a refreshed snapshot: the bucket-pruned,
-    delete-reconciled decode of the queries' terms, checkpointed once,
-    with dft counted over that live checkpoint."""
+    delete-reconciled decode of the queries' terms, with dft counted
+    over those live postings in the same pass.  The decode has this one
+    consumer, so it runs once without being materialized."""
     scalars = _corpus_scalars(SnapshotTable(index_root).properties(version))
     terms = sorted({t for ts in weights.values() for t in ts})
-    postings = _live_checkpoint(spark, index_root, terms, version,
-                                with_positions=False)
+    postings = published_postings(spark, index_root, terms, version=version,
+                                  with_positions=False)
     return score(postings, weights, scalars, "bm25")
 
 
@@ -330,8 +315,8 @@ def refreshed_topk(
     frame — the decode is already paid; this is what upgrades the
     Lucene drift contract to exactness), corpus scalars come from the
     snapshot's properties (maintained from the docstats companion at
-    refresh time).  An eager checkpoint of the decode, then one action:
-    dft → wqt join → inlined multiplicity → score →
+    refresh time).  One action: decode → delete reconcile → window dft
+    → wqt → broadcast join with the query's (term, mult) rows → score →
     TakeOrderedAndProject."""
     terms = query_rank_terms(query, normalize)
     if not terms:
@@ -359,8 +344,9 @@ def refreshed_topk_batch(
     reconcile).
 
     Scale shape: one bucket-pruned decode of the UNION of all query
-    terms (delta layers + base, deletes applied once), checkpointed,
-    then the shared scorer and a per-query window top-k.
+    terms (delta layers + base, deletes applied once), the shared
+    scorer with its per-term window dft, and a per-query window top-k,
+    all in one action.
     """
     weights = query_batch_terms(queries, normalize)
     if not weights:
@@ -424,8 +410,13 @@ def refreshed_boolean(
         t1, t2 = node.term.split(" ")
         terms = {normalize(t1) + " " + normalize(t2)}
 
-    postings = _live_checkpoint(spark, index_root, sorted(terms), version,
-                                with_positions=True)
+    # Materialized ONCE: every leaf of the query reads the checkpoint
+    # instead of re-running the bucket scan + decode + delete reconcile.
+    # It is bounded by the terms' posting lists, and localCheckpoint
+    # trades fault re-compute for serving latency.
+    postings = published_postings(
+        spark, index_root, sorted(terms), version=version,
+        with_positions=True).localCheckpoint(eager=True)
     idx = SparkIndex(
         postings=postings.filter(~F.col("term").contains(" ")),
         doc_stats=None,

@@ -8,11 +8,14 @@ post-filter (near-duplicate suppression at query time, Manning IIR
 verify, connected components), i.e. this is the query-time consumer of
 that pipeline's output table.
 
-Scale shape: the scored set is matched-postings-sized; the cluster
-table joins on doc_id (bucketed by doc_id in a real deployment);
+Scale shape: the scored set is matched-postings-sized (ranked.rank_scores,
+whose dft window sends each query term's postings to one task); the
+cluster table joins on doc_id (bucketed by doc_id in a real deployment);
 best-per-cluster is a partial-aggregable groupBy(max(struct(score,
 doc_id))) — no window over a corpus-sized partition, head clusters
-combine map-side; final top-k stays TakeOrderedAndProject.
+combine map-side (Spark plans it as a partial and a final
+SortAggregate: a hash buffer cannot hold the struct); final top-k stays
+TakeOrderedAndProject.  tests/test_scorer_plans.py asserts this plan.
 """
 
 from __future__ import annotations

@@ -7,21 +7,27 @@ query terms are deduped via set(query.split(' ')) BEFORE normalization
 TermLiteral rules (termliteral.py:36-42 — hyphenated terms collapse to
 their LAST part); scores accumulate per doc; a per-doc normalizer
 divides at the end; top-K uses heapq tuple order = (score desc, doc_id
-desc) on ties (main.py:463-467), locked here via orderBy(desc(score),
-desc(doc_id)).limit(k) -> Catalyst's TakeOrderedAndProject.
+desc) on ties (main.py:463-467), locked here via ORDER BY score DESC,
+doc_id DESC LIMIT k -> Catalyst's TakeOrderedAndProject.
 
 Every ranked entry point (in-memory index, published segments,
 merge-on-read snapshots, BM25F, champion lists, WAND's exact pass) is a
-thin call onto :func:`score` and :func:`top_k`.
+thin call onto :func:`score` and :func:`top_k`.  Each of them is one
+``spark.sql`` statement over its input frames, and the strategies'
+wqt, wdt and normalizer are SQL text defined once here; code that needs
+a Column wraps that text in ``F.expr``.
 
 Scale notes: the postings scan is filtered to the handful of query
 terms (file-pruned by term bucket when served from an index table,
-pipeline/refresh.published_postings); dft
-counts are a tiny aggregate joined back by broadcast; corpus scalars
-and driver-known query weights are literals (no join, no Python-RDD
-frame); the only wide shuffle is groupBy(query_id, doc_id) over the
-matched postings, which is exactly the accumulator the reference
-builds one doc at a time.
+pipeline/refresh.published_postings).  dft is a window count over
+those postings partitioned by term, so all of one term's postings
+meet in a single task (no partial aggregate; a caller-supplied dft
+frame is joined by broadcast instead).  Corpus scalars are literals;
+driver-known query weights are an inline (term, query_id, mult) table
+with one row per query term, the build side of one broadcast hash join
+(no Python-RDD frame).  The other wide shuffle is groupBy(query_id,
+doc_id) over the matched postings, which is exactly the accumulator
+the reference builds one doc at a time.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pyspark.sql.window import Window
 
 from ..indexing.build import SparkIndex, term_filter
 from ..oracle.engine import term_for_rank_mode
+from ..sqltext import sql_literal
 
 STRATEGIES = ("default", "tfidf", "bm25", "wacky")
 
@@ -80,91 +87,82 @@ def query_batch_terms(queries: dict[str, str],
     return {qid: terms for qid, terms in out.items() if terms}
 
 
-def _wqt(strategy: str, n_docs: int, dft: Column | None = None):
-    # Spark's log(x <= 0) is NULL and greatest() skips NULLs, so the
-    # bm25 floor also covers a metadata dft that overcounts live docs
-    dft = (F.col("dft") if dft is None else dft).cast("double")
-    n = F.lit(float(n_docs))
+def _wqt(strategy: str, n_docs: float, dft: str = "dft") -> str:
+    """SQL text of a term's query-side weight, ``dft`` being the SQL
+    text of its document frequency.  Spark's ln(x <= 0) is NULL and
+    greatest() skips NULLs, so the bm25 floor also covers a metadata
+    dft that overcounts live docs."""
+    d, n = f"CAST({dft} AS DOUBLE)", sql_literal(float(n_docs))
     if strategy == "default":
-        return F.log(F.lit(1.0) + n / dft)
+        return f"ln(1.0D + {n} / {d})"
     if strategy == "tfidf":
-        return F.log(n / dft)
+        return f"ln({n} / {d})"
     if strategy == "bm25":
-        return F.greatest(F.lit(IDF_FLOOR), F.log((n - dft + 0.5) / (dft + 0.5)))
+        return (f"greatest({sql_literal(IDF_FLOOR)}, "
+                f"ln(({n} - {d} + 0.5D) / ({d} + 0.5D)))")
     if strategy == "wacky":
         # numpy ln(0) = -inf in the reference, so max(0, ln(0)) == 0
-        return F.when(n > dft, F.greatest(F.lit(0.0), F.log((n - dft) / dft))).otherwise(0.0)
+        return (f"CASE WHEN {n} > {d} THEN greatest(0.0D, ln(({n} - {d}) "
+                f"/ {d})) ELSE 0.0D END")
     raise ValueError(strategy)
 
 
-def bm25_wdt_expr(tftd: Column, doc_length: Column, avg_dl: float) -> Column:
-    """(k1+1)·tftd / (k1·(1−b + b·dl/avgdl) + tftd) — the exact
-    reference constants (ranked_strategy.py:134-135: 1.2·(0.25+0.75·…)).
-    WAND's block bounds plug in (max_tftd, min_doc_length)."""
-    tftd = tftd.cast("double")
-    denom = K1 * ((1.0 - B) + B * doc_length / F.lit(avg_dl)) + tftd
-    return (K1 + 1.0) * tftd / denom
-
-
-def _wdt(strategy: str, avg_doc_length: float):
-    tftd = F.col("tftd").cast("double")
+def _wdt(strategy: str, avg_doc_length: float, tftd: str = "tftd",
+         doc_length: str = "doc_length") -> str:
+    """SQL text of a posting's doc-side weight.  BM25 is
+    (k1+1)·tftd / (k1·(1−b + b·dl/avgdl) + tftd) with the exact
+    reference constants (ranked_strategy.py:134-135: 1.2·(0.25+0.75·…))."""
+    t = f"CAST({tftd} AS DOUBLE)"
     if strategy == "default":
-        return F.lit(1.0) + F.log(tftd)
+        return f"1.0D + ln({t})"
     if strategy == "tfidf":
-        return tftd
+        return t
     if strategy == "bm25":
-        return bm25_wdt_expr(tftd, F.col("doc_length"), avg_doc_length)
+        k1p1, k1, one_b, b, avg = map(
+            sql_literal, (K1 + 1.0, K1, 1.0 - B, B, float(avg_doc_length)))
+        return (f"{k1p1} * {t} / ({k1} * ({one_b} + {b} * {doc_length} / "
+                f"{avg}) + {t})")
     if strategy == "wacky":
-        return F.when(
-            F.col("avg_tftd") > 0,
-            (F.lit(1.0) + F.log(tftd)) / (F.lit(1.0) + F.log("avg_tftd")),
-        ).otherwise(0.0)
+        return (f"CASE WHEN avg_tftd > 0 THEN (1.0D + ln({t})) / "
+                "(1.0D + ln(avg_tftd)) ELSE 0.0D END")
     raise ValueError(strategy)
 
 
-def _normalizer(strategy: str):
+def _normalizer(strategy: str) -> str:
+    """SQL text of the per-doc divisor of a strategy's score."""
     if strategy == "bm25":
-        return F.lit(1.0)
+        return "1.0D"
     if strategy == "wacky":
-        return F.sqrt(F.col("byte_size"))
-    return F.col("Ld")
+        return "sqrt(byte_size)"
+    return "Ld"
 
 
-def _sql(v: str | int | float) -> str:
-    """Spark SQL literal text for a string or number. The string escape
-    assumes the default ``spark.sql.parser.escapedStringLiterals=false``."""
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    return f"{v!r}D" if isinstance(v, float) else f"{int(v)}L"
+def bm25_wdt_expr(tftd: str, doc_length: str, avg_dl: float) -> Column:
+    """The BM25 wdt over SQL expressions ``tftd`` and ``doc_length``.
+    WAND's block bounds plug in (max_tftd, min_doc_length)."""
+    return F.expr(_wdt("bm25", avg_dl, tftd, doc_length))
 
 
-def _literal_map(d: dict[str, int | float]) -> Column:
-    """A driver-side {str: number} dict as ONE map literal parsed from
-    SQL text: building it from F.lit calls costs a py4j round-trip per
-    element — seconds for a replayed query log."""
-    return F.expr("map(" + ", ".join(
-        f"{_sql(k)}, {_sql(v)}" for k, v in sorted(d.items())) + ")")
-
-
-def _fan_out(frame: DataFrame,
-             weights: dict[str, dict[str, int]] | DataFrame) -> DataFrame:
-    """``frame`` × the queries that mention each of its terms: adds
-    (query_id, mult). Driver-known weights are one literal map
-    term → array<struct<query_id, mult>>, inlined (no join); a weights
-    DataFrame is joined by broadcast under query_id ""."""
+def _weights_sql(weights: dict[str, dict[str, int]] | DataFrame,
+                 frames: dict[str, DataFrame]) -> str:
+    """The fan-out side of :func:`score`: FROM-clause text of a
+    (_wterm, query_id, mult) relation, one row per (query, term).
+    Driver-known weights are an inline table parsed with the statement
+    (no Python-RDD frame); a weights DataFrame is added to ``frames``
+    under query_id ''.  Either way it is the build side of ONE
+    broadcast hash join on term, so each posting meets the queries
+    that mention its term in one hash probe, however many terms the
+    batch holds."""
     if isinstance(weights, DataFrame):
-        mult = F.col("mult") if "mult" in weights.columns else F.lit(1.0)
-        w = weights.select("term", mult.cast("double").alias("mult"))
-        return frame.join(F.broadcast(w), "term").withColumn("query_id", F.lit(""))
-    by_term: dict[str, list[str]] = {}
-    for qid, terms in weights.items():
-        for t, m in terms.items():
-            by_term.setdefault(t, []).append(
-                f"named_struct('query_id', {_sql(qid)}, 'mult', {_sql(float(m))})")
-    qmap = F.expr("map(" + ", ".join(
-        f"{_sql(t)}, array({', '.join(qs)})"
-        for t, qs in sorted(by_term.items())) + ")")
-    return frame.select("*", F.inline(qmap[F.col("term")]))
+        frames["weights"] = weights
+        mult = "mult" if "mult" in weights.columns else "1"
+        return ("(SELECT term AS _wterm, '' AS query_id, "
+                f"CAST({mult} AS DOUBLE) AS mult FROM {{weights}})")
+    rows = ", ".join(
+        f"({sql_literal(t)}, {sql_literal(qid)}, {sql_literal(float(m))})"
+        for qid, terms in sorted(weights.items())
+        for t, m in sorted(terms.items()))
+    return f"(SELECT * FROM VALUES {rows} AS v(_wterm, query_id, mult))"
 
 
 def score(
@@ -181,41 +179,62 @@ def score(
     ``strategy`` reads. ``weights`` is ``{query_id: {term: mult}}`` or
     a (term[, mult]) DataFrame (an expansion too large to collect).
     ``scalars`` is (n_docs, avg_doc_length). ``dft`` is None (count the
-    given postings) or a (term, dft) frame.
+    given postings) or a (term, dft) frame, joined by broadcast.
     ``prune`` drops terms under the S7 wqt threshold.
+
+    With ``dft=None`` the count is ``count(*) OVER (PARTITION BY term)``
+    in the same pass over the postings: no separate aggregate and no
+    join back.  The window sends all of one term's postings to a single
+    task, with no partial aggregate — bounded by the query terms'
+    posting lists, but a head term's whole list lands on one task.
+
+    The plan is ONE ``spark.sql`` statement: built from Column calls it
+    costs a py4j round trip per expression node.
     """
     n_docs, avg_dl = scalars
+    frames = {"postings": postings}
     if dft is None:
-        dft = count_dft(postings)
-    wq = dft.select("term", _wqt(strategy, n_docs).alias("wqt"))
+        counted = ("SELECT *, count(*) OVER (PARTITION BY term) AS dft "
+                   "FROM {postings}")
+    else:
+        frames["dft"] = dft
+        counted = ("SELECT /*+ BROADCAST(d) */ p.*, d.dft FROM {postings} p "
+                   "JOIN {dft} d ON p.term = d.term")
     threshold = PRUNE_THRESHOLDS.get(strategy)
-    if prune and threshold is not None:
-        wq = wq.filter(F.col("wqt") >= threshold)
-    # the fan-out runs on the ≤|terms|-row weight side, so each posting
-    # meets its queries in the one broadcast hash join
-    scored = postings.join(F.broadcast(_fan_out(wq, weights)), "term")
-    contrib = _wdt(strategy, avg_dl) * F.col("wqt") * F.col("mult")
+    where = (f" WHERE wqt >= {sql_literal(threshold)}"
+             if prune and threshold is not None else "")
     # the normalizer inputs are functionally dependent on doc_id, so
     # they ride through the agg as first()
-    return scored.groupBy("query_id", "doc_id").agg(
-        (F.sum(contrib) / F.first(_normalizer(strategy))).alias("score"))
+    return postings.sparkSession.sql(
+        "SELECT /*+ BROADCAST(w) */ query_id, doc_id, "
+        f"sum(({_wdt(strategy, avg_dl)}) * wqt * mult) / "
+        f"first({_normalizer(strategy)}) AS score "
+        f"FROM (SELECT *, {_wqt(strategy, n_docs)} AS wqt FROM ({counted})) c "
+        f"JOIN {_weights_sql(weights, frames)} w ON c.term = w._wterm"
+        f"{where} GROUP BY query_id, doc_id", **frames)
 
 
 def count_dft(postings: DataFrame) -> DataFrame:
     """(term, dft) counted over a postings frame."""
-    return postings.groupBy("term").agg(F.count("*").alias("dft"))
+    return postings.sparkSession.sql(
+        "SELECT term, count(*) AS dft FROM {postings} GROUP BY term",
+        postings=postings)
 
 
 def top_k(scored: DataFrame, k: int, per_query: bool = False) -> DataFrame:
     """Reference tie-break (score desc, doc_id desc). One query:
-    (doc_id, score) via orderBy+limit (TakeOrderedAndProject). Many:
+    (doc_id, score) via ORDER BY + LIMIT (TakeOrderedAndProject). Many:
     (query_id, doc_id, score, rank) with row_number() ≤ k per query_id
     (WindowGroupLimit — a partial top-k before the exchange)."""
-    order = (F.desc("score"), F.desc("doc_id"))
+    order = "score DESC, doc_id DESC"
     if not per_query:
-        return scored.select("doc_id", "score").orderBy(*order).limit(k)
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return scored.sparkSession.sql(
+            f"SELECT doc_id, score FROM {{scored}} ORDER BY {order} "
+            f"LIMIT {int(k)}", scored=scored)
+    return scored.sparkSession.sql(
+        "SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY "
+        f"query_id ORDER BY {order}) AS `rank` FROM {{scored}}) "
+        f"WHERE `rank` <= {int(k)}", scored=scored)
 
 
 def empty_topk(spark, per_query: bool = False) -> DataFrame:
@@ -315,10 +334,9 @@ def champion_lists(index: SparkIndex, r: int = 64, salt: int = 16,
     by salt·r rows regardless of df."""
     _, avg_dl = index.corpus_scalars()
     base = index.postings.select("term", "doc_id", "tftd", *STAT_COLS)
-    impact = _wdt(strategy, avg_dl) / _normalizer(strategy)
-    base = base.withColumn(
-        "_impact_e6", F.floor(impact * F.lit(1e6)).cast("long")
-    )
+    base = base.withColumn("_impact_e6", F.expr(
+        f"CAST(floor(({_wdt(strategy, avg_dl)}) / "
+        f"{_normalizer(strategy)} * 1000000.0D) AS BIGINT)"))
     order = [F.desc("_impact_e6"), F.desc("tftd"), F.desc("doc_id")]
     w1 = Window.partitionBy("term", "_salt").orderBy(*order)
     part = (
@@ -388,13 +406,13 @@ def rank_topk_batch(
     independent of which query mentions the term.
 
     Scale shape: one postings scan filtered to the UNION of all query
-    terms (partition-pruned), the (query_id, mult) fan-out inlined as a
-    literal map — postings fan out to the queries sharing each term —
-    one partial-agg shuffle on (query_id, doc_id), then a per-query
-    window top-k (parallel across queries; no global sort). This is the
-    evaluation-harness path: 225 Cranfield queries cost one plan, not
-    225 (tools/cranfield_eval.py), and at warehouse scale it is how a
-    query log replays against the index.
+    terms (partition-pruned), the (term, query_id, mult) fan-out as an
+    inline table broadcast-joined on term — postings fan out to the
+    queries sharing each term — one partial-agg shuffle on (query_id,
+    doc_id), then a per-query window top-k (parallel across queries; no
+    global sort). This is the evaluation-harness path: 225 Cranfield
+    queries cost one plan, not 225 (tools/cranfield_eval.py), and at
+    warehouse scale it is how a query log replays against the index.
     """
     weights = query_batch_terms(queries, normalize)
     if not weights:

@@ -45,8 +45,8 @@ from pyspark.sql.window import Window
 from ..indexing.build import term_filter
 from ..indexing.segments import decode_postings
 from ..sources.snapshots import drop_deleted
+from ..sqltext import sql_map
 from .ranked import (
-    _literal_map,
     _wqt,
     bm25_wdt_expr,
     empty_topk,
@@ -118,18 +118,19 @@ def wand_topk(
     dft = {r["term"]: r["dft"] for r in block_dft(seg).collect()}
     if not dft:
         return empty_topk(spark)
-    dft_map = _literal_map(dft)
-    wqt = _wqt("bm25", n_docs, dft_map[F.col("term")])
-    mult = _literal_map({t: float(m) for t, m in terms.items()})[F.col("term")]
+    dft_map = sql_map(dft)
+    wqt = F.expr(_wqt("bm25", n_docs, f"{dft_map}[term]"))
+    mult = F.expr(f"{sql_map({t: float(m) for t, m in terms.items()})}[term]")
     # the same literal as a (term, dft) frame for the exact scorer — a
     # one-row range exploded, so no Python-RDD scan
-    dft_df = spark.range(1).select(F.explode(dft_map).alias("term", "dft"))
+    dft_df = spark.range(1).select(
+        F.explode(F.expr(dft_map)).alias("term", "dft"))
 
     # 1. per-block upper bounds from metadata only
     block_ub = (
         seg.withColumn(
             "ub_t",
-            bm25_wdt_expr(F.col("max_tftd"), F.col("min_doc_length"), avg_dl)
+            bm25_wdt_expr("max_tftd", "min_doc_length", avg_dl)
             * wqt * mult,
         )
         .groupBy("block")

@@ -82,6 +82,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..sqltext import sql_literal
+
 _CURRENT = "_current.json"
 _TAGS = "_tags.json"
 MANIFEST = "manifest.json"
@@ -410,7 +412,7 @@ class SnapshotTable:
                      group[0]["schema"]))
                  .parquet(*[os.path.join(self.root, f["path"])
                             for f in group])
-                 .withColumn("_seq", F.lit(seq).cast("int"))
+                 .selectExpr("*", f"CAST({seq} AS INT) AS _seq")
                  for seq, group in sorted(by_seq.items())]
         out = parts[0]
         for p in parts[1:]:
@@ -716,14 +718,13 @@ def drop_deleted(rows: DataFrame, deletes: DataFrame) -> DataFrame:
     re-add in the delete's own commit survives).  ``rows`` carries
     ``_seq`` and keeps it; ``deletes`` is a :meth:`SnapshotTable.delete_rows`
     frame — delta-sized, so it is the build side of ONE broadcast
-    left-anti join, with no aggregate."""
-    keys = [c for c in deletes.columns if c != "_seq"]
-    dele = deletes.select(*[F.col(c).alias("_del_" + c)
-                            for c in deletes.columns])
-    cond = F.col("_del__seq") > F.col("_seq")
-    for c in keys:
-        cond = cond & (F.col(c) == F.col("_del_" + c))
-    return rows.join(F.broadcast(dele), cond, "left_anti")
+    left-anti join, with no aggregate, planned by one ``spark.sql``
+    statement."""
+    on = " AND ".join([f"r.`{c}` = d.`{c}`" for c in deletes.columns
+                       if c != "_seq"] + ["d._seq > r._seq"])
+    return rows.sparkSession.sql(
+        "SELECT /*+ BROADCAST(d) */ r.* FROM {rows} r "
+        "LEFT ANTI JOIN {deletes} d ON " + on, rows=rows, deletes=deletes)
 
 
 def _file_lineage(root: str, data_dir: str) -> list[dict]:
@@ -883,19 +884,19 @@ def _in_range(v, lo, hi) -> bool:
 
 def _predicates_column(predicates: list[tuple]):
     """The same conjunction as a Spark Column — applied after pruning
-    so ``read(predicates=…)`` is exactly ``read().filter(…)``."""
-    from pyspark.sql import functions as F
-
-    out = None
+    so ``read(predicates=…)`` is exactly ``read().filter(…)``.  Parsed
+    from SQL text: a Column built per literal costs a py4j round trip
+    per value, and a query batch's bucket list holds dozens."""
+    text = []
     for col, op, val in predicates:
-        c = F.col(col)
+        c = "`" + col.replace("`", "``") + "`"
         if op == "in":
-            e = c.isin(list(val))
+            vals = list(val)
+            text.append(f"{c} IN ({', '.join(map(sql_literal, vals))})"
+                        if vals else "false")
         else:
-            e = {"=": c == val, "<": c < val, "<=": c <= val,
-                 ">": c > val, ">=": c >= val}[op]
-        out = e if out is None else out & e
-    return out
+            text.append(f"{c} {op} {sql_literal(val)}")
+    return F.expr(" AND ".join(text))
 
 
 def _atomic_json(path: str, obj) -> None:

@@ -36,7 +36,8 @@ def test_salted_champions_equal_naive_window(spark, sidx):
     }
     _, avg_dl = sidx.corpus_scalars()
     impact_e6 = F.floor(
-        (_wdt("bm25", avg_dl) / _normalizer("bm25")) * F.lit(1e6)
+        F.expr(f"({_wdt('bm25', avg_dl)}) / {_normalizer('bm25')}")
+        * F.lit(1e6)
     ).cast("long")
     w = Window.partitionBy("term").orderBy(
         F.desc(impact_e6), F.desc("tftd"), F.desc("doc_id")

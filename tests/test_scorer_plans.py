@@ -4,16 +4,25 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 * a single query selects with TakeOrderedAndProject, never a global Sort;
 * a query batch selects with WindowGroupLimit (partial top-k per query);
 * no plan scans a Python-built RDD — query weights are literals; the only
-  RDD scan allowed is the merge-on-read path's eager localCheckpoint;
+  RDD scan allowed is refreshed_boolean's eager localCheckpoint;
+* driver-known query weights are an inline (term, query_id, mult) table,
+  the build side of a broadcast hash join on term: no Generate fans the
+  postings out to their queries;
 * no ranked scan reads a positions column;
-* refreshed_topk and refreshed_boolean decode their postings once: each
-  segment scan is decoded once inside the one checkpointed frame, and the
-  scoring or boolean evaluation plan reads only the checkpoint;
+* refreshed_topk and refreshed_topk_batch take no checkpoint: each
+  segment scan sits under exactly one decode, and dft is one window
+  partitioned by term over that decode;
+* refreshed_boolean decodes its postings once: each segment scan is
+  decoded once inside the one checkpointed frame, and the evaluation
+  plan reads only the checkpoint;
 * a term lookup on a published index table scans only the files the
   manifest keeps for the term's bucket, and pushes the term and bucket
   predicates into the Parquet scan;
 * a segment merge streams the base through broadcast joins only, and its
   cold (untouched) groups pass through with no Exchange;
+* a diversified top-k picks each cluster's best doc with a partial and a
+  final aggregate of max(struct(score, doc_id)), never a window keyed by
+  cluster, and ends in TakeOrderedAndProject;
 * the ranked, batch, AND/OR boolean and segment-build plans start no
   Python worker (no ArrowEvalPythonExec or BatchEvalPythonExec): segments
   are Parquet arrays decoded by a JVM explode;
@@ -21,14 +30,17 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
   building it starts no Spark job, and its broadcast holds no aggregate
   and no shuffle.
 
-It also checks that query ids and terms holding a quote or a backslash
-survive their trip through the scorer's SQL literal text.
+It also checks that query ids and terms holding a quote, a backslash or
+a brace survive their trip through the scorer's SQL literal text, and
+that building and collecting a ranked query over a published table takes
+few py4j round trips and Spark jobs.
 """
 
 from __future__ import annotations
 
 import math
 import re
+import threading
 
 import pytest
 from pyspark.sql import DataFrame
@@ -40,8 +52,8 @@ from searchengine_spark.indexing.segments import build_segments, merge_segments
 from searchengine_spark.indexing.simple import build_simple_index, simple_query_term
 from searchengine_spark.pipeline import refresh as R
 from searchengine_spark.pipeline.index_pipeline import publish_segments
+from searchengine_spark.queries.diversify import rank_topk_diverse
 from searchengine_spark.queries.ranked import (
-    _literal_map,
     champion_lists,
     rank_topk,
     rank_topk_batch,
@@ -49,6 +61,7 @@ from searchengine_spark.queries.ranked import (
     score,
 )
 from searchengine_spark.sources.snapshots import SnapshotTable
+from searchengine_spark.sqltext import sql_map
 
 SF_DIR = "/root/testdata/sf0.01"
 QUERY = "table scan merge"
@@ -101,6 +114,16 @@ def _check_common(nodes) -> None:
             assert not getattr(node, "global")(), "global Sort in plan"
 
 
+def _broadcast_fan_out(nodes) -> None:
+    """The query weights reach the postings through a broadcast hash
+    join with an inline table; the only Generates are segment decodes."""
+    assert all(_is_decode(n) for n in nodes
+               if n.getClass().getSimpleName() == "GenerateExec")
+    builds = [_names(_nodes(n)) for n in nodes
+              if n.getClass().getSimpleName() == "BroadcastExchangeExec"]
+    assert any("LocalTableScanExec" in b for b in builds), builds
+
+
 def _single(df: DataFrame) -> list:
     nodes = _executed(df)
     _check_common(nodes)
@@ -142,6 +165,13 @@ def _no_python(nodes) -> None:
     assert not python, python
 
 
+def _window_keys(node) -> list[str]:
+    """The partition keys of a WindowExec, without expression ids."""
+    spec = node.partitionSpec()
+    return [spec.apply(i).toString().split("#")[0]
+            for i in range(spec.size())]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -164,14 +194,16 @@ def pidx(spark, docs, tmp_path_factory):
 @pytest.fixture(scope="module")
 def published(spark, docs, tmp_path_factory, uncoalesced):
     """The sf0.01 simple index's segments published as an index table
-    (16 term buckets, block span 64), one file per range partition."""
+    (16 term buckets, block span 64, with its corpus scalars), one file
+    per range partition."""
     root = str(tmp_path_factory.mktemp("plan_published"))
     idx = build_simple_index(docs)
     with uncoalesced():
         publish_segments(spark, root,
                          build_segments(idx.postings, idx.doc_stats,
                                         block_span=64),
-                         term_buckets=16, block_span=64)
+                         term_buckets=16, block_span=64,
+                         corpus_stats=idx.corpus_stats)
     return root
 
 
@@ -228,12 +260,13 @@ def refreshed_twice(spark, tmp_path_factory):
 
 
 def test_rank_topk_plan(pidx):
-    _single(rank_topk(pidx, QUERY, "bm25", 10, normalize=simple_query_term))
+    _broadcast_fan_out(_single(rank_topk(pidx, QUERY, "bm25", 10,
+                                         normalize=simple_query_term)))
 
 
 def test_rank_topk_batch_plan(pidx):
-    _batch(rank_topk_batch(pidx, BATCH, "bm25", 10,
-                           normalize=simple_query_term))
+    _broadcast_fan_out(_batch(rank_topk_batch(pidx, BATCH, "bm25", 10,
+                                              normalize=simple_query_term)))
 
 
 def test_rank_topk_champions_plan(pidx):
@@ -248,6 +281,28 @@ def test_rank_topk_fielded_plan(docs):
         {"title": 2.0, "text": 1.0},
     )
     _single(rank_topk_fielded(fidx, QUERY, 10, normalize=simple_query_term))
+
+
+def test_rank_topk_diverse_plan(spark, pidx):
+    clusters = spark.range(1, 3).select(
+        F.col("id").alias("doc_id"), F.lit(1).cast("long").alias("cluster_id"))
+    nodes = _single(rank_topk_diverse(pidx, "table scan", clusters, "bm25",
+                                      10, normalize=simple_query_term))
+    names = [n for n in _names(nodes) if n != "ResultQueryStageExec"]
+    assert names[0] == "TakeOrderedAndProjectExec", names
+    # Spark plans max over a struct as a SortAggregate (a hash buffer
+    # cannot hold a struct); either way it is split map-side
+    best = [n for n in nodes if n.getClass().getSimpleName().endswith(
+        "AggregateExec") and "max(struct(score" in n.toString()]
+    modes = sorted(n.aggregateExpressions().apply(0).mode().toString()
+                   for n in best)
+    assert modes == ["Final", "Partial"], modes
+    for n in best:
+        assert n.groupingExpressions().apply(0).toString().startswith(
+            "cluster_id")
+    windows = [_window_keys(n) for n in nodes
+               if n.getClass().getSimpleName() == "WindowExec"]
+    assert not [w for w in windows if "cluster_id" in w], windows
 
 
 def test_term_lookup_prunes_bucket_and_pushes_term(spark, published):
@@ -318,36 +373,66 @@ def _checkpoint_plans(spark, monkeypatch) -> list:
     return seen
 
 
-def test_refreshed_topk_plan_decodes_once(spark, refreshed, monkeypatch):
-    checkpointed = _checkpoint_plans(spark, monkeypatch)
-    nodes = _single(R.refreshed_topk(spark, refreshed, CRAWL_QUERY, k=10))
-    assert len(checkpointed) == 1
-    _check_common(checkpointed[0])
-    # each snapshot layer's scan (base + delta) is decoded once, all
-    # inside the checkpoint; the scoring plan only reads the checkpoint
-    under, scans = _decoded_scans(checkpointed[0])
+def _live_ranked(nodes) -> None:
+    """The checkpoint-free ranked serving shape: each snapshot layer's
+    segment scan (base + delta) decoded once, dft one window over the
+    term, and no checkpoint or Python worker."""
+    assert "RDDScanExec" not in _names(nodes)
+    under, scans = _decoded_scans(nodes)
     assert under == scans and len(scans) >= 2
-    assert _decoded_scans(nodes) == ([], [])
-    assert not any(_is_decode(n) for n in nodes)
-    assert "RDDScanExec" in _names(nodes)
-    _no_python(checkpointed[0])
+    windows = [_window_keys(n) for n in nodes
+               if n.getClass().getSimpleName() == "WindowExec"]
+    assert windows.count(["term"]) == 1, windows
+    _broadcast_fan_out(nodes)
     _no_python(nodes)
 
 
-def test_refreshed_topk_batch_plan(spark, refreshed, monkeypatch):
-    checkpointed = _checkpoint_plans(spark, monkeypatch)
-    nodes = _batch(R.refreshed_topk_batch(spark, refreshed, CRAWL_BATCH,
-                                          k=10))
-    assert len(checkpointed) == 1
-    _check_common(checkpointed[0])
-    # each snapshot layer's scan (base + delta) is decoded once, all
-    # inside the checkpoint; the scoring plan only reads the checkpoint
-    under, scans = _decoded_scans(checkpointed[0])
-    assert under == scans and len(scans) >= 2
-    assert _decoded_scans(nodes) == ([], [])
-    assert not any(_is_decode(n) for n in nodes)
-    _no_python(checkpointed[0])
-    _no_python(nodes)
+def test_refreshed_topk_plan_decodes_once(spark, refreshed):
+    _live_ranked(_single(R.refreshed_topk(spark, refreshed, CRAWL_QUERY,
+                                          k=10)))
+
+
+def test_refreshed_topk_batch_plan(spark, refreshed):
+    _live_ranked(_batch(R.refreshed_topk_batch(spark, refreshed,
+                                               CRAWL_BATCH, k=10)))
+
+
+def test_refreshed_topk_round_trips(spark, published, monkeypatch):
+    """Building and collecting one ranked query over a delete-free
+    published table: fewer than 100 py4j round trips, at most 4 jobs —
+    the broadcast of the query's weight table, the dft window's and the
+    aggregate's shuffles, and the top-k result stage."""
+    import py4j.clientserver as cs
+
+    calls = []
+    real = cs.ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(conn, command):
+        # py4j's finalizer thread sends the JVM-reference deletes of
+        # earlier, collected objects; only this thread's calls count
+        if threading.get_ident() == caller:
+            calls.append(command)
+        return real(conn, command)
+
+    def query():
+        return R.refreshed_topk(spark, published, QUERY, k=10,
+                                normalize=simple_query_term)
+
+    query().collect()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("ranked-round-trips", "one ranked query")
+    try:
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command",
+                            counting)
+        rows = query().collect()
+        monkeypatch.undo()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(calls) < 100, len(calls)
+    jobs = sc.statusTracker().getJobIdsForGroup("ranked-round-trips")
+    assert 1 <= len(jobs) <= 4, list(jobs)
 
 
 @pytest.mark.parametrize("query", ["refreshed crawl", "refreshed + page"])
@@ -367,9 +452,9 @@ def test_refreshed_boolean_and_or_plan_has_no_python(spark, refreshed, query,
 
 
 def test_literal_weights_keep_quotes_and_backslashes(spark):
-    terms = ["it's", "a\\b", "x'\\'y"]
+    terms = ["it's", "a\\b", "x'\\'y", "a{b", "x}"]
     keys = spark.range(1).select(
-        F.explode(_literal_map({t: 1 for t in terms}))).collect()
+        F.explode(F.expr(sql_map({t: 1 for t in terms})))).collect()
     assert sorted(r["key"] for r in keys) == sorted(terms)
 
     postings = spark.createDataFrame(
@@ -400,12 +485,11 @@ def test_delete_rows_start_no_job(spark, refreshed_twice):
 
 
 def test_refreshed_topk_delete_broadcast_has_no_aggregate(
-        spark, refreshed_twice, monkeypatch):
-    checkpointed = _checkpoint_plans(spark, monkeypatch)
-    _single(R.refreshed_topk(spark, refreshed_twice, CRAWL_QUERY, k=10))
-    assert len(checkpointed) == 1
+        spark, refreshed_twice):
+    nodes = _single(R.refreshed_topk(spark, refreshed_twice, CRAWL_QUERY,
+                                     k=10))
     delete_sides = []
-    for node in checkpointed[0]:
+    for node in nodes:
         if node.getClass().getSimpleName() != "BroadcastExchangeExec":
             continue
         side = _nodes(node)

@@ -317,6 +317,25 @@ def test_string_bounds_and_long_string_max_dropped(spark, table):
                       predicates=[("text", ">", "w")]).count() == 40
 
 
+def test_bool_and_date_predicates_filter_exactly(spark, table):
+    import datetime
+
+    day_col = F.date_add(F.lit(datetime.date(2024, 1, 1)),
+                         F.col("doc_id").cast("int"))
+    df = _docs(spark, 0, 20).select(
+        "doc_id", (F.col("doc_id") % 2 == 0).alias("even"),
+        day_col.alias("day"), F.to_timestamp(day_col).alias("ts"))
+    table.commit(df)
+    day = datetime.date(2024, 1, 11)
+    got = sorted(r.doc_id for r in table.read(
+        spark, predicates=[("even", "=", True), ("day", "<", day),
+                           ("doc_id", "in", [2, 4, 13])]).collect())
+    assert got == [2, 4]
+    assert table.read(spark, predicates=[("day", "in", [day])]).count() == 1
+    ts = datetime.datetime(2024, 1, 11, tzinfo=datetime.timezone.utc)
+    assert table.read(spark, predicates=[("ts", ">=", ts)]).count() == 10
+
+
 def test_all_null_column_file_pruned(spark, table):
     df = _docs(spark, 0, 20).withColumn("score", F.lit(None).cast("int"))
     table.commit(df)

@@ -2,8 +2,9 @@
 recorded in PERF.md) — run `python tools/explain_audit.py` to verify
 partition pruning, filter pushdown, broadcast joins, and
 TakeOrderedAndProject claims against the live Catalyst output. The
-ranked entry points', the term lookup's and the segment merge's plan
-claims are asserted by tests/test_scorer_plans.py instead."""
+ranked entry points', the term lookup's, the segment merge's and the
+diversified top-k's plan claims are asserted by
+tests/test_scorer_plans.py instead."""
 
 from __future__ import annotations
 
@@ -46,19 +47,6 @@ def main() -> None:
 
     snippets_topk(idx, docs, "table scan merge", "bm25", 10, 8,
                   normalize=simple_query_term).explain("formatted")
-
-    print("=" * 70)
-    print("DIVERSIFIED TOP-K — best-per-cluster must be a partial+final")
-    print("HashAggregate on max(struct(score, doc_id)) (map-side combine")
-    print("for head clusters), NOT a window over a corpus partition;")
-    print("final top-k stays TakeOrderedAndProject")
-    print("=" * 70)
-    from searchengine_spark.queries.diversify import rank_topk_diverse
-
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1)], "doc_id long, cluster_id long")
-    rank_topk_diverse(idx, "table scan", clusters, "bm25", 10,
-                      normalize=simple_query_term).explain("formatted")
 
     print("=" * 70)
     print("HYBRID ANN ARM (round 5) — the embeddings scan must carry the")
