@@ -2236,8 +2236,8 @@ def ref_boolean_mixed(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # 9. Quirk-exact positional merges — the reference's two-pointer phrase
 #    and NEAR algorithms (merge_posting.py:62-113, 260-308), which the
-#    engine runs verbatim inside an Arrow pandas UDF
-#    (queries/engine.py), replayed in SQL as a recursive-CTE pointer
+#    engine runs as Spark ``aggregate`` walks (queries/engine.py),
+#    replayed here in DuckDB SQL as a recursive-CTE pointer
 #    walk + tail-leftover predicates. near_quirky genuinely diverges
 #    from the clean BETWEEN-1-AND-k semantics (exact-k main loop,
 #    unbounded-below <=k tail), so this closes the last pytest-only

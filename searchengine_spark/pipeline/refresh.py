@@ -355,18 +355,6 @@ def refreshed_topk_batch(
                  per_query=True)
 
 
-def lookup_terms(node, normalize) -> set[str]:
-    """Every normalized index term a query's evaluation will look up."""
-    if node.kind == "term":
-        return {normalize(node.term)}
-    if node.kind == "phrase":
-        return {normalize(w) for w in node.term.split(" ")}
-    out: set[str] = set()
-    for child in node.children:
-        out |= lookup_terms(child, normalize)
-    return out
-
-
 def refreshed_boolean(
     spark: SparkSession,
     index_root: str,
@@ -377,54 +365,36 @@ def refreshed_boolean(
     """Boolean/phrase/NEAR serving from an index snapshot; returns
     DataFrame(doc_id) in the canonical sorted order, identical to
     ``queries/engine.boolean_query`` over a from-scratch index of the
-    same pages.
-
-    The query is parsed ONCE driver-side to collect the normalized
-    lookup terms (plus the biword key when the whole query is a
-    two-term phrase — the only case the reference's main.py:413-418
-    routes to the biword index); only those terms' buckets
-    are planned from the manifest, decoded once into a checkpoint
-    (positions included — phrase/NEAR need them) with deletes
-    reconciled, and the compiled engine evaluates the query over that
-    checkpoint, quirks and all.
+    same pages, quirks and all.  ``queries/engine.compile_query`` names
+    the terms to decode (the biword key alone for a lone two-term
+    phrase, main.py:413-418); only their buckets are planned, decoded
+    with deletes reconciled (positions only for a phrase or NEAR) and
+    answered by one statement, with no checkpoint.  At scale the
+    group-by shuffles every decoded posting of every query term once,
+    by doc_id (with its positions for a phrase or NEAR), so a rare term
+    AND a head term pays for the whole head list.
 
     Two-term phrases need the snapshot's biword family: the fast path
     has its own semantics (clean adjacency vs the positional merge's
     quirks), so a snapshot without it raises rather than substituting
     one for the other."""
-    from ..indexing.build import SparkIndex
-    from ..queries.engine import boolean_query, boolean_query_term
+    from ..queries.engine import boolean_query_term, compile_query, compiled_docs
     from ..queries.parser import parse_boolean_query
 
-    normalize = normalize or boolean_query_term
     node = parse_boolean_query(query)
     if node is None:
         return spark.createDataFrame([], "doc_id long")
-    props = SnapshotTable(index_root).properties(version)
-    terms = lookup_terms(node, normalize)
-    if node.kind == "phrase" and len(node.term.split(" ")) == 2:
-        if not props.get("biword"):
-            raise KeyError(
-                "two-term phrase queries use the biword fast path, but "
-                "this snapshot was published without the biword family")
-        t1, t2 = node.term.split(" ")
-        terms = {normalize(t1) + " " + normalize(t2)}
-
-    # Materialized ONCE: every leaf of the query reads the checkpoint
-    # instead of re-running the bucket scan + decode + delete reconcile.
-    # It is bounded by the terms' posting lists, and localCheckpoint
-    # trades fault re-compute for serving latency.
-    postings = published_postings(
-        spark, index_root, sorted(terms), version=version,
-        with_positions=True).localCheckpoint(eager=True)
-    idx = SparkIndex(
-        postings=postings.filter(~F.col("term").contains(" ")),
-        doc_stats=None,
-        corpus_stats=None,
-        biword=postings.filter(F.col("term").contains(" "))
-        .select("term", "doc_id"),
-    )
-    return boolean_query(idx, query, normalize)
+    compiled = compile_query(node, normalize or boolean_query_term)
+    if compiled.biword and not SnapshotTable(index_root).properties(
+            version).get("biword"):
+        raise KeyError(
+            "two-term phrase queries use the biword fast path, but "
+            "this snapshot was published without the biword family")
+    return compiled_docs(
+        published_postings(spark, index_root, list(compiled.terms),
+                           version=version,
+                           with_positions=any(compiled.positions)),
+        compiled)
 
 
 def refreshed_wand_topk(

@@ -78,7 +78,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -360,12 +360,12 @@ class SnapshotTable:
         files = man["data_files"]
         if predicates:
             files = [f for f in files if _file_may_match(f, predicates)]
-        schema = StructType.fromJson(man["schema"])
+        schema = _ddl(man["schema"])
         delete_files = man.get("delete_files", [])
         dele = None
         if delete_files and apply_deletes:
             eq_cols = delete_files[0]["equality_columns"]
-            table_cols = {f.name for f in schema.fields}
+            table_cols = {f["name"] for f in man["schema"]["fields"]}
             if not set(eq_cols) <= table_cols:
                 raise ValueError(
                     f"this snapshot carries equality deletes on "
@@ -398,22 +398,27 @@ class SnapshotTable:
         return df
 
     def _seq_layers(self, spark: SparkSession, files: list[dict],
-                    schema: StructType | None = None) -> DataFrame:
+                    schema: str | None = None) -> DataFrame:
         """The union of one scan per sequence number over ``files``,
-        each row stamped with its file's ``_seq``.  Scans use ``schema``,
-        or else the schema recorded on that sequence number's entries."""
+        each row stamped with its file's ``_seq``.  Scans use ``schema``
+        (DDL), or else the schema recorded on that sequence number's
+        entries."""
         by_seq: dict[int, list[dict]] = {}
         for f in files:
             by_seq.setdefault(int(f.get("seq", 0)), []).append(f)
         if not by_seq:
             return spark.createDataFrame([], schema).withColumn(
                 "_seq", F.lit(0).cast("int"))
-        parts = [spark.read.schema(schema or StructType.fromJson(
-                     group[0]["schema"]))
-                 .parquet(*[os.path.join(self.root, f["path"])
-                            for f in group])
-                 .selectExpr("*", f"CAST({seq} AS INT) AS _seq")
-                 for seq, group in sorted(by_seq.items())]
+        # .schema() looks the session up over py4j: one reader per schema
+        readers: dict[str, DataFrameReader] = {}
+        parts = []
+        for seq, group in sorted(by_seq.items()):
+            ddl = schema or _ddl(group[0]["schema"])
+            if ddl not in readers:
+                readers[ddl] = spark.read.schema(ddl)
+            parts.append(readers[ddl].parquet(
+                *[os.path.join(self.root, f["path"]) for f in group])
+                .selectExpr("*", f"CAST({seq} AS INT) AS _seq"))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -491,7 +496,7 @@ class SnapshotTable:
                 if man["parent"] is not None else set()
             new_paths.extend(f["path"] for f in man["data_files"]
                              if f["path"] not in parent_paths)
-        schema = StructType.fromJson(self.manifest(to_version)["schema"])
+        schema = _ddl(self.manifest(to_version)["schema"])
         if not new_paths:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(
@@ -567,7 +572,7 @@ class SnapshotTable:
 
         version, snap_dir = self._allocate_version()
         data_dir = os.path.join(snap_dir, "data")
-        schema = StructType.fromJson(man["schema"])
+        schema = _ddl(man["schema"])
         # Bin-pack only across files the SAME set of equality deletes
         # applies to (a delete at seq d applies to rows with seq < d):
         # merging across a delete boundary would re-stamp rows and
@@ -647,7 +652,7 @@ class SnapshotTable:
 
         version, snap_dir = self._allocate_version()
         data_dir = os.path.join(snap_dir, "data")
-        schema = StructType.fromJson(man["schema"])
+        schema = _ddl(man["schema"])
         dele = self.delete_rows(spark, cur)
         t0 = time.time()
         new_files: list[dict] = []
@@ -710,6 +715,14 @@ class SnapshotTable:
         return {"dropped_snapshots": dropped_snapshots,
                 "dropped_files": dropped_files,
                 "retained": sorted(keep)}
+
+
+def _ddl(schema: dict) -> str:
+    """A manifest's recorded schema (StructType JSON) as DDL text, built
+    in Python: a StructType costs ``spark.read.schema`` one more py4j call."""
+    return ", ".join(
+        "`" + f.name.replace("`", "``") + "` " + f.dataType.simpleString()
+        for f in StructType.fromJson(schema).fields)
 
 
 def drop_deleted(rows: DataFrame, deletes: DataFrame) -> DataFrame:

@@ -95,6 +95,33 @@ def test_refreshed_boolean_equals_scratch_build(spark, loop):
     assert R.refreshed_boolean(spark, ir, '"refreshed crawl"').count() > 0
 
 
+def test_refreshed_boolean_missing_terms_and_empty_words(spark, loop):
+    """A term absent from the snapshot, or a phrase word that
+    normalizes to '', makes its step false and never raises: phrases,
+    NEAR and AND come back empty, ``A -missing`` is A's documents.
+    Every answer equals the oracle over the live crawl state, keyed by
+    the url-hash doc_ids the docstats companion records."""
+    from searchengine_spark.oracle.engine import boolean_query_docs, build_index
+    from searchengine_spark.streaming.ingest import latest_per_url
+
+    pr, ir, _, _ = loop
+    ids = {r.url: r.doc_id for r in
+           SnapshotTable(f"{ir}/docstats").read(spark).collect()}
+    texts = latest_per_url(SnapshotTable(pr).read(spark)).collect()
+    oidx = build_index([(ids[r.url], r.text) for r in texts])
+    empty = ['"refreshed zzqxmissing crawl"', '"refreshed ... crawl"',
+             "[crawl NEAR/2 zzqxmissing]", "[zzqxmissing NEAR/2 crawl]",
+             "crawl zzqxmissing", "zzqxmissing", '"zzqxmissing"']
+    for q in empty + ["crawl -zzqxmissing", "crawl + zzqxmissing",
+                      '"refreshed crawl extra"', "[refreshed NEAR/1 crawl]"]:
+        got = [r.doc_id for r in R.refreshed_boolean(spark, ir, q).collect()]
+        assert got == boolean_query_docs(oidx, q), q
+        assert bool(got) == (q not in empty), q
+    crawl = [r.doc_id for r in R.refreshed_boolean(spark, ir, "crawl").collect()]
+    assert [r.doc_id for r in R.refreshed_boolean(
+        spark, ir, "crawl -zzqxmissing").collect()] == crawl
+
+
 def test_refreshed_wand_serves_live_docs_with_exact_pruning(spark, loop):
     """Merge-on-read WAND: only live docs, and rank-identical to its
     own decode twin under the same (stale-dft) weights — the Lucene

@@ -3,8 +3,7 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 
 * a single query selects with TakeOrderedAndProject, never a global Sort;
 * a query batch selects with WindowGroupLimit (partial top-k per query);
-* no plan scans a Python-built RDD — query weights are literals; the only
-  RDD scan allowed is refreshed_boolean's eager localCheckpoint;
+* no plan scans a Python-built RDD — query weights are literals;
 * driver-known query weights are an inline (term, query_id, mult) table,
   the build side of a broadcast hash join on term: no Generate fans the
   postings out to their queries;
@@ -12,9 +11,9 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 * refreshed_topk and refreshed_topk_batch take no checkpoint: each
   segment scan sits under exactly one decode, and dft is one window
   partitioned by term over that decode;
-* refreshed_boolean decodes its postings once: each segment scan is
-  decoded once inside the one checkpointed frame, and the evaluation
-  plan reads only the checkpoint;
+* refreshed_boolean answers AND, OR, NOT, phrase and NEAR in one pass
+  with no checkpoint: each segment scan sits under exactly one decode,
+  and an AND-only query reads no positions column;
 * a term lookup on a published index table scans only the files the
   manifest keeps for the term's bucket, and pushes the term and bucket
   predicates into the Parquet scan;
@@ -23,7 +22,7 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 * a diversified top-k picks each cluster's best doc with a partial and a
   final aggregate of max(struct(score, doc_id)), never a window keyed by
   cluster, and ends in TakeOrderedAndProject;
-* the ranked, batch, AND/OR boolean and segment-build plans start no
+* the ranked, batch, boolean and segment-build plans start no
   Python worker (no ArrowEvalPythonExec or BatchEvalPythonExec): segments
   are Parquet arrays decoded by a JVM explode;
 * the delete side of a merge-on-read read is planned from manifests:
@@ -32,8 +31,8 @@ scorer (queries/ranked.score / top_k), asserted on the executed plans:
 
 It also checks that query ids and terms holding a quote, a backslash or
 a brace survive their trip through the scorer's SQL literal text, and
-that building and collecting a ranked query over a published table takes
-few py4j round trips and Spark jobs.
+that building and collecting a ranked query or a phrase over a published
+table takes few py4j round trips and Spark jobs.
 """
 
 from __future__ import annotations
@@ -65,6 +64,7 @@ from searchengine_spark.sqltext import sql_map
 
 SF_DIR = "/root/testdata/sf0.01"
 QUERY = "table scan merge"
+PHRASE = '"slow hash batch"'
 BATCH = {"qa": "table scan", "qb": "merge join", "qc": "table join"}
 CRAWL_QUERY = "the crawl"
 CRAWL_BATCH = {"q0": "the crawl", "q1": "page body", "q2": "crawl body"}
@@ -397,11 +397,9 @@ def test_refreshed_topk_batch_plan(spark, refreshed):
                                                CRAWL_BATCH, k=10)))
 
 
-def test_refreshed_topk_round_trips(spark, published, monkeypatch):
-    """Building and collecting one ranked query over a delete-free
-    published table: fewer than 100 py4j round trips, at most 4 jobs —
-    the broadcast of the query's weight table, the dft window's and the
-    aggregate's shuffles, and the top-k result stage."""
+def _round_trips(spark, monkeypatch, group: str, query) -> tuple:
+    """(rows, py4j round trips of this thread, Spark jobs) of building
+    and collecting ``query()`` once more, after a warm-up call."""
     import py4j.clientserver as cs
 
     calls = []
@@ -415,13 +413,9 @@ def test_refreshed_topk_round_trips(spark, published, monkeypatch):
             calls.append(command)
         return real(conn, command)
 
-    def query():
-        return R.refreshed_topk(spark, published, QUERY, k=10,
-                                normalize=simple_query_term)
-
     query().collect()  # warm
     sc = spark.sparkContext
-    sc.setJobGroup("ranked-round-trips", "one ranked query")
+    sc.setJobGroup(group, group)
     try:
         monkeypatch.setattr(cs.ClientServerConnection, "send_command",
                             counting)
@@ -429,26 +423,54 @@ def test_refreshed_topk_round_trips(spark, published, monkeypatch):
         monkeypatch.undo()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(calls), list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_refreshed_topk_round_trips(spark, published, monkeypatch):
+    """Building and collecting one ranked query over a delete-free
+    published table: fewer than 100 py4j round trips, at most 4 jobs —
+    the broadcast of the query's weight table, the dft window's and the
+    aggregate's shuffles, and the top-k result stage."""
+    rows, calls, jobs = _round_trips(
+        spark, monkeypatch, "ranked-round-trips",
+        lambda: R.refreshed_topk(spark, published, QUERY, k=10,
+                                 normalize=simple_query_term))
     assert rows
-    assert len(calls) < 100, len(calls)
-    jobs = sc.statusTracker().getJobIdsForGroup("ranked-round-trips")
-    assert 1 <= len(jobs) <= 4, list(jobs)
+    assert calls < 100, calls
+    assert 1 <= len(jobs) <= 4, jobs
 
 
-@pytest.mark.parametrize("query", ["refreshed crawl", "refreshed + page"])
+def test_refreshed_boolean_round_trips(spark, published, monkeypatch):
+    """Building and collecting one 3-term phrase over a delete-free
+    published table: fewer than 60 py4j round trips, at most 4 jobs —
+    the group-by's shuffle, the ORDER BY's range sample and shuffle,
+    and the result stage."""
+    rows, calls, jobs = _round_trips(
+        spark, monkeypatch, "boolean-round-trips",
+        lambda: R.refreshed_boolean(spark, published, PHRASE,
+                                    normalize=simple_query_term))
+    assert rows
+    assert calls < 60, calls
+    assert 1 <= len(jobs) <= 4, jobs
+
+
+@pytest.mark.parametrize("query", [
+    "refreshed crawl", "refreshed + page", "page -refreshed",
+    '"page 1 about"', "[page NEAR/2 about]"])
 def test_refreshed_boolean_and_or_plan_has_no_python(spark, refreshed, query,
                                                      monkeypatch):
     checkpointed = _checkpoint_plans(spark, monkeypatch)
     nodes = _executed(R.refreshed_boolean(spark, refreshed, query))
-    assert len(checkpointed) == 1
-    # each snapshot layer's scan (base + delta) is decoded once, all
-    # inside the checkpoint; the evaluation plan only reads the checkpoint
-    under, scans = _decoded_scans(checkpointed[0])
+    assert checkpointed == []
+    assert "RDDScanExec" not in _names(nodes)
+    # each snapshot layer's scan (base + delta) is decoded once
+    under, scans = _decoded_scans(nodes)
     assert under == scans and len(scans) >= 2
-    assert _decoded_scans(nodes) == ([], [])
-    assert not any(_is_decode(n) for n in nodes)
-    _no_python(checkpointed[0])
     _no_python(nodes)
+    if query == "refreshed crawl":  # AND-only: presence, no positions
+        read = [n.requiredSchema().simpleString() for n in nodes
+                if _is_segment_scan(n)]
+        assert not [r for r in read if "positions" in r], read
 
 
 def test_literal_weights_keep_quotes_and_backslashes(spark):

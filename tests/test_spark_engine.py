@@ -102,6 +102,7 @@ BOOLEAN_GOLDENS = [
     ("rat + hamster + bird", 0),
     ("pets -should", 1),
     ("-run dogs", 1),
+    ("-jump -dogs pets", 4),
     ("should -jump -run", 2),
     ("cat -jump -dog", 0),
     ("should run + dogs", 3),
@@ -127,6 +128,17 @@ def test_spark_biword_fast_path(pets_sidx):
     assert got == [3, 4, 5]
     got = [r["doc_id"] for r in boolean_query(pets_sidx, '"dogs run"').collect()]
     assert got == [1]
+
+
+def test_boolean_query_keeps_the_index_cached(pets_sidx):
+    """The compiled statement leaves a cached index cached: spark.sql
+    drops the temp view it registers for each frame it is given, and
+    dropping a view of a cached frame uncaches that frame."""
+    for q in ("pets -should", '"pets should"', '"pets should play"'):
+        boolean_query(pets_sidx, q).collect()
+    phrase_query_positional(pets_sidx, "pets should").collect()
+    assert pets_sidx.postings.storageLevel.useMemory
+    assert pets_sidx.biword.storageLevel.useMemory
 
 
 def test_spark_phrase_positional(pets_sidx):

@@ -1,9 +1,11 @@
-"""The SQL twins used by the DuckDB oracle must agree with their
-Python/Spark counterparts — no Spark needed, so these run fast.
+"""The SQL twins must agree with their Python counterparts.  Most need
+no Spark, so they run fast.
 
 * Porter2 CTE chain vs text/porter2.py (golden + fuzz).
 * Reference-analyzer SQL prefix vs the pure-Python oracle index.
-* Quirky phrase/NEAR recursive CTE vs oracle.engine merges.
+* Quirky phrase/NEAR recursive CTE (DuckDB, the gate's oracle) and the
+  compiled ``aggregate`` walks (Spark, queries/engine.py) vs the same
+  oracle.engine merges.
 """
 
 from __future__ import annotations
@@ -240,6 +242,52 @@ def test_quirky_pair_sql_matches_merges(duck, docs, t1, t2, off, mode):
     exp = sorted(p[0] for p in fn(_simple_postings(docs, t1),
                                   _simple_postings(docs, t2), off))
     assert got == exp
+
+
+def _walk_cases(rng: random.Random, n: int) -> list[tuple]:
+    """(x, y, offset) position-list pairs: sorted lists with repeats,
+    empty lists, and first operands that are a phrase step's own hit
+    list, as a nested phrase step feeds them (tail quirk #2 repeats the
+    last position; some are shuffled, so the walks also meet unsorted
+    input)."""
+    def positions() -> list[int]:
+        return sorted(rng.randint(0, 14) for _ in range(rng.randint(0, 7)))
+
+    cases = []
+    for _ in range(n):
+        x, y, off = positions(), positions(), rng.randint(1, 5)
+        if rng.random() < 0.4:
+            inner = phrase_merge([(0, 0, x)], [(0, 0, positions())],
+                                 rng.randint(1, 5))
+            x = inner[0][2] if inner else []
+            if rng.random() < 0.5:
+                rng.shuffle(x)
+        cases.append((x, y, off))
+    return cases
+
+
+def test_compiled_walks_match_merges(spark):
+    """The Spark twin of the quirky merges: the compiled ``aggregate``
+    phrase and NEAR steps against the same oracle merges, evaluated as
+    one frame with one collect.  An empty hit list reads as NULL."""
+    from searchengine_spark.queries.engine import near_step_sql, phrase_step_sql
+
+    cases = _walk_cases(random.Random(20261020), 2400)
+    assert any(x != sorted(x) for x, _, _ in cases)
+    assert any(len(set(x)) < len(x) for x, _, _ in cases)
+    assert any(not x for x, _, _ in cases) and any(not y for _, y, _ in cases)
+    frame = spark.createDataFrame(
+        [(i, x, y, off) for i, (x, y, off) in enumerate(cases)],
+        "i int, x array<int>, y array<int>, off int")
+    rows = frame.selectExpr(
+        "i", f"{phrase_step_sql('x', 'y', 'off')} AS phrase",
+        f"{near_step_sql('x', 'y', 'off')} AS near").collect()
+    assert len(rows) == len(cases)
+    for r in rows:
+        x, y, off = cases[r["i"]]
+        for got, fn in ((r["phrase"], phrase_merge), (r["near"], near_merge)):
+            merged = fn([(0, len(x), x)], [(0, len(y), y)], off)
+            assert got == (merged[0][2] if merged else None), (fn, x, y, off)
 
 
 def test_near_quirk_diverges_from_clean(duck, docs):
